@@ -59,29 +59,6 @@ def points_in_polygon(
     return inside
 
 
-def points_in_polygons(
-    px: np.ndarray,
-    py: np.ndarray,
-    poly_ids: np.ndarray,
-    rings_x: list[np.ndarray],
-    rings_y: list[np.ndarray],
-) -> tuple[np.ndarray, np.ndarray]:
-    """All (point_idx, poly_idx) containment pairs for a candidate batch.
-
-    Used as the exact refine after the cell-equi-join prefilter, where
-    each batch is one cell's points x that cell's candidate polygons.
-    """
-    hits_p, hits_g = [], []
-    for gi, (rx, ry) in enumerate(zip(rings_x, rings_y)):
-        mask = points_in_polygon(px, py, rx, ry)
-        idx = np.flatnonzero(mask)
-        hits_p.append(idx)
-        hits_g.append(np.full(len(idx), gi, dtype=np.int64))
-    if not hits_p:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    return np.concatenate(hits_p), np.concatenate(hits_g)
-
-
 # ---------------------------------------------------------------------------
 # distances
 # ---------------------------------------------------------------------------
@@ -93,14 +70,6 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     dlat = lat2 - lat1
     h = np.sin(dlat / 2) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2) ** 2
     return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.minimum(h, 1.0)))
-
-
-def polyline_length_m(lons: np.ndarray, lats: np.ndarray) -> float:
-    if len(lons) < 2:
-        return 0.0
-    return float(
-        haversine_m(lons[:-1], lats[:-1], lons[1:], lats[1:]).sum()
-    )
 
 
 # ---------------------------------------------------------------------------

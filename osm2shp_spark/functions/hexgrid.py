@@ -105,11 +105,6 @@ def hex_cell(lon, lat, res: int) -> np.ndarray:
     return pack(res, q, r)
 
 
-def hex_cells_multi(lon, lat, resolutions: tuple[int, ...]) -> dict[int, np.ndarray]:
-    """Cell id per requested resolution (the res-7..12 column family)."""
-    return {res: hex_cell(lon, lat, res) for res in resolutions}
-
-
 def hex_center(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(lon, lat) center of each cell."""
     res, q, r = unpack(cell)

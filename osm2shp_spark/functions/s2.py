@@ -244,10 +244,6 @@ def token_to_id(tok: str) -> int:
     return int(tok.ljust(16, "0"), 16)
 
 
-def cell_token(lat_deg, lng_deg, level: int = MAX_LEVEL) -> np.ndarray:
-    return token(cell_id(lat_deg, lng_deg, level))
-
-
 def cell_center_latlng(ids) -> tuple[np.ndarray, np.ndarray]:
     """Approximate center (uv center of the cell's leaf ij) — used for
     ring-expansion distance bounds, not for exact geometry."""

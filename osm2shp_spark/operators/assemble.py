@@ -35,7 +35,7 @@ Scale notes (100 TB design point):
   staged nodes fit in executor memory (broadcast dict of two numpy
   arrays): one ``mapInPandas`` pass does lookup + assembly in place,
   no explode, no shuffle at all. At 10^12-node scale use the general
-  path; the engine picks by a size estimate.
+  path; ``assemble_ways_auto`` never picks mapside (see its docstring).
 - Mega-way skew (5k-20k refs): the exploded join keys are node refs
   (well distributed), so the join itself doesn't skew on way id; the
   reassembly groupBy can — AQE skew handling plus the two-stage salted
@@ -179,12 +179,12 @@ def assemble_ways_mapside(
     partition streams through one Arrow-batched ``mapInPandas``.
 
     ``max_broadcast_nodes`` guards the driver collect (same contract as
-    :func:`~osm2shp_spark.operators.spatial.knn_join_broadcast`): above
+    :func:`~osm2shp_spark.operators.spatial.knn_join_auto`): above
     the budget this falls back to the general :func:`assemble_ways`
     (identical results) instead of OOMing the driver at 100x node
     scale. Default ``-1`` means :data:`NODE_BROADCAST_LIMIT`; pass
-    ``None`` to skip the count pre-pass when the caller already
-    budget-checked (``assemble_ways_auto`` does).
+    ``None`` to skip the count pre-pass when the caller knows the node
+    table is bounded.
     """
     if max_broadcast_nodes == -1:
         max_broadcast_nodes = NODE_BROADCAST_LIMIT
@@ -242,7 +242,7 @@ def assemble_ways_mapside(
     return classified.mapInPandas(assemble, schema=ASSEMBLED_SCHEMA)
 
 
-#: strategy thresholds (see assemble_ways_auto)
+#: driver-collect budget of assemble_ways_mapside
 NODE_BROADCAST_LIMIT = 50_000_000  # ~1.2 GB of (id,lon,lat) numpy
 MEGA_WAY_THRESHOLD = 50_000  # refs per way before the salted path
 
@@ -250,10 +250,7 @@ MEGA_WAY_THRESHOLD = 50_000  # refs per way before the salted path
 def assemble_ways_auto(
     nodes: DataFrame,
     ways: DataFrame,
-    node_broadcast_limit: int = NODE_BROADCAST_LIMIT,
     mega_threshold: int = MEGA_WAY_THRESHOLD,
-    prefer_zero_shuffle: bool = False,
-    return_strategy: bool = False,
     quantized: bool = False,
     defer_filters: bool = False,
 ) -> DataFrame:
@@ -262,47 +259,33 @@ def assemble_ways_auto(
 
     - any mega-way above ``mega_threshold`` refs → salted two-stage
       assembly (bounded reducer keys, skew-proof);
-    - ``prefer_zero_shuffle`` and staged nodes fit the broadcast
-      budget → ``assemble_ways_mapside``. Opt-in because the trade is
-      environment-dependent: on a real cluster the two shuffles cost
-      network, so eliminating them wins; on local[n] the shuffle is
-      memory-speed and the broadcast build dominates (measured sf0.1:
-      general 3.7 s vs mapside 5.9 s on this box) — so the default
-      stays the Catalyst path that AQE keeps optimizing;
-    - otherwise → the pure-Catalyst general path.
+    - otherwise → the pure-Catalyst general path. The zero-shuffle
+      :func:`assemble_ways_mapside` is not auto-selected: on local[n]
+      the shuffle is memory-speed and the broadcast build dominates
+      (measured at sf0.1 on a 32-core host: general 3.7 s vs mapside
+      5.9 s), so the selector keeps the Catalyst path that AQE keeps
+      optimizing.
 
-    The two statistics cost one metadata-backed ``count`` on the node
-    table and one column-pruned ``max(size(refs))`` scan of the ways
-    ref column (in production both come from table-level stats — e.g.
-    Iceberg ``record_count`` and a maintained NDV/max column stat — so
-    the pre-pass is free; here it is two cheap jobs, amortized over
-    the much larger assembly).
+    The statistic costs one column-pruned ``max(size(refs))`` scan of
+    the ways ref column (in production it comes from table-level stats
+    — e.g. a maintained max column stat — so the pre-pass is free;
+    here it is one cheap job, amortized over the much larger assembly).
     """
     max_refs = ways.agg(F.max(F.size("refs"))).collect()[0][0] or 0
     if max_refs >= mega_threshold:
         from osm2shp_spark.operators.skew import assemble_ways_salted
 
-        choice, out = "salted", assemble_ways_salted(
-            nodes, ways, defer_filters=defer_filters
-        )
-    elif prefer_zero_shuffle and nodes.count() <= node_broadcast_limit:
-        # budget already proven by the count above — skip the pre-pass
-        choice, out = "mapside", assemble_ways_mapside(
-            nodes, ways, max_broadcast_nodes=None,
-            defer_filters=defer_filters,
-        )
-    else:
-        # the max_refs stat just proved the smallint pos bound (the
-        # compact_pos precondition) — the auto path always gets the
-        # slim exchange when it is provably safe. ``quantized`` is
-        # caller-asserted (PBF-decoded coords only — XML parses differ
-        # by 1 ulp; see assemble_ways) — a data property no cheap stat
-        # can prove, so it is never auto-enabled.
-        choice, out = "general", assemble_ways(
-            nodes, ways, compact_pos=max_refs <= 32767, quantized=quantized,
-            defer_filters=defer_filters,
-        )
-    return (out, choice) if return_strategy else out
+        return assemble_ways_salted(nodes, ways, defer_filters=defer_filters)
+    # the max_refs stat just proved the smallint pos bound (the
+    # compact_pos precondition) — the auto path always gets the slim
+    # exchange when it is provably safe. ``quantized`` is
+    # caller-asserted (PBF-decoded coords only — XML parses differ by
+    # 1 ulp; see assemble_ways) — a data property no cheap stat can
+    # prove, so it is never auto-enabled.
+    return assemble_ways(
+        nodes, ways, compact_pos=max_refs <= 32767, quantized=quantized,
+        defer_filters=defer_filters,
+    )
 
 
 def assembly_counters(

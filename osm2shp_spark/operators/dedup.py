@@ -1,9 +1,11 @@
 """Document deduplication operators for large-scale training-data
 pipelines: exact (hash groupBy), exact n-gram Jaccard (blocked
 self-join), MinHash+LSH (banded candidate join + exact verify) and
-SimHash (hamming-banded). All heavy text hashing runs in Arrow-batched
-pandas UDFs; all joins/groupBys are plain Catalyst relational ops so
-AQE/skew handling applies.
+SimHash (hamming-banded). Every operator is a plain Catalyst plan:
+text hashing is md5 over codegen'd scalar expressions (no Python
+UDF), and all joins/groupBys are relational ops, so AQE/skew handling
+applies; the MinHash and SimHash hashes are portable SQL with DuckDB
+twins, so the driver gate value-checks them.
 
 Scale design: exact dedup is one hash-shuffle; Jaccard runs exactly
 *within* blocks (a deliberate semantic: per-source dedup) so the
@@ -15,13 +17,8 @@ and spark.ml's MinHashLSH API, reimplemented here Catalyst-first).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osm2shp_spark.operators._livecache import LiveCacheRegistry
 
@@ -30,207 +27,6 @@ from osm2shp_spark.operators._livecache import LiveCacheRegistry
 #: operators persist it; the registry bounds live cache entries
 #: across calls (see operators._livecache)
 _SIG_REGISTRY = LiveCacheRegistry(4)
-
-# fixed deterministic MinHash family: (a*x + b) mod p, evaluated in
-# uint64 (a*x wraps mod 2^64 first — a deterministic mix, not exact
-# Carter-Wegman; see minhash_near_dups docstring)
-_MERSENNE_P = (1 << 61) - 1
-_NUM_HASHES = 64
-_BANDS = 16  # 16 bands x 4 rows → s-curve threshold ≈ (1/16)^(1/4) ≈ 0.5
-
-
-def _hash_family(n: int, seed: int = 1234) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE_P, size=n, dtype=np.int64).astype(np.uint64)
-    b = rng.integers(0, _MERSENNE_P, size=n, dtype=np.int64).astype(np.uint64)
-    return a, b
-
-
-_HA, _HB = _hash_family(_NUM_HASHES)
-
-
-_SHINGLE_MIX = (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9, 0x27D4EB2F165667C5)
-
-
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Deterministic 64-bit hashes of token k-shingles: crc32 per token
-    (zlib) mixed positionally with odd constants in uint64 wraparound
-    arithmetic.
-
-    REFERENCE twin: this per-document form is the readable spec and the
-    independent oracle for ``_shingle_hashes_batch`` (pytest asserts
-    value equality); the UDFs run the batch form, which hashes the
-    whole Arrow batch with zero per-token Python (r5 verdict #2)."""
-    import zlib
-
-    toks = text.lower().split()
-    if len(toks) < k:
-        toks = toks + [""] * (k - len(toks))
-    ids = np.array([zlib.crc32(t.encode()) for t in toks], dtype=np.uint64)
-    n = len(ids) - k + 1
-    with np.errstate(over="ignore"):
-        h = np.zeros(n, dtype=np.uint64)
-        for j in range(k):
-            h = h * np.uint64(0x100000001B3) + ids[j : j + n] * np.uint64(
-                _SHINGLE_MIX[j % len(_SHINGLE_MIX)]
-            )
-        # final avalanche (xorshift-multiply)
-        h ^= h >> np.uint64(33)
-        h *= np.uint64(0xFF51AFD7ED558CCD)
-        h ^= h >> np.uint64(33)
-    return h
-
-
-def _crc32_table() -> np.ndarray:
-    """The standard reflected CRC-32 table (poly 0xEDB88320), built
-    vectorized — drives the zlib-identical batch hash below."""
-    t = np.arange(256, dtype=np.uint32)
-    for _ in range(8):
-        t = np.where(t & 1, np.uint32(0xEDB88320) ^ (t >> 1), t >> 1)
-    return t
-
-
-_CRC32_TABLE = _crc32_table()
-
-
-def _crc32_batch(tokens: pd.Series) -> np.ndarray:
-    """zlib.crc32-identical hashes for a flat token Series with no
-    per-token Python loop: factorize to the unique vocabulary (one
-    C pass; Zipf makes the vocab far smaller than the token stream),
-    UTF-8 encode + lengths via pandas' cython string ops, ragged-pad
-    the encoded vocab into one (vocab x max_len) byte matrix, then run
-    the table-driven CRC recurrence vectorized across the WHOLE vocab
-    — the only Python-level loop is over byte positions (longest
-    token, a few dozen iterations). Hashes scatter back through the
-    factorize codes."""
-    codes, uniques = pd.factorize(tokens, sort=False)
-    if len(uniques) == 0:
-        return np.empty(0, dtype=np.uint32)
-    enc = pd.Series(uniques, dtype=object).str.encode("utf-8")
-    lens = enc.str.len().to_numpy(np.int64)
-    flat = np.frombuffer(b"".join(enc.to_numpy()), dtype=np.uint8)
-    n, m = len(lens), int(lens.max(initial=0))
-    crc = np.full(n, 0xFFFFFFFF, dtype=np.uint32)
-    if m:
-        off = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        pos = off[:, None] + np.arange(m)[None, :]
-        mask = np.arange(m)[None, :] < lens[:, None]
-        mat = np.zeros((n, m), dtype=np.uint8)
-        mat[mask] = flat[pos[mask]]
-        for j in range(m):
-            live = mask[:, j]
-            c = crc[live]
-            crc[live] = _CRC32_TABLE[(c ^ mat[live, j]) & 0xFF] ^ (c >> 8)
-    crc ^= np.uint32(0xFFFFFFFF)
-    return crc[codes]
-
-
-def _shingle_hashes_batch(
-    texts: pd.Series, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch twin of :func:`_shingle_hashes` (value-identical,
-    pytest-asserted): token k-shingle hashes for EVERY document of an
-    Arrow batch in flat form. Returns ``(hashes, n_shingles,
-    shingle_offsets)`` — per-doc segments ``hashes[off[d] : off[d] +
-    n[d]]``. Tokenization (lower + whitespace split) runs through
-    pandas' cython string path; hashing through
-    :func:`_crc32_batch`; the positional mixing loop runs k (=3)
-    vectorized passes over the flat shingle array. Documents shorter
-    than k tokens pad with '' exactly like the reference (crc32(b'')
-    == 0, so padding is a zero-scatter, not a concat)."""
-    toks = texts.fillna("").str.lower().str.split()
-    lens = toks.str.len().to_numpy(np.int64)
-    n_docs = len(lens)
-    eff = np.maximum(lens, k)
-    off_eff = np.concatenate(([0], np.cumsum(eff)[:-1]))
-    total = int(eff.sum())
-    # flat token-hash array, '' padding pre-zeroed (crc32(b'') == 0)
-    ids = np.zeros(total, dtype=np.uint64)
-    if n_docs:
-        doc_of = np.repeat(np.arange(n_docs), eff)
-        intra = np.arange(total) - np.repeat(off_eff, eff)
-        real = intra < lens[doc_of]
-        flat_tokens = toks.explode().dropna()
-        ids[real] = _crc32_batch(flat_tokens).astype(np.uint64)
-    n_sh = eff - k + 1
-    sh_off = np.concatenate(([0], np.cumsum(n_sh)[:-1]))
-    total_sh = int(n_sh.sum())
-    if total_sh == 0:
-        return np.empty(0, np.uint64), n_sh, sh_off
-    # flat window starts: shingle s of doc d reads ids[start + 0..k-1]
-    starts = np.repeat(off_eff, n_sh) + (
-        np.arange(total_sh) - np.repeat(sh_off, n_sh)
-    )
-    with np.errstate(over="ignore"):
-        h = np.zeros(total_sh, dtype=np.uint64)
-        for j in range(k):
-            h = h * np.uint64(0x100000001B3) + ids[starts + j] * np.uint64(
-                _SHINGLE_MIX[j % len(_SHINGLE_MIX)]
-            )
-        h ^= h >> np.uint64(33)
-        h *= np.uint64(0xFF51AFD7ED558CCD)
-        h ^= h >> np.uint64(33)
-    return h, n_sh, sh_off
-
-
-#: bound on the transient (NUM_HASHES x shingles) minhash matrix: 64
-#: hashes x 125k shingles x 8 B = 64 MB per chunk — docs are chunked to
-#: this budget, so the batch path's memory stays flat no matter how
-#: large Arrow batches get
-_MINHASH_CHUNK_SHINGLES = 125_000
-
-
-def minhash_signature_udf(k: int = 3):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(text: pd.Series) -> pd.Series:
-        h, n_sh, sh_off = _shingle_hashes_batch(text, k)
-        n_docs = len(n_sh)
-        if n_docs == 0:
-            return pd.Series([], dtype=object)
-        hp = h % _MERSENNE_P
-        out = np.empty((n_docs, _NUM_HASHES), dtype=np.int64)
-        cum = np.cumsum(n_sh)
-        d0 = 0
-        while d0 < n_docs:
-            # largest doc span whose shingles fit the chunk budget
-            # (always at least one doc)
-            base = cum[d0 - 1] if d0 else 0
-            d1 = max(
-                int(np.searchsorted(cum, base + _MINHASH_CHUNK_SHINGLES, "right")),
-                d0 + 1,
-            )
-            seg = hp[sh_off[d0] : sh_off[d0] + (cum[d1 - 1] - base)]
-            with np.errstate(over="ignore"):
-                v = (
-                    (_HA[:, None] * seg[None, :]) + _HB[:, None]
-                ) % np.uint64(_MERSENNE_P)
-            mins = np.minimum.reduceat(v, sh_off[d0:d1] - sh_off[d0], axis=1)
-            out[d0:d1] = mins.T.astype(np.int64)
-            d0 = d1
-        return pd.Series(list(out))
-
-    return _sig
-
-
-def simhash_udf():
-    @F.pandas_udf(T.LongType())
-    def _sim(text: pd.Series) -> pd.Series:
-        h, n_sh, sh_off = _shingle_hashes_batch(text, 1)
-        if len(n_sh) == 0:
-            return pd.Series([], dtype=np.int64)
-        out = np.zeros(len(n_sh), dtype=np.uint64)
-        # 64 vectorized passes over the flat token-hash array; per-doc
-        # majority via one segmented reduction each (bit b set ⟺ more
-        # than half the token hashes have it set — 2*ones > n, exactly
-        # the reference's sum(2*bit - 1) > 0)
-        for b in range(64):
-            bit = ((h >> np.uint64(b)) & np.uint64(1)).astype(np.int64)
-            ones = np.add.reduceat(bit, sh_off)
-            out |= (2 * ones > n_sh).astype(np.uint64) << np.uint64(b)
-        return pd.Series(out.astype(np.int64))
-
-    return _sim
-
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -380,7 +176,9 @@ def _md5_bigint(expr: str, dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 #: portable minhash geometry: 64 hashes, 16 bands x 4 rows
-#: → s-curve threshold ~ (1/16)^(1/4) ~ 0.5 (same as the fast path)
+#: → s-curve threshold ~ (1/16)^(1/4) ~ 0.5
+_NUM_HASHES = 64
+_BANDS = 16
 
 #: Mersenne prime 2^61-1 — the modulus of the portable double-hash
 #: family below. All intermediate sums stay under 2^63 exactly:
@@ -393,7 +191,7 @@ _MH_P = (1 << 61) - 1
 def _minhash_sig_sql(text_col: str, dialect: str, k: int = 3) -> str:
     """Signature expression: array of 64 min-hashes over token
     k-shingles; identical semantics in both dialects. Docs shorter than
-    k tokens pad with '' (mirrors the fast path).
+    k tokens pad with ''.
 
     Hash family: ONE md5 per shingle yields two independent integers
     (h1: hex chars 1-15 → 60 bits, h2: chars 17-30 → 56 bits); the 64
@@ -464,10 +262,9 @@ def minhash_near_dups(
     the estimate is exact; recall follows the standard LSH s-curve.
 
     Scale: one md5 per shingle (the 64 permutations derive by integer
-    double-hashing — see :func:`_minhash_sig_sql`), identical join
-    shape to :func:`minhash_near_dups_fast` (the crc32+numpy Arrow-UDF
-    twin; both are one-hash-per-shingle now — the fast path trades md5
-    for crc32 and stays preferable on raw throughput).
+    double-hashing — see :func:`_minhash_sig_sql`); the signature
+    stage (shingle explode + md5 + 64 min aggregates) dominates the
+    cost, and the banded self-join moves only id pairs.
     """
     from osm2shp_spark.operators._parallel import ensure_min_parallelism
 
@@ -555,8 +352,8 @@ def _banded_self_pairs(banded: DataFrame, key: str, **carry: str) -> DataFrame:
     / ``_<name>b`` (use it for SLIM columns — the 8-byte SimHash
     fingerprints; the MinHash paths re-attach their 0.5 KB signature
     arrays after the pair dedup instead, see ``_attach_sigs``).
-    Shared by all four near-dup variants (portable + fast MinHash and
-    SimHash) — the blocking topology is the load-bearing scale
+    Shared by both near-dup operators (MinHash and SimHash) — the
+    blocking topology is the load-bearing scale
     property, so it lives in exactly one place."""
     a, b = banded.alias("a"), banded.alias("b")
     cols = [F.col("a._id").alias("doc_a"), F.col("b._id").alias("doc_b")]
@@ -634,56 +431,6 @@ WHERE est_jaccard >= {threshold}e0
 """
 
 
-def minhash_near_dups_fast(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    shingle_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Arrow-UDF MinHash variant (crc32 shingles + vectorized
-    (a*x+b) mod p family): crc32 is cheaper than the portable path's
-    md5, and the whole signature computes in one NumPy broadcast —
-    the raw-throughput twin when DuckDB parity isn't required.
-
-    Note on the hash family: a*x can exceed 2^64, so the product wraps
-    mod 2^64 *before* the mod-p reduction — the family is a
-    deterministic wraparound mix, not exact Carter-Wegman universal
-    hashing. Empirical recall/precision are pytest-gated instead
-    (tests/test_training_ops.py).
-    """
-    # persist: the banded self-join reads the signature table on both
-    # sides — without the cache point the Arrow signature UDF runs
-    # twice over every document (same rationale as minhash_near_dups)
-    sig = docs.select(
-        F.col(id_col).alias("_id"), minhash_signature_udf(shingle_k)(text_col).alias("_sig")
-    ).persist()
-    _SIG_REGISTRY.register(sig)
-    rows_per_band = _NUM_HASHES // _BANDS
-    # slim banding + id-pair dedup + signature re-attach: same
-    # payload-diet rationale as the portable path above
-    banded = sig.select(
-        "_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.hash(F.slice("_sig", i * rows_per_band + 1, rows_per_band))
-                    for i in range(_BANDS)
-                ]
-            )
-        ).alias("_band", "_bucket"),
-    )
-    return _minhash_estimate(
-        _attach_sigs(
-            _banded_self_pairs(banded, "_bucket").dropDuplicates(
-                ["doc_a", "doc_b"]
-            ),
-            sig,
-        ),
-        threshold,
-    )
-
-
 # ---------------------------------------------------------------------------
 # SimHash near-dup
 # ---------------------------------------------------------------------------
@@ -740,8 +487,7 @@ def simhash_near_dups(
 
     Scale: map-only fingerprinting (one expression per row, no
     shuffle), then the banded equi-join shuffles only (id, 8-byte key)
-    rows. The crc32+numpy Arrow-UDF twin is
-    :func:`simhash_near_dups_fast`.
+    rows.
     """
     if max_hamming >= _SIMHASH_BANDS:  # pragma: no cover - guard
         raise ValueError("banding guarantees recall only for hamming < bands")
@@ -815,37 +561,3 @@ FROM banded a JOIN banded b
   ON a._band = b._band AND a._key = b._key AND a._id < b._id
 WHERE bit_count(xor(a._sh, b._sh)) <= {max_hamming}
 """
-
-
-def simhash_near_dups_fast(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Arrow-UDF 64-bit SimHash variant (crc32 token hashes, numpy bit
-    math): 4 x 16-bit bands, recall 100% for hamming ≤ 3. The
-    throughput twin of :func:`simhash_near_dups` when DuckDB parity
-    isn't required. Output: (doc_a, doc_b, hamming).
-    """
-    # persist: same double-read-through-the-self-join rationale as the
-    # other near-dup variants
-    sh = docs.select(
-        F.col(id_col).alias("_id"), simhash_udf()(text_col).alias("_sh")
-    ).persist()
-    _SIG_REGISTRY.register(sh)
-    banded = sh.select(
-        "_id",
-        "_sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("_sh"), i * 16).bitwiseAND(F.lit(0xFFFF))
-                    for i in range(4)
-                ]
-            )
-        ).alias("_band", "_key"),
-    )
-    return _hamming_pairs(
-        _banded_self_pairs(banded, "_key", sh="_sh"), max_hamming
-    )

@@ -174,11 +174,3 @@ def adaptive_cells(
 #: entries (see operators._livecache).
 _LEVEL_REGISTRY = LiveCacheRegistry(4)
 _register_level = _LEVEL_REGISTRY.register
-
-
-def salt_column(df: DataFrame, key_col: str, factor: int) -> DataFrame:
-    """Generic salting helper: deterministic salt in [0, factor) for
-    repartition-before-hot-aggregation patterns."""
-    return df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(factor))
-    ).repartition(F.col(key_col), F.col("_salt"))

@@ -623,7 +623,7 @@ def knn_join(
     feature_id: str = "node_id",
     tile_size: float = TILE_SIZE,
     tile_window: bool | None = None,
-    max_broadcast_features: int | None = MAX_BROADCAST_FEATURES,
+    max_broadcast_features: int = MAX_BROADCAST_FEATURES,
     features_count: int | None = None,
 ) -> DataFrame:
     """Exact k nearest features per point → (point_id, rank, feature_id,
@@ -637,10 +637,9 @@ def knn_join(
     metric); the remainder falls back to a full search over the
     feature table — broadcast when the feature table fits
     ``max_broadcast_features`` (default :data:`MAX_BROADCAST_FEATURES`,
-    the R32/R37 budget contract; ``None`` = caller-asserted in budget), else
-    iterative tile-ring expansion (:func:`_knn_ring_expand` — never a
-    full-table broadcast in the very regime where the planner refused
-    one). The fallback subtree is built only when the materialized
+    the R32/R37 budget contract), else iterative tile-ring expansion
+    (:func:`_knn_ring_expand` — never a full-table broadcast in the
+    very regime where the planner refused one). The fallback subtree is built only when the materialized
     top-k summary actually contains unresolved points, so the common
     all-resolved case executes no broadcast exchange at all; the
     summary count also means this function triggers the candidate
@@ -827,12 +826,9 @@ def knn_join(
     _register_summary(topk)
     if unresolved.count() == 0:
         return solved
-    if features_count is None and max_broadcast_features is not None:
+    if features_count is None:
         features_count = features.count()
-    if (
-        max_broadcast_features is None
-        or features_count <= max_broadcast_features
-    ):
+    if features_count <= max_broadcast_features:
         from pyspark.sql import Window
 
         w = Window.partitionBy("_pid").orderBy(
@@ -1051,47 +1047,45 @@ def _register_summary(df: DataFrame) -> None:
     _SUMMARY_REGISTRY.register(df)
 
 
-def knn_join_broadcast(
+def knn_join_auto(
     points: DataFrame,
     features: DataFrame,
     k: int,
     point_id: str = "image_id",
     feature_id: str = "node_id",
     tile_size: float = TILE_SIZE,
-    max_broadcast_features: int | None = MAX_BROADCAST_FEATURES,
+    max_broadcast_features: int = MAX_BROADCAST_FEATURES,
 ) -> DataFrame:
-    """Zero-shuffle exact kNN for broadcastable feature sets (the named-
-    place dimension table stays small even at planet scale). Identical
-    semantics and bit-identical distances to :func:`knn_join` (same
-    IEEE arithmetic, same (dist2, id) tie-break): features are bucketed
-    by tile into a numpy broadcast; each points partition groups its
-    points by tile (all points in a tile share one candidate set),
-    computes the full tile-vs-candidates distance matrix in one NumPy
-    op, applies the provable-radius test per row, and falls back to a
-    batched full matrix scan for the rare unprovable points — all in
-    one ``mapInPandas`` pass, no shuffle, no per-row Python.
+    """Strategy selector for exact kNN: one ``count()`` of the feature
+    table (metadata-backed on parquet/Iceberg), then the zero-shuffle
+    broadcast path when it fits ``max_broadcast_features`` (named-place
+    dimension tables stay small even at planet scale), else the
+    shuffle :func:`knn_join` (tile equi-join + provable-radius
+    exactness + AQE skew splitting) instead of OOMing the driver on
+    the collect at 100x feature scale.
+
+    The broadcast path has identical semantics and bit-identical
+    distances to :func:`knn_join` (same IEEE arithmetic, same
+    (dist2, id) tie-break): features are bucketed by tile into a
+    numpy broadcast; each points partition groups its points by tile
+    (all points in a tile share one candidate set), computes the full
+    tile-vs-candidates distance matrix in one NumPy op, applies the
+    provable-radius test per row, and falls back to a batched full
+    matrix scan for the rare unprovable points — all in one
+    ``mapInPandas`` pass, no shuffle, no per-row Python.
 
     Tie-break vectorization: candidate columns are pre-sorted by
     feature id once per tile, so a *stable* argsort on dist2 alone
     reproduces the (dist2, id) lexicographic order row-wise in one
     C-level call.
-
-    ``max_broadcast_features`` guards the driver collect: above the
-    budget this falls back to the shuffle :func:`knn_join` (identical
-    results) instead of OOMing the driver at 100x feature scale —
-    direct callers get the same protection as the
-    :func:`knn_join_auto` selector. Pass ``None`` to skip the count
-    pre-pass when the caller has already budget-checked (the count is
-    metadata-backed on parquet/Iceberg sources).
     """
-    if max_broadcast_features is not None:
-        n = features.count()
-        if n > max_broadcast_features:
-            return knn_join(
-                points, features, k, point_id, feature_id, tile_size,
-                max_broadcast_features=max_broadcast_features,
-                features_count=n,
-            )
+    n = features.count()
+    if n > max_broadcast_features:
+        return knn_join(
+            points, features, k, point_id, feature_id, tile_size,
+            max_broadcast_features=max_broadcast_features,
+            features_count=n,
+        )
     feat_pdf = features.select(feature_id, "lon", "lat").toPandas()
     # global feature order by id: with columns pre-sorted by id, a
     # stable sort on dist2 == lexsort((id, dist2))
@@ -1214,6 +1208,10 @@ def knn_join_broadcast(
     ).mapInPandas(run, schema=out_schema)
 
 
+#: the broadcast path's former name, kept for importers of it
+knn_join_broadcast = knn_join_auto
+
+
 def auto_tile_size(
     features: DataFrame,
     base_tile_size: float = TILE_SIZE,
@@ -1252,48 +1250,13 @@ def knn_join_adaptive(
     feature_id: str = "node_id",
     base_tile_size: float = TILE_SIZE,
     hot_threshold: int = 50_000,
-    return_tile_size: bool = False,
-):
+) -> DataFrame:
     """:func:`knn_join` with the tile size chosen by
     :func:`auto_tile_size` from the feature density histogram (dense
     urban cells → finer prefilter grid). Bit-identical results at any
     tile size; only the candidate economics change."""
     ts = auto_tile_size(features, base_tile_size, hot_threshold)
-    out = knn_join(points, features, k, point_id, feature_id, ts)
-    return (out, ts) if return_tile_size else out
-
-
-def knn_join_auto(
-    points: DataFrame,
-    features: DataFrame,
-    k: int,
-    point_id: str = "image_id",
-    feature_id: str = "node_id",
-    tile_size: float = TILE_SIZE,
-    max_broadcast_features: int = MAX_BROADCAST_FEATURES,
-    return_strategy: bool = False,
-) -> DataFrame:
-    """Strategy selector for kNN: the zero-shuffle broadcast path when
-    the feature table fits the broadcast budget (named-place dimension
-    tables stay small even at planet scale), else the shuffle path
-    (tile equi-join + provable-radius exactness + AQE skew splitting).
-    Both paths are bit-identical (same IEEE distance, same tie-break);
-    the count pre-pass is metadata-backed on parquet/Iceberg.
-    """
-    n = features.count()
-    if n <= max_broadcast_features:
-        # budget already checked here — skip the recount inside
-        choice, out = "broadcast", knn_join_broadcast(
-            points, features, k, point_id, feature_id, tile_size,
-            max_broadcast_features=None,
-        )
-    else:
-        choice, out = "shuffle", knn_join(
-            points, features, k, point_id, feature_id, tile_size,
-            max_broadcast_features=max_broadcast_features,
-            features_count=n,
-        )
-    return (out, choice) if return_strategy else out
+    return knn_join(points, features, k, point_id, feature_id, ts)
 
 
 # ---------------------------------------------------------------------------

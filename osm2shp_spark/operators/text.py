@@ -9,11 +9,8 @@ every operator is value-checked by the driver gate. Constants use the
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osm2shp_spark.operators.spatial import dlit
 
@@ -194,96 +191,18 @@ FROM {quality_subquery_duck('docs')} _q
 """
 
 
-def winnow_fingerprints(
-    docs: DataFrame, kgram: int = 5, window: int = 4
-) -> DataFrame:
-    """Winnowing document fingerprints (the classic rolling-hash local
-    minima scheme from the public MOSS/winnowing paper): k-gram rolling
-    hashes over the normalized character stream, keep each window's
-    minimum → a compact, position-robust fingerprint set. Output:
-    (doc_id, n_fingerprints, min_fp, fp_xor) — the set summary columns
-    downstream dedup joins key on."""
-    B = np.uint64(257)
-    #: 257 is odd => invertible mod 2^64; the prefix recurrence
-    #: pref[i+1] = pref[i]*B + s[i] then closes to the fully
-    #: vectorizable pref[i+1] = B^i * cumsum(s[j] * B^-j) — identical
-    #: wraparound arithmetic, no per-character Python loop.
-    INV_B = np.uint64(pow(257, -1, 1 << 64))
-    MOD_MASK = np.uint64((1 << 61) - 1)
-
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("n_fingerprints", T.LongType()),
-                T.StructField("min_fp", T.LongType()),
-                T.StructField("fp_xor", T.LongType()),
-            ]
-        )
-    )
-    def _w(text: pd.Series) -> pd.DataFrame:
-        out = []
-        for t in text:
-            s = np.frombuffer(" ".join((t or "").lower().split()).encode(), np.uint8)
-            n = len(s)
-            if n < kgram:
-                out.append((0, 0, 0))
-                continue
-            with np.errstate(over="ignore"):
-                powers = np.empty(n, np.uint64)
-                powers[0] = np.uint64(1)
-                if n > 1:
-                    np.multiply.accumulate(
-                        np.full(n - 1, B, np.uint64), out=powers[1:]
-                    )
-                invpow = np.empty(n, np.uint64)
-                invpow[0] = np.uint64(1)
-                if n > 1:
-                    np.multiply.accumulate(
-                        np.full(n - 1, INV_B, np.uint64), out=invpow[1:]
-                    )
-                pref = np.empty(n + 1, np.uint64)
-                pref[0] = np.uint64(0)
-                pref[1:] = np.cumsum(s.astype(np.uint64) * invpow,
-                                     dtype=np.uint64) * powers
-                pk = np.uint64(pow(257, kgram, 1 << 64))
-                kg = pref[kgram:] - pref[:-kgram] * pk
-                kg &= MOD_MASK
-                # winnow: min per sliding window (rightmost-min rule)
-                m = len(kg) - window + 1
-                if m <= 0:
-                    picks = kg.min(keepdims=True)
-                else:
-                    win = np.lib.stride_tricks.sliding_window_view(kg, window)
-                    # argmin over the REVERSED window = rightmost min
-                    right = window - 1 - np.argmin(win[:, ::-1], axis=1)
-                    picks = np.unique(kg[np.unique(np.arange(m) + right)])
-            out.append(
-                (
-                    len(picks),
-                    int(picks.min()),
-                    int(np.bitwise_xor.reduce(picks).astype(np.int64)),
-                )
-            )
-        return pd.DataFrame(out, columns=["n_fingerprints", "min_fp", "fp_xor"])
-
-    return docs.select("doc_id", _w(F.col("text")).alias("_fp")).select(
-        "doc_id",
-        F.col("_fp.n_fingerprints").alias("n_fingerprints"),
-        F.col("_fp.min_fp").alias("min_fp"),
-        F.col("_fp.fp_xor").alias("fp_xor"),
-    )
-
-
 def winnow_fingerprints_portable(
     docs: DataFrame, kgram: int = 5, window: int = 4
 ) -> DataFrame:
-    """Winnowing fingerprints with *portable* md5 k-gram hashes — the
-    same local-minima scheme as :func:`winnow_fingerprints` (rightmost-
-    min rule, distinct fingerprint set, same summary columns) but every
+    """Winnowing document fingerprints (the classic local-minima scheme
+    from the public MOSS/winnowing paper): md5 hashes of the k-grams of
+    the normalized character stream, keep each window's minimum
+    (rightmost-min rule) → a compact, position-robust distinct
+    fingerprint set. Output: (doc_id, n_fingerprints, min_fp, fp_xor)
+    — the set summary columns downstream dedup joins key on. Every
     step is a Catalyst expression with an exact DuckDB twin
     (:func:`winnow_fingerprints_oracle`), so the driver gate value-
-    checks the whole pipeline. The numpy rolling-hash UDF remains the
-    throughput path (one multiply per character vs one md5 per k-gram).
+    checks the whole pipeline.
     """
     k, w = kgram, window
     from osm2shp_spark.operators.dedup import _md5_bigint

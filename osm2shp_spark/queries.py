@@ -196,18 +196,16 @@ def q_way_assembly_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference semantics unchanged, osm/point_database.cc:48-112). The
     oracle is the path-independent assembly SQL over the same input,
     so a salting bug (lost chunk, wrong order) breaks the value hash;
-    the strategy choice itself is asserted here and plan-asserted in
-    tests/test_plans.py. Gated via ``way_assembly_strategies``."""
+    the strategy choice itself is plan-asserted in tests/test_plans.py.
+    Gated via ``way_assembly_strategies``."""
     from osm2shp_spark.operators.assemble import assemble_ways_auto
     from osm2shp_spark.sources.synthetic import synthetic_mega_ways
 
     nodes = synthetic_nodes(spark, sf_dir)
     ways = synthetic_mega_ways(spark, sf_dir)
-    assembled, choice = assemble_ways_auto(
-        nodes, ways, return_strategy=True, defer_filters=True
+    return _assembly_scalar_projection(
+        assemble_ways_auto(nodes, ways, defer_filters=True)
     )
-    assert choice == "salted", choice
-    return _assembly_scalar_projection(assembled)
 
 
 def _way_strategies_oracle() -> str:
@@ -662,18 +660,6 @@ def q_knn_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_join_auto(imgs, places, k=3)
 
 
-def q_knn_places_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle broadcast kNN path (same oracle as knn_places —
-    bit-identical results required). Gated via ``knn_places_strategies``."""
-    from osm2shp_spark.operators.spatial import knn_join_broadcast
-
-    imgs = synthetic_images(spark, sf_dir).select("image_id", "lon", "lat")
-    places = classify_nodes(synthetic_nodes(spark, sf_dir)).select(
-        "node_id", "lon", "lat"
-    )
-    return knn_join_broadcast(imgs, places, k=3)
-
-
 def q_knn_places_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N6 adaptive path through the gate: the density histogram picks
     the prefilter tile size (dense hot cluster in the fixture → finer
@@ -701,10 +687,11 @@ SELECT 'adaptive' AS strategy, t.* FROM ({_KNN_ORACLE}) t
 def q_knn_places_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both alternative kNN physical strategies in ONE gate row (driver
     50-entry window; see way_assembly_strategies). Each side runs its
-    full plan — the zero-shuffle broadcast-numpy path and the
+    full plan — the zero-shuffle broadcast-numpy path (the one
+    ``knn_places``' selector takes on the fixture) and the
     density-histogram adaptive-tile path — and both must reproduce the
     brute-force SQL result bit-for-bit."""
-    bcast = q_knn_places_broadcast(spark, sf_dir).select(
+    bcast = q_knn_places(spark, sf_dir).select(
         F.lit("broadcast").alias("strategy"), "*"
     )
     adapt = q_knn_places_adaptive(spark, sf_dir).select(
@@ -1231,8 +1218,8 @@ from osm2shp_spark.operators.text import winnow_fingerprints_oracle  # noqa: E40
 @register("doc_winnow_fingerprint", winnow_fingerprints_oracle(DOCS_PLAIN_SQL))
 def q_doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing local-minima fingerprints (MOSS scheme) — the portable
-    md5-k-gram variant with a full DuckDB oracle; the numpy rolling-hash
-    throughput twin is pytest-gated (tests/test_winnow.py)."""
+    md5-k-gram variant with a full DuckDB oracle; its fingerprint
+    properties are pytest-gated too (tests/test_winnow.py)."""
     from osm2shp_spark.operators.text import winnow_fingerprints_portable
 
     return winnow_fingerprints_portable(_docs(spark, sf_dir))

@@ -214,8 +214,8 @@ class TestCompactPosEquivalence:
 
         nodes = synthetic_nodes(spark, SF_SMALL)
         ways = synthetic_ways(spark, SF_SMALL)
-        out, choice = assemble_ways_auto(nodes, ways, return_strategy=True)
-        assert choice == "general"
+        out = assemble_ways_auto(nodes, ways)
+        assert "chunk_id" not in out._jdf.queryExecution().toString()
         assert canon_rows(out.toPandas()) == canon_rows(
             assemble_ways(nodes, ways).toPandas()
         )

@@ -130,6 +130,20 @@ class TestPhash:
 
 
 class TestImageOperators:
+    def test_image_table_matches_driver_generation(self, spark):
+        """The distributed fixture must equal the driver-side generator
+        exactly — bytes, phash and georeference included: the golden
+        oracles recompute from ``generate_images_pdf``."""
+        got = image_table(spark, 30).toPandas()
+        want = generate_images_pdf(30)
+        got["bytes"] = got["bytes"].map(bytes)
+        pd.testing.assert_frame_equal(
+            got.sort_values("image_id").reset_index(drop=True),
+            want.sort_values("image_id").reset_index(drop=True),
+            check_dtype=False,
+            check_exact=True,
+        )
+
     def test_decode_stats_invariants(self, spark):
         df = decode_stats(image_table(spark, 60)).toPandas()
         assert df.decode_ok.all()

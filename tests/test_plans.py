@@ -123,41 +123,25 @@ def test_way_assembly_min_vertex_filter_before_join(spark):
 
 
 def test_auto_strategy_selection(spark):
-    """The size-estimate auto-selectors must pick the documented paths
-    and stay result-equivalent to the pinned paths."""
-    from parity import canon_rows
-
+    """The size-estimate auto-selectors must pick the documented paths,
+    read off the physical plan: salted assembly carries the chunk salt
+    key, broadcast kNN is the numpy MapInPandas pass."""
     from osm2shp_spark.operators.assemble import assemble_ways_auto
     from osm2shp_spark.operators.spatial import knn_join_auto
 
     nodes = synthetic_nodes(spark, SF_SMALL)
     ways = synthetic_ways(spark, SF_SMALL)
-    # default: the Catalyst general path (local shuffles are
-    # memory-speed; mapside is the opt-in for network-shuffle clusters)
-    df, strategy = assemble_ways_auto(nodes, ways, return_strategy=True)
-    assert strategy == "general"
-    # zero-shuffle opt-in with a small node table -> mapside
-    df, strategy = assemble_ways_auto(
-        nodes, ways, prefer_zero_shuffle=True, return_strategy=True
-    )
-    assert strategy == "mapside"
-    assert canon_rows(df.toPandas()) == canon_rows(
-        assemble_ways(nodes, ways).toPandas()
-    )
-    # mega-way threshold trips -> salted (checked first, highest risk)
-    _, strategy = assemble_ways_auto(
-        nodes, ways, mega_threshold=2, return_strategy=True
-    )
-    assert strategy == "salted"
+    # default: the Catalyst general path (no salt key, no numpy pass)
+    p = _plan(assemble_ways_auto(nodes, ways))
+    assert "chunk_id" not in p and "MapInPandas" not in p
+    # mega-way threshold trips -> salted
+    assert "chunk_id" in _plan(assemble_ways_auto(nodes, ways, mega_threshold=2))
     # small feature table -> zero-shuffle broadcast kNN
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     feats = nodes.filter("id > 0").selectExpr("id AS node_id", "lon", "lat")
-    _, strategy = knn_join_auto(imgs, feats, k=3, return_strategy=True)
-    assert strategy == "broadcast"
-    _, strategy = knn_join_auto(
-        imgs, feats, k=3, max_broadcast_features=1, return_strategy=True
-    )
-    assert strategy == "shuffle"
+    assert "MapInPandas" in _plan(knn_join_auto(imgs, feats, k=3))
+    # (over budget -> shuffle tile join: tests/test_spatial.py
+    # test_knn_broadcast_oversize_falls_back_to_shuffle)
 
 
 def test_pip_auto_broadcast_selection(spark):
@@ -276,3 +260,16 @@ def test_pip_dimension_side_has_collapse_barrier(spark):
     )
     p = _plan(pip_join(imgs, rects, ("image_id",), ("rect_id", "layer")))
     assert "inline(array(struct" in p
+
+
+def test_collapse_barrier_rejects_unknown_keep_column(spark):
+    """A ``keep`` name that is not a column must fail loudly instead of
+    silently passing nothing outside the barrier."""
+    import pytest
+
+    from osm2shp_spark.operators._parallel import collapse_barrier
+
+    df = spark.range(3).withColumn("v", F.col("id") * 2)
+    assert collapse_barrier(df, keep=("id",)).columns == ["id", "v"]
+    with pytest.raises(ValueError, match="way_id"):
+        collapse_barrier(df, keep=("id", "way_id"))

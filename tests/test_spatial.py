@@ -182,18 +182,17 @@ def test_knn_no_fallback_subtree_when_all_resolved(spark):
 
 
 def test_knn_broadcast_oversize_falls_back_to_shuffle(spark):
-    """knn_join_broadcast must guard its own driver collect: above the
-    feature budget it routes to the shuffle knn_join (identical rows)
-    instead of toPandas()-ing an unbounded table — protection for
-    direct callers, not just the knn_join_auto selector."""
-    from osm2shp_spark.operators.spatial import knn_join_broadcast
+    """knn_join_auto must guard its broadcast path's driver collect:
+    above the feature budget it routes to the shuffle knn_join
+    (identical rows) instead of toPandas()-ing an unbounded table."""
+    from osm2shp_spark.operators.spatial import knn_join_auto
 
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
     ).limit(50)
-    over = knn_join_broadcast(imgs, nodes, k=2, max_broadcast_features=10)
-    under = knn_join_broadcast(imgs, nodes, k=2)
+    over = knn_join_auto(imgs, nodes, k=2, max_broadcast_features=10)
+    under = knn_join_auto(imgs, nodes, k=2)
     # the oversize call must NOT be the mapInPandas broadcast plan
     plan = over._jdf.queryExecution().explainString(
         over._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -276,6 +275,7 @@ def test_knn_adaptive_tile_size(spark):
 
     from osm2shp_spark.operators.spatial import (
         TILE_SIZE,
+        auto_tile_size,
         knn_join,
         knn_join_adaptive,
     )
@@ -290,10 +290,8 @@ def test_knn_adaptive_tile_size(spark):
     )
     # the nodes fixture packs ~10% of points into a 0.01x0.01 deg cell:
     # with a tiny threshold the histogram must react
-    out, ts = knn_join_adaptive(
-        imgs, feats, k=3, hot_threshold=5, return_tile_size=True
-    )
-    assert ts < TILE_SIZE
+    assert auto_tile_size(feats, hot_threshold=5) < TILE_SIZE
+    out = knn_join_adaptive(imgs, feats, k=3, hot_threshold=5)
     assert canon_rows(out.toPandas()) == canon_rows(
         knn_join(imgs, feats, k=3, tile_size=TILE_SIZE).toPandas()
     )
