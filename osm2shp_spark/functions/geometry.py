@@ -3,8 +3,9 @@
 These run inside Arrow-vectorized pandas UDFs / applyInPandas — never
 per-row Python in the hot path. They cover:
 
-- exact point-in-polygon (ray casting) — the refine step of the N3
-  spatial join,
+- exact point-in-polygon (ray casting) — the reference kernel the N3
+  spatial join's SQL refine (``operators.spatial.pnpoly_sql``) is
+  bit-identical to,
 - haversine distance — kNN exact scoring,
 - Douglas–Peucker simplification — parity with the GRASS
   ``v.generalize method=douglas`` step (reference mapgen.sh:59,68,77,86),

@@ -23,7 +23,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 #: shared Spark-side fold expression for SQL parity
 def _dot_expr(a: str, b: str) -> str:
@@ -366,92 +365,6 @@ def cosine_topk_lsh(
 # IVF (inverted-file) approximate top-k — the index-build scale path
 # ---------------------------------------------------------------------------
 
-def train_centroids(
-    corpus: DataFrame,
-    n_cells: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = 5,
-    sample: int = 4096,
-) -> np.ndarray:
-    """Deterministic k-means-lite on a driver-side sample (seeded by
-    vec_id order, Lloyd iterations in NumPy). At 10^12 scale this is
-    exactly how IVF indexes train (sample → driver/GPU kmeans →
-    broadcast centroids); the full corpus never shuffles."""
-    pdf = (
-        corpus.orderBy(id_col)
-        .limit(sample)
-        .select(vec_col)
-        .toPandas()
-    )
-    m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    if m.shape[1] != dim:
-        raise ValueError(
-            f"embedding width {m.shape[1]} != declared dim {dim}"
-        )
-    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    cent = m[:: max(len(m) // n_cells, 1)][:n_cells].copy()
-    for _ in range(iters):
-        assign = np.argmax(m @ cent.T, axis=1)
-        for c in range(len(cent)):
-            members = m[assign == c]
-            if len(members):
-                v = members.mean(axis=0)
-                cent[c] = v / max(np.linalg.norm(v), 1e-12)
-    return cent
-
-
-def _centroid_assign_udf(centroids: np.ndarray, nprobe: int):
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _a(vec: pd.Series) -> pd.Series:
-        m = np.stack(vec.to_numpy()).astype(np.float64)
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = m @ centroids.T
-        top = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int32)
-        return pd.Series(list(top))
-
-    return _a
-
-
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    dim: int,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-flat approximate top-k: corpus rows live in their nearest
-    centroid's cell (1 assignment pass — in production the table is
-    written partitioned/bucketed by cell); probes scan their nprobe
-    nearest cells and re-rank exactly. Recall rises monotonically with
-    nprobe (nprobe = n_cells → exact). Same output schema as
-    :func:`cosine_topk`."""
-    cent = train_centroids(corpus, n_cells, dim, id_col, vec_col)
-    assign1 = _centroid_assign_udf(cent, 1)
-    assignp = _centroid_assign_udf(cent, nprobe)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        F.element_at(assign1(vec_col), 1).alias("_cell"),
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("_pvec"),
-        F.explode(assignp(vec_col)).alias("_cell"),
-    )
-    sim = cosine_sim_col("_pvec", "_cvec")
-    return _two_stage_topk(
-        c.join(F.broadcast(p), "_cell")
-        .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .select("probe_id", "_cell", "neighbor_id", sim.alias("cosine")),
-        k,
-    )
-
-
 def _two_stage_topk(scored: DataFrame, k: int) -> DataFrame:
     """Per-probe top-k in two windows: first top-k within each
     (probe, cell) — bounding every reducer key at one cell's
@@ -484,8 +397,8 @@ def cosine_topk_ivf_flat(
 ) -> DataFrame:
     """IVF top-k with a *deterministic* coarse quantizer: the
     ``n_cells`` corpus vectors with the smallest ids seed the cells
-    (production swaps in :func:`train_centroids`' k-means centroids —
-    the mechanics below are identical either way). Everything is pure
+    (a trained quantizer would swap in k-means centroids — the
+    mechanics below are identical either way). Everything is pure
     Catalyst: cell assignment is a broadcast nested-loop of rows ×
     n_cells with the shared sequential fold (``cosine_sim_col``), so
     the whole pipeline — assignment, nprobe probing, candidate join,

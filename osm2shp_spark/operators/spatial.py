@@ -2,8 +2,8 @@
 
 Design (SURVEY §4.2): spatial predicates are translated into
 *relational* ones — an equi-join on grid tile ids as the prefilter,
-then an exact vectorized refine — so Catalyst plans, shuffles and
-AQE-skew-handles them like any other join. No custom strategy needed.
+then an exact refine — so Catalyst plans, shuffles and AQE-skew-handles
+them like any other join. No custom strategy needed.
 
 Two cell schemes coexist:
 
@@ -16,7 +16,10 @@ Two cell schemes coexist:
   the north rule mandates; the adaptive-split operator re-indexes hot
   tiles at finer resolution.
 
-Exactness: PIP refines with the ray-cast kernel; kNN is *provably*
+Exactness: PIP refines with the even-odd ray-cast as one JVM filter
+(:func:`pnpoly_sql`, bit-identical to the NumPy reference kernel
+:func:`functions.geometry.points_in_polygon`), shared by the flat-grid
+and S2-covering prefilters (:func:`_pip_refine_join`); kNN is *provably*
 exact — after the 3x3-tile candidate pass, any point that cannot show
 k neighbors inside the guaranteed-covered radius (distance to the
 explored-region boundary) falls back to a full search: broadcast when
@@ -28,14 +31,11 @@ to end.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm2shp_spark.functions import geometry as G
 from osm2shp_spark.operators._livecache import LiveCacheRegistry
 
 #: default tile size in degrees (prefilter grid)
@@ -82,13 +82,6 @@ def with_tiles(
 
 #: broadcast budget for polygon rings (vertices ≈ 16 B each → ~160 MB)
 MAX_BROADCAST_VERTICES = 10_000_000
-
-#: longest ring the JVM higher-order-function refine handles before the
-#: operator falls back to the vectorized NumPy/Arrow refine (the HOF
-#: evaluates ~n interpreted edge tests per candidate row; NumPy's SIMD
-#: loop wins on very long rings, the JVM path wins everywhere else by
-#: never leaving the executor)
-MAX_JVM_RING_VERTS = 1024
 
 
 def pnpoly_sql(px: str, py: str, edges: str = "_edges") -> str:
@@ -148,7 +141,7 @@ def _with_ring_edges(polygons: DataFrame) -> DataFrame:
 
 
 def _axis_rect_sql(lons: str, lats: str) -> str:
-    """SQL twin of :func:`_is_axis_rect` on an OPEN 4-vertex ring: the
+    """True when an OPEN 4-vertex ring is an axis-aligned rectangle: the
     edges alternate vertical/horizontal (either winding, any starting
     corner) ⟺ the vertices are the bbox corners in traversal order.
     Degenerate (zero-area) rings also match both patterns but have an
@@ -209,23 +202,67 @@ def _strip_closed_ring(polygons: DataFrame) -> DataFrame:
     return collapse_barrier(stripped)
 
 
-def _refine_candidates_jvm(cand: DataFrame, out_cols: list[str]) -> DataFrame:
-    """Zero-Python exact refine: one pipelined JVM filter directly on
-    the join output — axis-rect rings take the strict-bbox fast test,
-    everything else the higher-order PNPOLY expression. No second read
-    of the candidate subtree (the rect/general split is a CASE, not a
-    plan fork), no Arrow round-trip, so the refine scales exactly like
-    the tile equi-join feeding it. The rect-ness flag ``_isrect`` was
-    evaluated once per polygon on the dimension side (see the callers)
-    — the per-candidate filter stays small enough for whole-stage
-    codegen."""
+def _ring_bboxes(polygons: DataFrame) -> DataFrame:
+    """Open the rings (:func:`_strip_closed_ring`) and add the bbox
+    columns ``_lon_min``/``_lon_max``/``_lat_min``/``_lat_max`` that
+    both prefilters cover and the refine pre-cuts on."""
+    return (
+        _strip_closed_ring(polygons)
+        .withColumn("_lon_min", F.array_min("lons"))
+        .withColumn("_lon_max", F.array_max("lons"))
+        .withColumn("_lat_min", F.array_min("lats"))
+        .withColumn("_lat_max", F.array_max("lats"))
+    )
+
+
+def _pip_refine_join(
+    pts: DataFrame,
+    polys: DataFrame,
+    keys: list[str],
+    point_cols: tuple[str, ...],
+    poly_cols: tuple[str, ...],
+    broadcast: bool,
+) -> DataFrame:
+    """Shared join core of both PIP prefilters: equi-join the points
+    (``point_cols`` + ``_px``/``_py`` + ``keys``) with the keyed
+    polygon cover (:func:`_ring_bboxes` output + ``keys``), bbox
+    pre-cut, then the exact refine as one pipelined JVM filter —
+    axis-rect rings take the strict-bbox test, everything else the
+    higher-order PNPOLY expression (:func:`pnpoly_sql`). The rect/
+    general split is a CASE, not a plan fork, so the candidate subtree
+    is read once and never crosses the Arrow channel.
+
+    Rect-ness and the edge list are decided ONCE per polygon on the
+    dimension side, not per candidate — the refine filter stays one
+    small lambda, inside whole-stage codegen limits. With
+    ``broadcast`` the keyed polygon table is hash-broadcast: the point
+    side never shuffles and the refine pipelines inside its scan
+    stage."""
+    polys = _with_ring_edges(
+        polys.withColumn("_isrect", F.expr(_axis_rect_sql("lons", "lats")))
+    ).select(
+        *poly_cols, "_edges", "_isrect",
+        "_lon_min", "_lon_max", "_lat_min", "_lat_max", *keys,
+    )
+    if broadcast:
+        polys = F.broadcast(polys)
     keep = (
         "CASE WHEN _isrect THEN "
         "(_px > _lon_min AND _px < _lon_max AND "
         "_py > _lat_min AND _py < _lat_max) "
         f"ELSE {pnpoly_sql('_px', '_py', '_edges')} END"
     )
-    return cand.filter(F.expr(keep)).select(*out_cols)
+    return (
+        pts.join(polys, keys, "inner")
+        .filter(
+            (F.col("_px") >= F.col("_lon_min"))
+            & (F.col("_px") <= F.col("_lon_max"))
+            & (F.col("_py") >= F.col("_lat_min"))
+            & (F.col("_py") <= F.col("_lat_max"))
+        )
+        .filter(F.expr(keep))
+        .select(*point_cols, *poly_cols)
+    )
 
 
 def pip_join(
@@ -234,50 +271,27 @@ def pip_join(
     point_cols: tuple[str, ...],
     poly_cols: tuple[str, ...],
     tile_size: float = TILE_SIZE,
-    broadcast_rings: bool | None = None,
-    max_broadcast_vertices: int = MAX_BROADCAST_VERTICES,
-    refine: str = "auto",
-    max_jvm_ring_verts: int = MAX_JVM_RING_VERTS,
 ) -> DataFrame:
     """Inner spatial join: rows of ``points`` inside rows of ``polygons``.
 
     ``points`` needs (lon, lat) + ``point_cols`` to carry through;
-    ``polygons`` needs (lons, lats arrays) + ``poly_cols`` — the FIRST
-    poly col must uniquely identify a polygon.
+    ``polygons`` needs (lons, lats arrays) + ``poly_cols``.
 
     Plan: polygons explode over their bbox tile rectangle (pure
     Catalyst ``sequence``+``explode`` — exact superset cover), points
     compute their tile, equi-join on tile, bbox pre-cut, then the
-    exact ray-cast refine.
+    exact ray-cast refine as a higher-order SQL filter pipelined
+    straight after the join (:func:`_pip_refine_join`) — zero Python
+    workers, bit-identical results to the NumPy kernel
+    :func:`functions.geometry.points_in_polygon`.
 
-    ``refine`` picks the refine engine (``'auto'`` by the polygon-side
-    max ring length, from the same one-aggregate pre-pass as the
-    broadcast estimate — both table stats in production):
-
-    - ``'jvm'`` (auto default up to ``max_jvm_ring_verts``-vertex
-      rings): the PNPOLY ray-cast runs as a higher-order SQL filter
-      pipelined straight after the join (:func:`pnpoly_sql`) — zero
-      Python workers, zero Arrow serde, bit-identical results to the
-      NumPy kernel. The ring arrays ride the (dimension-side) join
-      rows; under the vertex budget the whole tiled polygon side is
-      hash-broadcast so the big point table never shuffles at all.
-    - ``'arrow'`` (auto fallback for very long rings, where NumPy's
-      SIMD edge loop beats per-edge interpreted expressions): the
-      previous vectorized ``mapInPandas`` refine. There
-      ``broadcast_rings`` (None = auto by total-vertex budget)
-      decides whether rings travel as ONE numpy broadcast keyed by
-      polygon id (slim Arrow payload) or ride the join rows (no
-      driver collect at 100x polygon scale).
+    One aggregate pre-pass (a table stat in production) sums the ring
+    vertices: within ``MAX_BROADCAST_VERTICES`` the tiled polygon side
+    is hash-broadcast, above it the planner picks the join strategy.
     """
-    est = polygons.agg(
-        F.sum(F.size("lons")).alias("verts"),
-        F.max(F.size("lons")).alias("max_verts"),
-    ).collect()[0]
-    total_verts = int(est["verts"] or 0)
-    if refine == "auto":
-        refine = "jvm" if int(est["max_verts"] or 0) <= max_jvm_ring_verts else "arrow"
-    if broadcast_rings is None:
-        broadcast_rings = total_verts <= max_broadcast_vertices
+    total_verts = int(
+        polygons.agg(F.sum(F.size("lons"))).collect()[0][0] or 0
+    )
     pts = with_tiles(points, tile_size=tile_size).select(
         *point_cols,
         F.col("lon").alias("_px"),
@@ -286,14 +300,8 @@ def pip_join(
         "tile_y",
     )
     ts = float(tile_size)
-    poly_key = poly_cols[0]
-    if refine == "jvm":
-        polygons = _strip_closed_ring(polygons)
     polys = (
-        polygons.withColumn("_lon_min", F.array_min("lons"))
-        .withColumn("_lon_max", F.array_max("lons"))
-        .withColumn("_lat_min", F.array_min("lats"))
-        .withColumn("_lat_max", F.array_max("lats"))
+        _ring_bboxes(polygons)
         .withColumn(
             "tile_x",
             F.explode(
@@ -311,110 +319,10 @@ def pip_join(
             ),
         )
     )
-    if refine == "jvm":
-        # rect-ness + edge list decided ONCE per polygon (dimension
-        # side), not per candidate — the refine filter stays one small
-        # lambda, inside whole-stage codegen limits
-        polys = _with_ring_edges(
-            polys.withColumn("_isrect", F.expr(_axis_rect_sql("lons", "lats")))
-        )
-        ring_cols = ["_edges", "_isrect"]
-    else:
-        ring_cols = [] if broadcast_rings else ["lons", "lats"]
-    polys = polys.select(
-        *poly_cols, *ring_cols,
-        "_lon_min", "_lon_max", "_lat_min", "_lat_max", "tile_x", "tile_y",
+    return _pip_refine_join(
+        pts, polys, ["tile_x", "tile_y"], point_cols, poly_cols,
+        total_verts <= MAX_BROADCAST_VERTICES,
     )
-    if refine == "jvm" and broadcast_rings:
-        # dimension side fits the budget → hash-broadcast the tiled
-        # polygon table: the point side never shuffles and the refine
-        # filter pipelines inside the scan stage
-        polys = F.broadcast(polys)
-    cand = pts.join(polys, ["tile_x", "tile_y"], "inner").filter(
-        (F.col("_px") >= F.col("_lon_min"))
-        & (F.col("_px") <= F.col("_lon_max"))
-        & (F.col("_py") >= F.col("_lat_min"))
-        & (F.col("_py") <= F.col("_lat_max"))
-    )
-    out_cols = list(point_cols) + list(poly_cols)
-    if refine == "jvm":
-        return _refine_candidates_jvm(cand, out_cols)
-    return _refine_candidates(
-        cand, points, polygons, poly_key, out_cols, broadcast_rings, ring_cols
-    )
-
-
-def _refine_candidates(
-    cand: DataFrame,
-    points: DataFrame,
-    polygons: DataFrame,
-    poly_key: str,
-    out_cols: list[str],
-    broadcast_rings: bool,
-    ring_cols: list[str],
-) -> DataFrame:
-    """Shared exact-PIP refine stage (flat-grid and S2-covering
-    prefilters both feed it): bbox-cut candidates → rect fast path
-    entirely JVM-side → vectorized ray-cast for the rest."""
-    # slim the Arrow payload: the refine needs only coords + carried
-    # columns — the bbox doubles stay JVM-side (the round trip is the
-    # stage's bandwidth bill at ~10^7 candidates)
-    refine_cols = list(dict.fromkeys(out_cols + ["_px", "_py"] + ring_cols))
-    schema = cand.select(*out_cols).schema
-
-    rings_bc = None
-    rect_keys: list = []
-    if broadcast_rings:
-        ring_pdf = polygons.select(poly_key, "lons", "lats").toPandas()
-        rings = {}
-        for k, lo, la in zip(ring_pdf[poly_key], ring_pdf["lons"], ring_pdf["lats"]):
-            rx = np.asarray(lo, np.float64)
-            ry = np.asarray(la, np.float64)
-            rings[k] = (rx, ry)
-            if _is_axis_rect(rx, ry):
-                rect_keys.append(k.item() if hasattr(k, "item") else k)
-        rings_bc = points.sparkSession.sparkContext.broadcast(rings)
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf["_px"].to_numpy(np.float64)
-            py = pdf["_py"].to_numpy(np.float64)
-            codes, uniques = pd.factorize(pdf[poly_key], sort=False)
-            for code, key in enumerate(uniques):
-                idx = np.flatnonzero(codes == code)
-                if rings_bc is not None:
-                    rx, ry = rings_bc.value[key]
-                else:
-                    rx = np.asarray(pdf["lons"].iloc[idx[0]], np.float64)
-                    ry = np.asarray(pdf["lats"].iloc[idx[0]], np.float64)
-                keep[idx] = G.points_in_polygon(px[idx], py[idx], rx, ry)
-            if keep.any():
-                yield pdf.loc[keep, out_cols]
-
-    if rect_keys and rings_bc is not None:
-        # rectangle fast path: for an axis-aligned ring the strict bbox
-        # cut IS the PIP answer for interior/exterior points, so these
-        # candidates never leave the JVM (vertical edges make the
-        # ray-cast x-intersection exact in doubles). Points exactly ON
-        # a rect edge follow the bbox (excluded) rather than the
-        # ray-cast half-open convention — boundary behavior is
-        # documented as convention, not contract.
-        is_rect = F.col(poly_key).isin(rect_keys)
-        rect_hits = cand.filter(is_rect).filter(
-            (F.col("_px") > F.col("_lon_min"))
-            & (F.col("_px") < F.col("_lon_max"))
-            & (F.col("_py") > F.col("_lat_min"))
-            & (F.col("_py") < F.col("_lat_max"))
-        ).select(*out_cols)
-        general = cand.filter(~is_rect).select(*refine_cols)
-        if len(rect_keys) == len(rings_bc.value):
-            return rect_hits
-        return rect_hits.unionByName(general.mapInPandas(refine, schema=schema))
-
-    return cand.select(*refine_cols).mapInPandas(refine, schema=schema)
 
 
 def pip_join_s2(
@@ -424,38 +332,32 @@ def pip_join_s2(
     poly_cols: tuple[str, ...],
     max_cells_per_poly: int = 64,
     max_level: int = 14,
-    broadcast_rings: bool | None = None,
-    max_broadcast_vertices: int = MAX_BROADCAST_VERTICES,
-    refine: str = "auto",
-    max_jvm_ring_verts: int = MAX_JVM_RING_VERTS,
 ) -> DataFrame:
     """PIP join prefiltered by S2 covering tokens instead of flat-grid
     tiles — the north rule's 'S2 covering tokens for point-in-polygon
     layer classification' as a relational equi-join: polygons explode
     over their bbox covering at a fleet-wide level, points compute
     their single level-L token, join on token, then the shared exact
-    refine. Identical results to :func:`pip_join` (equivalence- and
-    oracle-tested).
+    refine (:func:`_pip_refine_join`). Identical results to
+    :func:`pip_join` (equivalence- and oracle-tested).
 
     Level selection: the finest level whose WORST bbox covering fits
     ``max_cells_per_poly`` — one tiny driver pre-pass over bbox spans
-    (production: a table stat). A fleet-wide level keeps the join a
-    single-key equi-join; per-row adaptive levels are the flat-grid
-    path's adaptive-cell territory.
+    (production: a table stat), which also sums the ring vertices for
+    the same broadcast budget as :func:`pip_join`. A fleet-wide level
+    keeps the join a single-key equi-join; per-row adaptive levels are
+    the flat-grid path's adaptive-cell territory.
 
     The covering UDF is fully Arrow-batched: bboxes are computed
     JVM-side (``array_min``/``array_max``) and the whole batch goes
     through ONE vectorized :func:`s2.bbox_covering_batch` call — no
-    per-polygon Python. ``broadcast_rings=None`` auto-selects by the
-    same vertex budget as :func:`pip_join`; above it the rings ride
-    the join rows instead of a driver collect + broadcast.
+    per-polygon Python.
     """
     from pyspark.sql import types as T
 
     from osm2shp_spark.functions import s2 as S2
     from osm2shp_spark.functions.udfs import s2_token_udf
 
-    poly_key = poly_cols[0]
     spans = (
         polygons.select(
             (F.array_max("lons") - F.array_min("lons")).alias("dx"),
@@ -470,29 +372,24 @@ def pip_join_s2(
             F.min("x0").alias("x0"),
             F.min("y0").alias("y0"),
             F.sum("verts").alias("verts"),
-            F.max("verts").alias("max_verts"),
         )
         .collect()[0]
     )
-    if refine == "auto":
-        refine = (
-            "jvm" if int(spans["max_verts"] or 0) <= max_jvm_ring_verts else "arrow"
-        )
-    if broadcast_rings is None:
-        broadcast_rings = int(spans["verts"] or 0) <= max_broadcast_vertices
     level = 1
-    for lv in range(max_level, 0, -1):
-        try:
-            S2.bbox_covering(
-                spans["x0"], spans["y0"],
-                spans["x0"] + float(spans["dx"] or 0.0),
-                spans["y0"] + float(spans["dy"] or 0.0),
-                lv, max_cells=max_cells_per_poly,
-            )
-            level = lv
-            break
-        except ValueError:
-            continue
+    # no polygons → no bbox to cover (x0 is NULL); any level joins nothing
+    if spans["x0"] is not None:
+        for lv in range(max_level, 0, -1):
+            try:
+                S2.bbox_covering(
+                    spans["x0"], spans["y0"],
+                    spans["x0"] + float(spans["dx"] or 0.0),
+                    spans["y0"] + float(spans["dy"] or 0.0),
+                    lv, max_cells=max_cells_per_poly,
+                )
+                level = lv
+                break
+            except ValueError:
+                continue
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def cover_tokens(
@@ -512,67 +409,20 @@ def pip_join_s2(
         toks = S2.token(np.concatenate(ids))
         return pd.Series(np.split(toks, np.cumsum(lens)[:-1]))
 
-    if refine == "jvm":
-        polygons = _strip_closed_ring(polygons)
-    polys = (
-        polygons.withColumn("_lon_min", F.array_min("lons"))
-        .withColumn("_lon_max", F.array_max("lons"))
-        .withColumn("_lat_min", F.array_min("lats"))
-        .withColumn("_lat_max", F.array_max("lats"))
-        .withColumn(
-            "_tok",
-            F.explode(
-                cover_tokens("_lon_min", "_lat_min", "_lon_max", "_lat_max")
-            ),
-        )
+    polys = _ring_bboxes(polygons).withColumn(
+        "_tok",
+        F.explode(cover_tokens("_lon_min", "_lat_min", "_lon_max", "_lat_max")),
     )
-    if refine == "jvm":
-        polys = _with_ring_edges(
-            polys.withColumn("_isrect", F.expr(_axis_rect_sql("lons", "lats")))
-        )
-        ring_cols = ["_edges", "_isrect"]
-    else:
-        ring_cols = [] if broadcast_rings else ["lons", "lats"]
-    polys = polys.select(
-        *poly_cols, *ring_cols,
-        "_lon_min", "_lon_max", "_lat_min", "_lat_max", "_tok",
-    )
-    if refine == "jvm" and broadcast_rings:
-        polys = F.broadcast(polys)
     pts = points.select(
         *point_cols,
         F.col("lon").alias("_px"),
         F.col("lat").alias("_py"),
         s2_token_udf(level)(F.col("lon"), F.col("lat")).alias("_tok"),
     )
-    cand = pts.join(polys, "_tok", "inner").filter(
-        (F.col("_px") >= F.col("_lon_min"))
-        & (F.col("_px") <= F.col("_lon_max"))
-        & (F.col("_py") >= F.col("_lat_min"))
-        & (F.col("_py") <= F.col("_lat_max"))
+    return _pip_refine_join(
+        pts, polys, ["_tok"], point_cols, poly_cols,
+        int(spans["verts"] or 0) <= MAX_BROADCAST_VERTICES,
     )
-    out_cols = list(point_cols) + list(poly_cols)
-    if refine == "jvm":
-        return _refine_candidates_jvm(cand, out_cols)
-    return _refine_candidates(
-        cand, points, polygons, poly_key, out_cols, broadcast_rings, ring_cols
-    )
-
-
-def _is_axis_rect(rx: np.ndarray, ry: np.ndarray) -> bool:
-    """True when the ring is exactly an axis-aligned rectangle (its
-    vertices are the 4 bbox corners)."""
-    if len(rx) >= 2 and rx[0] == rx[-1] and ry[0] == ry[-1]:
-        rx, ry = rx[:-1], ry[:-1]
-    if len(rx) != 4:
-        return False
-    xs, ys = set(rx.tolist()), set(ry.tolist())
-    if len(xs) != 2 or len(ys) != 2:
-        return False
-    corners = set(zip(rx.tolist(), ry.tolist()))
-    x0, x1 = sorted(xs)
-    y0, y1 = sorted(ys)
-    return corners == {(x0, y0), (x1, y0), (x1, y1), (x0, y1)}
 
 
 # ---------------------------------------------------------------------------
@@ -1098,9 +948,10 @@ def knn_join_auto(
     buckets: dict[tuple[int, int], np.ndarray] = {}
     order = np.lexsort((ty, tx))
     sorted_keys = np.stack([tx[order], ty[order]], axis=1)
+    # no features → no buckets (the leading True would index row 0)
     starts = np.flatnonzero(
         np.concatenate(([True], np.any(np.diff(sorted_keys, axis=0) != 0, axis=1)))
-    )
+    ) if len(order) else np.empty(0, np.int64)
     bounds = np.append(starts, len(order))
     for i, s in enumerate(starts):
         key = (int(sorted_keys[s, 0]), int(sorted_keys[s, 1]))

@@ -1325,9 +1325,8 @@ def _ivf_oracle() -> str:
 def q_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k, deterministic-quantizer variant — the full pipeline
     (cell assignment, nprobe probing, exact re-rank) is pure Catalyst
-    and value-checked against the DuckDB twin. The k-means-trained
-    quantizer (``cosine_topk_ivf``) shares all mechanics and is
-    recall-gated in tests/test_ivf.py. Gated via ``ann_cosine_approx``."""
+    and value-checked against the DuckDB twin. Gated via
+    ``ann_cosine_approx``."""
     from osm2shp_spark.operators.similarity import cosine_topk_ivf_flat
 
     register_driver_tables(spark, sf_dir)

@@ -1,4 +1,5 @@
-"""IVF ANN: determinism, nprobe=n_cells exactness, recall sanity."""
+"""IVF ANN: determinism, nprobe=n_cells exactness, subset of the exact
+ranking."""
 
 from __future__ import annotations
 
@@ -6,7 +7,7 @@ from conftest import SF_SMALL
 from parity import canon_rows
 
 from osm2shp_spark import queries as Q
-from osm2shp_spark.operators.similarity import cosine_topk, cosine_topk_ivf
+from osm2shp_spark.operators.similarity import cosine_topk, cosine_topk_ivf_flat
 from osm2shp_spark.sources.tables import register_driver_tables
 
 
@@ -15,30 +16,8 @@ def test_ivf_full_probe_equals_exact(spark):
     emb = spark.table("embeddings")
     probes = emb.filter("vec_id % 50 = 0")
     exact = cosine_topk(emb, probes, k=5).toPandas()
-    full = cosine_topk_ivf(
-        emb, probes, k=5, dim=64, n_cells=8, nprobe=8
-    ).toPandas()
+    full = cosine_topk_ivf_flat(emb, probes, k=5, n_cells=8, nprobe=8).toPandas()
     assert canon_rows(exact) == canon_rows(full)
-
-
-def test_ivf_trained_recall_at_nprobe(spark):
-    """Quantizer quality gate for the k-means-trained path: recall@k
-    vs the exact ranking must clear a pinned floor at nprobe=4 (it is
-    exactly 1.0 at nprobe=n_cells, tested above) — a quantizer
-    regression (bad centroids, wrong assignment) drops recall and
-    fails here."""
-    register_driver_tables(spark, SF_SMALL)
-    emb = spark.table("embeddings")
-    probes = emb.filter("vec_id % 50 = 0")
-    k = 5
-    exact = cosine_topk(emb, probes, k=k).toPandas()
-    approx = cosine_topk_ivf(
-        emb, probes, k=k, dim=64, n_cells=8, nprobe=4
-    ).toPandas()
-    truth = set(zip(exact.probe_id.astype(int), exact.neighbor_id.astype(int)))
-    got = set(zip(approx.probe_id.astype(int), approx.neighbor_id.astype(int)))
-    recall = len(truth & got) / len(truth)
-    assert recall >= 0.55, recall
 
 
 def test_ivf_deterministic(spark):

@@ -84,8 +84,8 @@ def test_assembly_shuffles_carry_tinyint_rule_index(spark):
 
 
 def test_pip_jvm_refine_never_leaves_the_jvm(spark):
-    """The default (short-ring) PIP plan must contain NO Python
-    execution node — the PNPOLY refine is a higher-order SQL filter —
+    """The PIP plan must contain NO Python execution node — the
+    PNPOLY refine is a higher-order SQL filter —
     and must hash-broadcast the tiled polygon dimension under the
     vertex budget, so the point table neither shuffles nor crosses
     the Arrow channel."""
@@ -144,7 +144,7 @@ def test_auto_strategy_selection(spark):
     # test_knn_broadcast_oversize_falls_back_to_shuffle)
 
 
-def test_pip_auto_broadcast_selection(spark):
+def test_pip_auto_broadcast_selection(spark, monkeypatch):
     """pip_join's default must auto-broadcast small polygon sets and
     switch the rings onto the join rows above the vertex budget
     (both paths produce identical rows)."""
@@ -159,11 +159,11 @@ def test_pip_auto_broadcast_selection(spark):
     )
     auto = pip_join(imgs, rects, ("image_id",), ("rect_id", "layer"))
     rows_auto = canon_rows(auto.toPandas())
-    # above-budget: rings ride the join rows (no driver collect)
-    riding = pip_join(
-        imgs, rects, ("image_id",), ("rect_id", "layer"),
-        max_broadcast_vertices=1,
-    )
+    # above-budget: no broadcast hint, the rings ride the join rows
+    from osm2shp_spark.operators import spatial
+
+    monkeypatch.setattr(spatial, "MAX_BROADCAST_VERTICES", 0)
+    riding = pip_join(imgs, rects, ("image_id",), ("rect_id", "layer"))
     assert canon_rows(riding.toPandas()) == rows_auto
 
 

@@ -127,8 +127,8 @@ def _convex_hull(px, py):
 )
 def test_pnpoly_matches_convex_halfplane_oracle(poly_pts, probes):
     """On a convex CCW ring, containment has an exact independent
-    oracle: every edge cross product positive. PNPOLY (the engine's
-    refine kernel and its SQL twin's bit-parity reference) must agree
+    oracle: every edge cross product positive. PNPOLY (the NumPy
+    reference kernel the engine's SQL refine is bit-identical to) must agree
     for every probe not near an edge line (the half-open boundary
     convention is deliberately unspecified there)."""
     hull = _convex_hull([p[0] for p in poly_pts], [p[1] for p in poly_pts])

@@ -65,31 +65,6 @@ def test_pip_general_polygons_vs_brute_force(spark):
     assert got == brute
 
 
-def test_pip_jvm_refine_equals_arrow_refine(spark):
-    """The zero-Python higher-order-function PNPOLY refine (auto
-    default for short rings) must be bit-identical to the vectorized
-    NumPy/Arrow refine on general polygons — same IEEE operation
-    order, same half-open crossing convention, same closed-ring
-    normalization."""
-    from osm2shp_spark.operators.spatial import pip_join
-    from osm2shp_spark.sources.synthetic import synthetic_rects
-
-    imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
-    rects = synthetic_rects(spark, SF_SMALL)
-    mx = "(lon_min + lon_max) / 2"
-    my = "(lat_min + lat_max) / 2"
-    diamonds = rects.select(
-        "rect_id",
-        "layer",
-        F.expr(f"array(lon_min, {mx}, lon_max, {mx}, lon_min)").alias("lons"),
-        F.expr(f"array({my}, lat_min, {my}, lat_max, {my})").alias("lats"),
-    )
-    jvm = pip_join(imgs, diamonds, ("image_id",), ("rect_id",), refine="jvm")
-    arrow = pip_join(imgs, diamonds, ("image_id",), ("rect_id",), refine="arrow")
-    assert canon_rows(jvm.toPandas()) == canon_rows(arrow.toPandas())
-    assert jvm.count() > 0
-
-
 def test_knn_fallback_engages_and_stays_exact(spark):
     """Tiny tile size forces most points through the provable-radius
     escape; result must still equal brute force."""
@@ -181,6 +156,23 @@ def test_knn_no_fallback_subtree_when_all_resolved(spark):
     assert out.count() > 0
 
 
+def test_knn_auto_empty_features_matches_shuffle(spark):
+    """An empty feature table gives no neighbors on either kNN path:
+    the broadcast path's driver bucket build must not index a row that
+    is not there."""
+    from osm2shp_spark.operators.spatial import knn_join_auto
+
+    imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
+    empty = synthetic_nodes(spark, SF_SMALL).select(
+        F.col("id").alias("node_id"), "lon", "lat"
+    ).limit(0)
+    auto = knn_join_auto(imgs, empty, k=2).toPandas()
+    shuffle = knn_join(imgs, empty, k=2).toPandas()
+    assert len(auto) == 0
+    assert canon_rows(auto) == canon_rows(shuffle)
+    assert list(auto.columns) == list(shuffle.columns)
+
+
 def test_knn_broadcast_oversize_falls_back_to_shuffle(spark):
     """knn_join_auto must guard its broadcast path's driver collect:
     above the feature budget it routes to the shuffle knn_join
@@ -234,36 +226,53 @@ def test_geometry_meta_columns(spark):
     assert (df.lon_min <= df.lon_max).all()
 
 
-def test_pip_s2_equals_flat_grid(spark):
+def test_pip_s2_equals_flat_grid(spark, monkeypatch):
     """The S2-covering prefilter path must produce exactly the
     flat-grid path's rows (same exact refine, different superset
-    prefilter)."""
+    prefilter) — on axis-aligned rects (strict-bbox branch), on
+    diamonds (PNPOLY branch), above the broadcast vertex budget, and
+    on an empty polygon table."""
     from pyspark.sql import functions as F
 
     from parity import canon_rows
 
+    from osm2shp_spark.operators import spatial
     from osm2shp_spark.operators.spatial import pip_join, pip_join_s2
     from osm2shp_spark.sources.synthetic import synthetic_images, synthetic_rects
     from conftest import SF_SMALL
 
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
-    rects = synthetic_rects(spark, SF_SMALL).select(
+    src = synthetic_rects(spark, SF_SMALL)
+    rects = src.select(
         "rect_id",
         "layer",
         F.array("lon_min", "lon_max", "lon_max", "lon_min", "lon_min").alias("lons"),
         F.array("lat_min", "lat_min", "lat_max", "lat_max", "lat_min").alias("lats"),
     )
-    a = canon_rows(pip_join(imgs, rects, ("image_id",), ("rect_id", "layer")).toPandas())
-    b = canon_rows(pip_join_s2(imgs, rects, ("image_id",), ("rect_id", "layer")).toPandas())
-    assert a == b and len(a) > 0
-    # ride-along ring path (above the broadcast vertex budget): same rows
-    c = canon_rows(
-        pip_join_s2(
-            imgs, rects, ("image_id",), ("rect_id", "layer"),
-            broadcast_rings=False,
-        ).toPandas()
+    mx = "(lon_min + lon_max) / 2"
+    my = "(lat_min + lat_max) / 2"
+    diamonds = src.select(
+        "rect_id",
+        "layer",
+        F.expr(f"array(lon_min, {mx}, lon_max, {mx}, lon_min)").alias("lons"),
+        F.expr(f"array({my}, lat_min, {my}, lat_max, {my})").alias("lats"),
     )
-    assert a == c
+
+    def both(polys):
+        a = canon_rows(pip_join(imgs, polys, ("image_id",), ("rect_id", "layer")).toPandas())
+        b = canon_rows(pip_join_s2(imgs, polys, ("image_id",), ("rect_id", "layer")).toPandas())
+        return a, b
+
+    a, b = both(rects)
+    assert a == b and len(a) > 0
+    d, e = both(diamonds)
+    assert d == e and len(d) > 0
+    assert both(rects.limit(0)) == ([], [])
+    # rings ride the join rows (above the broadcast vertex budget): same rows
+    monkeypatch.setattr(spatial, "MAX_BROADCAST_VERTICES", 0)
+    assert canon_rows(
+        pip_join_s2(imgs, rects, ("image_id",), ("rect_id", "layer")).toPandas()
+    ) == a
 
 
 def test_knn_adaptive_tile_size(spark):
