@@ -61,6 +61,9 @@ def collapse_barrier(df: DataFrame, keep: tuple = ()) -> DataFrame:
 
 
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
+    """Precondition: ``df`` is a scan or a cached input. The partition
+    count comes from ``df.rdd.getNumPartitions()``, which on a shuffled
+    input runs the upstream AQE stages — a hidden driver job."""
     spark = df.sparkSession
     try:
         parts = df.rdd.getNumPartitions()

@@ -51,6 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm2shp_spark.operators import _budget
 from osm2shp_spark.operators.classify import classify_ways, staged_nodes
 
 #: Output schema shared by both paths (parallel coord arrays mirror the
@@ -168,30 +169,27 @@ def assemble_ways(
 def assemble_ways_mapside(
     nodes: DataFrame,
     ways: DataFrame,
-    max_broadcast_nodes: int | None = -1,
     defer_filters: bool = False,
 ) -> DataFrame:
     """Zero-shuffle fast path: broadcast node coords, assemble in place.
 
     Valid when the staged node projection fits in executor memory
-    (id/lon/lat as three numpy arrays ≈ 24 B/node → ~4 GB per 10^8
-    nodes). No explode, no join shuffle, no groupBy — each ways
-    partition streams through one Arrow-batched ``mapInPandas``.
+    (id/lon/lat as three numpy arrays, 24 B/node). No explode, no join
+    shuffle, no groupBy — each ways partition streams through one
+    Arrow-batched ``mapInPandas``.
 
-    ``max_broadcast_nodes`` guards the driver collect (same contract as
-    :func:`~osm2shp_spark.operators.spatial.knn_join_auto`): above
-    the budget this falls back to the general :func:`assemble_ways`
+    One aggregate measures the payload bytes of
+    :func:`~osm2shp_spark.operators.classify.staged_nodes` and guards
+    the driver collect with the broadcast budget (:mod:`._budget`):
+    above it this falls back to the general :func:`assemble_ways`
     (identical results) instead of OOMing the driver at 100x node
-    scale. Default ``-1`` means :data:`NODE_BROADCAST_LIMIT`; pass
-    ``None`` to skip the count pre-pass when the caller knows the node
-    table is bounded.
+    scale.
     """
-    if max_broadcast_nodes == -1:
-        max_broadcast_nodes = NODE_BROADCAST_LIMIT
-    if max_broadcast_nodes is not None and nodes.count() > max_broadcast_nodes:
+    staged = staged_nodes(nodes)
+    if not _budget.fits_broadcast(staged):
         return assemble_ways(nodes, ways, defer_filters=defer_filters)
     spark = nodes.sparkSession
-    build = staged_nodes(nodes).toPandas()
+    build = staged.toPandas()
     if not len(build):
         # empty build side: no way can fully resolve (all-or-nothing),
         # and the searchsorted lookup below would index a zero-length
@@ -242,8 +240,6 @@ def assemble_ways_mapside(
     return classified.mapInPandas(assemble, schema=ASSEMBLED_SCHEMA)
 
 
-#: driver-collect budget of assemble_ways_mapside
-NODE_BROADCAST_LIMIT = 50_000_000  # ~1.2 GB of (id,lon,lat) numpy
 MEGA_WAY_THRESHOLD = 50_000  # refs per way before the salted path
 
 

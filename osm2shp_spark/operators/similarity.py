@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm2shp_spark.operators import _budget
+
 #: shared Spark-side fold expression for SQL parity
 def _dot_expr(a: str, b: str) -> str:
     return (
@@ -82,41 +84,31 @@ def duck_cosine(a: str, b: str) -> str:
 # exact brute-force top-k
 # ---------------------------------------------------------------------------
 
-#: probe budget for the numpy scorer's driver collect + broadcast
-#: (vectors ≈ 520 B each → ~52 MB at the budget)
-MAX_BROADCAST_PROBES = 100_000
-
-
 def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_probes: int | None = MAX_BROADCAST_PROBES,
 ) -> DataFrame:
     """Exact cosine top-k: (probe_id, rank, neighbor_id, cosine).
 
     Self-matches excluded; ties broken by neighbor id. The probe side
     is broadcast; the corpus is scanned once.
 
-    Physical strategy (r6): probe sets within ``max_broadcast_probes``
-    score through :func:`_cosine_topk_broadcast_numpy` — the
+    Physical strategy: probe sets whose ``(id_col, vec_col)`` bytes fit
+    the broadcast budget (:mod:`._budget`, one aggregate) score
+    through :func:`_cosine_topk_broadcast_numpy` — the
     probes×corpus dot products run as vectorized NumPy with the SAME
     sequential-over-dimensions IEEE accumulation order as the SQL fold
     (bit-identical cosines, pytest- and oracle-asserted), and each
     scan slice pre-reduces to a threshold-inclusive per-probe
     candidate superset so the final exact window ranks thousands of
-    rows instead of |corpus|x|probes|. The r6 before-plan evaluated
-    the interpreted ``aggregate(zip_with(...))`` lambda per pair —
-    quadratically many pairs x 64 interpreted steps was the measured
-    scale wall (sf0.5: 11.4 s; numpy path 1.0 s). Above the budget
-    (or ``max_broadcast_probes=None``) the pure-SQL plan below runs
-    unchanged — same rows bit for bit.
+    rows instead of |corpus|x|probes|. Above the budget the pure-SQL
+    plan below runs — same rows bit for bit, but it evaluates the
+    interpreted ``aggregate(zip_with(...))`` fold per pair.
     """
-    if max_broadcast_probes is not None and (
-        probes.count() <= max_broadcast_probes
-    ):
+    if _budget.fits_broadcast(probes.select(id_col, vec_col)):
         cand = _cosine_topk_broadcast_numpy(
             corpus, probes, k, id_col, vec_col
         )

@@ -23,10 +23,10 @@ and S2-covering prefilters (:func:`_pip_refine_join`); kNN is *provably*
 exact — after the 3x3-tile candidate pass, any point that cannot show
 k neighbors inside the guaranteed-covered radius (distance to the
 explored-region boundary) falls back to a full search: broadcast when
-the feature table fits the budget, widening super-tile ring joins
-when it does not (r6 — never a full-table broadcast in the shuffle
-regime). The oracle comparison (vs brute force SQL) checks this end
-to end.
+the feature table fits the byte budget (:mod:`._budget`), widening
+super-tile ring joins when it does not (never a full-table broadcast
+in the shuffle regime). The oracle comparison (vs brute force SQL)
+checks this end to end.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm2shp_spark.operators import _budget
 from osm2shp_spark.operators._livecache import LiveCacheRegistry
 
 #: default tile size in degrees (prefilter grid)
@@ -79,10 +80,6 @@ def with_tiles(
 # ---------------------------------------------------------------------------
 # N3: point-in-polygon join
 # ---------------------------------------------------------------------------
-
-#: broadcast budget for polygon rings (vertices ≈ 16 B each → ~160 MB)
-MAX_BROADCAST_VERTICES = 10_000_000
-
 
 def pnpoly_sql(px: str, py: str, edges: str = "_edges") -> str:
     """Even-odd ray-cast containment as a pure Spark SQL expression —
@@ -285,13 +282,12 @@ def pip_join(
     workers, bit-identical results to the NumPy kernel
     :func:`functions.geometry.points_in_polygon`.
 
-    One aggregate pre-pass (a table stat in production) sums the ring
-    vertices: within ``MAX_BROADCAST_VERTICES`` the tiled polygon side
-    is hash-broadcast, above it the planner picks the join strategy.
+    One aggregate pre-pass (a table stat in production) measures the
+    payload bytes of ``(*poly_cols, lons, lats)``: within the broadcast
+    budget (:mod:`._budget`) the tiled polygon side is hash-broadcast,
+    above it the planner picks the join strategy.
     """
-    total_verts = int(
-        polygons.agg(F.sum(F.size("lons"))).collect()[0][0] or 0
-    )
+    broadcast = _budget.fits_broadcast(polygons.select(*poly_cols, "lons", "lats"))
     pts = with_tiles(points, tile_size=tile_size).select(
         *point_cols,
         F.col("lon").alias("_px"),
@@ -320,8 +316,7 @@ def pip_join(
         )
     )
     return _pip_refine_join(
-        pts, polys, ["tile_x", "tile_y"], point_cols, poly_cols,
-        total_verts <= MAX_BROADCAST_VERTICES,
+        pts, polys, ["tile_x", "tile_y"], point_cols, poly_cols, broadcast
     )
 
 
@@ -343,10 +338,11 @@ def pip_join_s2(
 
     Level selection: the finest level whose WORST bbox covering fits
     ``max_cells_per_poly`` — one tiny driver pre-pass over bbox spans
-    (production: a table stat), which also sums the ring vertices for
-    the same broadcast budget as :func:`pip_join`. A fleet-wide level
-    keeps the join a single-key equi-join; per-row adaptive levels are
-    the flat-grid path's adaptive-cell territory.
+    (production: a table stat), which also measures the payload bytes
+    of ``(*poly_cols, lons, lats)`` for the same broadcast budget as
+    :func:`pip_join`. A fleet-wide level keeps the join a single-key
+    equi-join; per-row adaptive levels are the flat-grid path's
+    adaptive-cell territory.
 
     The covering UDF is fully Arrow-batched: bboxes are computed
     JVM-side (``array_min``/``array_max``) and the whole batch goes
@@ -358,20 +354,14 @@ def pip_join_s2(
     from osm2shp_spark.functions import s2 as S2
     from osm2shp_spark.functions.udfs import s2_token_udf
 
+    side = polygons.select(*poly_cols, "lons", "lats")
     spans = (
-        polygons.select(
-            (F.array_max("lons") - F.array_min("lons")).alias("dx"),
-            (F.array_max("lats") - F.array_min("lats")).alias("dy"),
-            F.array_min("lons").alias("x0"),
-            F.array_min("lats").alias("y0"),
-            F.size("lons").alias("verts"),
-        )
-        .agg(
-            F.max("dx").alias("dx"),
-            F.max("dy").alias("dy"),
-            F.min("x0").alias("x0"),
-            F.min("y0").alias("y0"),
-            F.sum("verts").alias("verts"),
+        side.agg(
+            F.max(F.array_max("lons") - F.array_min("lons")).alias("dx"),
+            F.max(F.array_max("lats") - F.array_min("lats")).alias("dy"),
+            F.min(F.array_min("lons")).alias("x0"),
+            F.min(F.array_min("lats")).alias("y0"),
+            _budget.payload_bytes_sum(side).alias("nbytes"),
         )
         .collect()[0]
     )
@@ -421,7 +411,7 @@ def pip_join_s2(
     )
     return _pip_refine_join(
         pts, polys, ["_tok"], point_cols, poly_cols,
-        int(spans["verts"] or 0) <= MAX_BROADCAST_VERTICES,
+        _budget.within_budget(spans["nbytes"]),
     )
 
 
@@ -461,10 +451,6 @@ def _resolve_tile_window(spark, feats: DataFrame) -> bool:
         return True
 
 
-#: broadcast budget for the feature side of kNN (rows ≈ 24 B each)
-MAX_BROADCAST_FEATURES = 10_000_000
-
-
 def knn_join(
     points: DataFrame,
     features: DataFrame,
@@ -473,8 +459,6 @@ def knn_join(
     feature_id: str = "node_id",
     tile_size: float = TILE_SIZE,
     tile_window: bool | None = None,
-    max_broadcast_features: int = MAX_BROADCAST_FEATURES,
-    features_count: int | None = None,
 ) -> DataFrame:
     """Exact k nearest features per point → (point_id, rank, feature_id,
     dist2). Local equirectangular metric (see COS_REF), ties broken by
@@ -485,27 +469,14 @@ def knn_join(
     A point's result is provably exact when its kth distance is within
     the guaranteed-covered radius (one full tile ring in the scaled
     metric); the remainder falls back to a full search over the
-    feature table — broadcast when the feature table fits
-    ``max_broadcast_features`` (default :data:`MAX_BROADCAST_FEATURES`,
-    the R32/R37 budget contract), else iterative tile-ring expansion
-    (:func:`_knn_ring_expand` — never a full-table broadcast in the
-    very regime where the planner refused one). The fallback subtree is built only when the materialized
-    top-k summary actually contains unresolved points, so the common
-    all-resolved case executes no broadcast exchange at all; the
-    summary count also means this function triggers the candidate
-    join eagerly (the result DataFrame then reads the persisted
-    summary). ``features_count``: pass a known row count to skip the
-    budget count pre-pass (``knn_join_auto`` already paid it).
-
-    Candidate diet (r6): the provable-radius cut ``dist2 <= rho2``
-    rides the tile join's condition, so candidates beyond the
-    guaranteed-covered radius never reach the top-k aggregate —
-    identical results (a point is resolved iff it has >= k features
-    inside the covered disc, and those ARE its k nearest), ~4x fewer
-    aggregate input rows at uniform density (measured sf0.1: 8.67M ->
-    2.12M candidate rows; the left join still emits one null-extended
-    row for points with no in-radius candidate, which keeps the
-    single-scan unresolved bookkeeping intact).
+    feature table — broadcast when ``(feature_id, lon, lat)`` fits the
+    broadcast budget (:mod:`._budget`), else iterative tile-ring
+    expansion (:func:`_knn_ring_expand`). The fallback subtree and its
+    budget measure run only when the materialized top-k summary holds
+    unresolved points, so the common all-resolved case executes no
+    broadcast exchange at all; the summary count also means this
+    function triggers the candidate join eagerly (the result DataFrame
+    then reads the persisted summary).
 
     ``tile_window``: key the per-point top-k aggregate by
     ``(tile_x, tile_y, _pid)`` instead of ``_pid``. Identical results —
@@ -598,7 +569,7 @@ def knn_join(
     # point's top-k, and unresolved points recompute from scratch in
     # the fallback — so dropping them here is result-identical and
     # starves the aggregate of ~3/4 of its input (measured sf0.1:
-    # 8.67M -> 2.12M candidate rows; see docstring).
+    # 8.67M -> 2.12M candidate rows).
     p, f = cand_src.alias("p"), feats.alias("f")
     cond = (
         (F.col("p.tile_x") == F.col("f.tile_x"))
@@ -676,9 +647,7 @@ def knn_join(
     _register_summary(topk)
     if unresolved.count() == 0:
         return solved
-    if features_count is None:
-        features_count = features.count()
-    if features_count <= max_broadcast_features:
+    if _budget.fits_broadcast(features.select(feature_id, "lon", "lat")):
         from pyspark.sql import Window
 
         w = Window.partitionBy("_pid").orderBy(
@@ -721,8 +690,8 @@ def _knn_ring_expand(
     base tiles — O(log tiles) rounds to cover the global feature
     extent) and re-join each round as a plain equi-join on the
     super-tile key — the feature table is NEVER broadcast wholesale
-    (it just failed the broadcast budget; OOMing the driver with it is
-    the failure mode this path exists to avoid).
+    (its bytes just failed the broadcast budget; OOMing the driver
+    with it is the failure mode this path exists to avoid).
 
     Per round the remaining points explode over their 3x3 SUPER-tile
     ring — a constant 9x fan-out at every radius (an explicit
@@ -904,15 +873,13 @@ def knn_join_auto(
     point_id: str = "image_id",
     feature_id: str = "node_id",
     tile_size: float = TILE_SIZE,
-    max_broadcast_features: int = MAX_BROADCAST_FEATURES,
 ) -> DataFrame:
-    """Strategy selector for exact kNN: one ``count()`` of the feature
-    table (metadata-backed on parquet/Iceberg), then the zero-shuffle
-    broadcast path when it fits ``max_broadcast_features`` (named-place
-    dimension tables stay small even at planet scale), else the
-    shuffle :func:`knn_join` (tile equi-join + provable-radius
-    exactness + AQE skew splitting) instead of OOMing the driver on
-    the collect at 100x feature scale.
+    """Strategy selector for exact kNN: the zero-shuffle broadcast
+    path when ``(feature_id, lon, lat)`` fits the broadcast budget
+    (:mod:`._budget`, one aggregate; named-place dimension tables stay
+    small even at planet scale), else the shuffle :func:`knn_join`
+    (tile equi-join + provable-radius exactness + AQE skew splitting)
+    instead of OOMing the driver on the collect at 100x feature scale.
 
     The broadcast path has identical semantics and bit-identical
     distances to :func:`knn_join` (same IEEE arithmetic, same
@@ -929,14 +896,10 @@ def knn_join_auto(
     reproduces the (dist2, id) lexicographic order row-wise in one
     C-level call.
     """
-    n = features.count()
-    if n > max_broadcast_features:
-        return knn_join(
-            points, features, k, point_id, feature_id, tile_size,
-            max_broadcast_features=max_broadcast_features,
-            features_count=n,
-        )
-    feat_pdf = features.select(feature_id, "lon", "lat").toPandas()
+    side = features.select(feature_id, "lon", "lat")
+    if not _budget.fits_broadcast(side):
+        return knn_join(points, features, k, point_id, feature_id, tile_size)
+    feat_pdf = side.toPandas()
     # global feature order by id: with columns pre-sorted by id, a
     # stable sort on dist2 == lexsort((id, dist2))
     g_order = np.argsort(feat_pdf[feature_id].to_numpy(), kind="stable")

@@ -645,10 +645,10 @@ def q_knn_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r6, guide §3.1: broadcast the side that fits, deliberately): the
     named-place dimension table is far under the broadcast budget at
     every sandbox scale, so the selector picks the zero-shuffle
-    numpy-bucket path; above :data:`MAX_BROADCAST_FEATURES` it routes
-    to the shuffle tile-join path, which stays driver-gated via
-    ``knn_places_strategies`` (adaptive variant) and oversize-tested in
-    tests/test_spatial.py. Both paths are bit-identical by
+    numpy-bucket path; when the features' bytes exceed the broadcast
+    budget (``operators._budget``) it routes to the shuffle tile-join
+    path, which stays driver-gated via ``knn_places_strategies``
+    (adaptive variant) and oversize-tested in tests/test_spatial.py. Both paths are bit-identical by
     construction (same IEEE distance arithmetic, same (dist2, id)
     tie-break), so the oracle hash is strategy-independent."""
     from osm2shp_spark.operators.spatial import knn_join_auto
@@ -712,14 +712,9 @@ def q_way_assembly_mapside(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nodes = synthetic_nodes(spark, sf_dir)
     ways = synthetic_ways(spark, sf_dir)
-    # max_broadcast_nodes=None: the gate fixture's node count is
-    # bounded by construction (sources/synthetic.py), and the default
-    # guard's count() pre-pass would re-run the synthetic generation
-    # pipeline — a second full input pass — just to prove it
+    # the broadcast-budget guard adds one pass over the node generation
     return _assembly_scalar_projection(
-        assemble_ways_mapside(
-            nodes, ways, max_broadcast_nodes=None, defer_filters=True
-        )
+        assemble_ways_mapside(nodes, ways, defer_filters=True)
     )
 
 

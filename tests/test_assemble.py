@@ -159,19 +159,21 @@ class TestMapsidePathEquivalence:
         b = assemble_ways_mapside(nodes, ways).toPandas()
         assert canon_rows(a) == canon_rows(b)
 
-    def test_over_budget_falls_back_to_general_path(self, spark):
-        """A direct call above the node-broadcast budget must NOT
-        collect the node table to the driver (the 100x-scale OOM): it
-        routes to the general Catalyst path with identical rows."""
+    def test_over_budget_falls_back_to_general_path(self, spark, monkeypatch):
+        """A direct call above the broadcast budget must NOT collect the
+        node table to the driver (the 100x-scale OOM): it routes to the
+        general Catalyst path with identical rows."""
+        from osm2shp_spark.operators import _budget
+
         nodes = synthetic_nodes(spark, SF_SMALL)
         ways = synthetic_ways(spark, SF_SMALL)
         a = assemble_ways(nodes, ways).toPandas()
-        b = assemble_ways_mapside(nodes, ways, max_broadcast_nodes=10).toPandas()
-        assert canon_rows(a) == canon_rows(b)
+        monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 10)
+        over = assemble_ways_mapside(nodes, ways)
+        monkeypatch.undo()
+        assert canon_rows(a) == canon_rows(over.toPandas())
         # the fallback plan is the shuffle join, not mapInPandas
-        plan = assemble_ways_mapside(
-            nodes, ways, max_broadcast_nodes=10
-        )._jdf.queryExecution().executedPlan().toString()
+        plan = over._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" not in plan
 
 
@@ -286,7 +288,7 @@ def test_mapside_empty_node_table_returns_empty(spark):
         [], "id BIGINT, lon DOUBLE, lat DOUBLE, tags MAP<STRING,STRING>"
     )
     ways = synthetic_ways(spark, SF_SMALL)
-    assert assemble_ways_mapside(nodes, ways, max_broadcast_nodes=None).count() == 0
+    assert assemble_ways_mapside(nodes, ways).count() == 0
 
 
 def test_rule_sql_escapes_quotes(spark):

@@ -146,7 +146,7 @@ def test_auto_strategy_selection(spark):
 
 def test_pip_auto_broadcast_selection(spark, monkeypatch):
     """pip_join's default must auto-broadcast small polygon sets and
-    switch the rings onto the join rows above the vertex budget
+    switch the rings onto the join rows above the broadcast budget
     (both paths produce identical rows)."""
     from parity import canon_rows
 
@@ -160,11 +160,56 @@ def test_pip_auto_broadcast_selection(spark, monkeypatch):
     auto = pip_join(imgs, rects, ("image_id",), ("rect_id", "layer"))
     rows_auto = canon_rows(auto.toPandas())
     # above-budget: no broadcast hint, the rings ride the join rows
-    from osm2shp_spark.operators import spatial
+    from osm2shp_spark.operators import _budget
 
-    monkeypatch.setattr(spatial, "MAX_BROADCAST_VERTICES", 0)
+    monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 0)
     riding = pip_join(imgs, rects, ("image_id",), ("rect_id", "layer"))
     assert canon_rows(riding.toPandas()) == rows_auto
+
+
+def test_broadcast_budget_selects_both_sides(spark, monkeypatch):
+    """Every budgeted selector shows its broadcast-side marker in the
+    plan at the default budget and loses it at a zero budget: the PIP
+    joins' BroadcastExchange (with the planner's own broadcast turned
+    off), the numpy MapInPandas pass of kNN, cosine top-k and the
+    map-side assembly."""
+    from osm2shp_spark.operators import _budget
+    from osm2shp_spark.operators.assemble import assemble_ways_mapside
+    from osm2shp_spark.operators.similarity import cosine_topk
+    from osm2shp_spark.operators.spatial import knn_join_auto, pip_join_s2
+
+    imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
+    rects = synthetic_rects(spark, SF_SMALL).select(
+        "rect_id",
+        "layer",
+        F.array("lon_min", "lon_max", "lon_max", "lon_min", "lon_min").alias("lons"),
+        F.array("lat_min", "lat_min", "lat_max", "lat_max", "lat_min").alias("lats"),
+    )
+    nodes = synthetic_nodes(spark, SF_SMALL)
+    ways = synthetic_ways(spark, SF_SMALL)
+    feats = nodes.filter("id > 0").selectExpr("id AS node_id", "lon", "lat")
+    register_driver_tables(spark, SF_SMALL)
+    emb = spark.table("embeddings")
+    cases = [
+        ("BroadcastExchange",
+         lambda: pip_join(imgs, rects, ("image_id",), ("rect_id", "layer"))),
+        ("BroadcastExchange",
+         lambda: pip_join_s2(imgs, rects, ("image_id",), ("rect_id", "layer"))),
+        ("MapInPandas", lambda: knn_join_auto(imgs, feats, k=3)),
+        ("MapInPandas",
+         lambda: cosine_topk(emb, emb.filter("vec_id % 50 = 0"), k=5)),
+        ("MapInPandas", lambda: assemble_ways_mapside(nodes, ways)),
+    ]
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for marker, build in cases:
+            assert marker in _plan(build())
+            monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 0)
+            assert marker not in _plan(build())
+            monkeypatch.undo()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_way_assembly_salted_plan_is_two_stage(spark):

@@ -102,14 +102,18 @@ def test_knn_summary_cache_bounded_across_calls(spark):
     assert canon_rows(first.toPandas()) == expect
 
 
-def test_knn_oversize_fallback_never_broadcasts_features(spark):
-    """r6 (VERDICT r5 #1): when the feature table is over the broadcast
-    budget, the brute fallback must resolve stragglers by iterative
-    tile-ring expansion — no BroadcastExchange of the feature side in
-    the very regime where the planner refused to broadcast it. A tiny
-    tile size forces most points through the fallback, so the ring
-    path actually runs (multiple widening rounds), and the rows must
-    equal the in-budget broadcast fallback's bit for bit."""
+def test_knn_oversize_fallback_never_broadcasts_features(spark, monkeypatch):
+    """When the feature table is over the broadcast budget, the brute
+    fallback must resolve stragglers by iterative tile-ring expansion —
+    no BroadcastExchange of the feature side in the very regime where
+    the planner refused to broadcast it — both from knn_join directly
+    and from knn_join_auto's over-budget route. A tiny tile size forces
+    most points through the fallback, so the ring path actually runs
+    (multiple widening rounds), and the rows must equal the in-budget
+    broadcast fallback's bit for bit."""
+    from osm2shp_spark.operators import _budget
+    from osm2shp_spark.operators.spatial import knn_join_auto
+
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
@@ -117,17 +121,29 @@ def test_knn_oversize_fallback_never_broadcasts_features(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        over = knn_join(
-            imgs, nodes, k=2, tile_size=0.001, max_broadcast_features=10
-        )
-        plan = over._jdf.queryExecution().explainString(
-            over._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "BroadcastExchange" not in plan
+        # 50 features x 24 B are far over a 10-byte budget
+        monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 10)
+        overs = [
+            knn_join(imgs, nodes, k=2, tile_size=0.001),
+            knn_join_auto(imgs, nodes, k=2, tile_size=0.001),
+        ]
+        monkeypatch.undo()
         under = knn_join(imgs, nodes, k=2, tile_size=0.001)
-        assert canon_rows(over.toPandas()) == canon_rows(under.toPandas())
+
+        def plan(df):
+            return df._jdf.queryExecution().explainString(
+                df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
+            )
+
+        # in budget, the stragglers' fallback broadcasts the features;
+        # over budget, the same stragglers go through ring expansion
+        assert "BroadcastExchange" in plan(under)
+        for over in overs:
+            assert "BroadcastExchange" not in plan(over)
+            assert "MapInPandas" not in plan(over)
+            assert canon_rows(over.toPandas()) == canon_rows(under.toPandas())
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -173,17 +189,20 @@ def test_knn_auto_empty_features_matches_shuffle(spark):
     assert list(auto.columns) == list(shuffle.columns)
 
 
-def test_knn_broadcast_oversize_falls_back_to_shuffle(spark):
+def test_knn_broadcast_oversize_falls_back_to_shuffle(spark, monkeypatch):
     """knn_join_auto must guard its broadcast path's driver collect:
-    above the feature budget it routes to the shuffle knn_join
+    above the broadcast budget it routes to the shuffle knn_join
     (identical rows) instead of toPandas()-ing an unbounded table."""
+    from osm2shp_spark.operators import _budget
     from osm2shp_spark.operators.spatial import knn_join_auto
 
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
     ).limit(50)
-    over = knn_join_auto(imgs, nodes, k=2, max_broadcast_features=10)
+    monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 10)
+    over = knn_join_auto(imgs, nodes, k=2)
+    monkeypatch.undo()
     under = knn_join_auto(imgs, nodes, k=2)
     # the oversize call must NOT be the mapInPandas broadcast plan
     plan = over._jdf.queryExecution().explainString(
@@ -230,13 +249,13 @@ def test_pip_s2_equals_flat_grid(spark, monkeypatch):
     """The S2-covering prefilter path must produce exactly the
     flat-grid path's rows (same exact refine, different superset
     prefilter) — on axis-aligned rects (strict-bbox branch), on
-    diamonds (PNPOLY branch), above the broadcast vertex budget, and
-    on an empty polygon table."""
+    diamonds (PNPOLY branch), above the broadcast budget, and on an
+    empty polygon table."""
     from pyspark.sql import functions as F
 
     from parity import canon_rows
 
-    from osm2shp_spark.operators import spatial
+    from osm2shp_spark.operators import _budget
     from osm2shp_spark.operators.spatial import pip_join, pip_join_s2
     from osm2shp_spark.sources.synthetic import synthetic_images, synthetic_rects
     from conftest import SF_SMALL
@@ -268,8 +287,8 @@ def test_pip_s2_equals_flat_grid(spark, monkeypatch):
     d, e = both(diamonds)
     assert d == e and len(d) > 0
     assert both(rects.limit(0)) == ([], [])
-    # rings ride the join rows (above the broadcast vertex budget): same rows
-    monkeypatch.setattr(spatial, "MAX_BROADCAST_VERTICES", 0)
+    # rings ride the join rows (above the broadcast budget): same rows
+    monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 0)
     assert canon_rows(
         pip_join_s2(imgs, rects, ("image_id",), ("rect_id", "layer")).toPandas()
     ) == a

@@ -240,22 +240,26 @@ def test_stratified_sample_negative_keys_respect_quota(spark):
     assert key(got) == key(want)
 
 
-def test_cosine_topk_numpy_path_bit_identical_to_sql(spark):
-    """r6: the broadcast-numpy cosine scorer must reproduce the SQL
-    fold path bit for bit — same cosines (IEEE order preserved), same
+def test_cosine_topk_numpy_path_bit_identical_to_sql(spark, monkeypatch):
+    """The broadcast-numpy cosine scorer must reproduce the SQL fold
+    path bit for bit — same cosines (IEEE order preserved), same
     tie-breaks, NULL for zero-norm vectors — including a corpus with
     exact-duplicate vectors (cosine ties at the top-k boundary) and an
-    all-zero vector."""
+    all-zero vector. A zero broadcast budget forces the SQL path; the
+    strategy choice is made at call time, so the built plan keeps it."""
     import pandas as pd
 
+    from osm2shp_spark.operators import _budget
     from osm2shp_spark.sources.tables import register_driver_tables
 
     register_driver_tables(spark, SF_SMALL)
     emb = spark.table("embeddings")
     probes = emb.filter("vec_id % 50 = 0")
+    monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 0)
+    sql = cosine_topk(emb, probes, k=5)
+    monkeypatch.undo()
     a = (
-        cosine_topk(emb, probes, k=5, max_broadcast_probes=None)
-        .toPandas()
+        sql.toPandas()
         .sort_values(["probe_id", "rank"])
         .reset_index(drop=True)
     )
@@ -278,9 +282,11 @@ def test_cosine_topk_numpy_path_bit_identical_to_sql(spark):
     rows.append((vid, [0.0, 0.0, 0.0, 0.0]))  # zero-norm -> NULL cosine
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     pr = df.filter("vec_id in (0, 3, 11)")
+    monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 0)
+    sql = cosine_topk(df, pr, k=4)
+    monkeypatch.undo()
     x = (
-        cosine_topk(df, pr, k=4, max_broadcast_probes=None)
-        .toPandas()
+        sql.toPandas()
         .sort_values(["probe_id", "rank"])
         .reset_index(drop=True)
     )
