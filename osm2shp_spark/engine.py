@@ -57,11 +57,11 @@ def _export_stage(
     """Write one layer-partitioned output and return its row count
     WITHOUT a dedicated post-write ``count()`` rescan (at 100 TB those
     are real jobs): with lineage on, the count is the sum of the
-    manifest's per-partition ``row_count`` rows (the digest pass reads
-    the written data once anyway — that scan is the lineage feature,
-    not overhead — and the manifest itself is tiny); with lineage off,
-    an ``Observation`` rides the write job itself, so the write is the
-    only job touching the data."""
+    manifest's per-partition ``row_count`` rows (the digest pass, one
+    native aggregate, reads the written data once anyway — that scan is
+    the lineage feature, not overhead — and the manifest itself is
+    tiny); with lineage off, an ``Observation`` rides the write job
+    itself, so the write is the only job touching the data."""
     if with_lineage:
         write_partitioned(df, path, ["layer"])
         # explicit schema: a zero-row partitioned write leaves only
@@ -70,7 +70,7 @@ def _export_stage(
         # landed (an empty extract is a valid outcome, not an error)
         written = spark.read.schema(df.schema).parquet(path).withColumn(
             # digest partition: layer alone funnels an entire layer's
-            # rows into ONE applyInPandas group (OOM/straggler at
+            # row hashes into ONE collect_list buffer (OOM/straggler at
             # scale); bucketing by the stable leading id column bounds
             # every group while staying deterministic across re-reads
             "part_key",

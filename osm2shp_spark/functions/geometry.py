@@ -11,13 +11,12 @@ per-row Python in the hot path. They cover:
   ``v.generalize method=douglas`` step (reference mapgen.sh:59,68,77,86),
 - snap-to-grid quantization + dedup/degenerate cleaning — parity with
   ``v.clean snap,break,rmdupl`` / ``rmline`` (mapgen.sh:60-61,69-70),
-- WKB encoding + SHA-1 digests — content-addressed geometry lineage
-  (WKB per the public OGC SFA spec, little-endian).
+- WKB encoding — content-addressed geometry lineage via the JVM's
+  ``sha1(wkb)`` (WKB per the public OGC SFA spec, little-endian).
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 
 import numpy as np
@@ -198,10 +197,6 @@ def wkb_for(kind: str, lons, lats) -> bytes:
     if kind == "polygon":
         return wkb_polygon(lons, lats)
     return wkb_linestring(lons, lats)
-
-
-def geometry_digest(wkb: bytes) -> str:
-    return hashlib.sha1(wkb).hexdigest()
 
 
 def bbox(lons, lats) -> tuple[float, float, float, float]:

@@ -185,20 +185,11 @@ def wkb_udf(kind: pd.Series, lons: pd.Series, lats: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(T.StringType())
-def geom_digest_udf(kind: pd.Series, lons: pd.Series, lats: pd.Series) -> pd.Series:
-    out = [
-        G.geometry_digest(G.wkb_for(k, lo, la))
-        for k, lo, la in zip(kind, lons, lats)
-    ]
-    return pd.Series(out)
-
-
 def with_geometry_meta(df: DataFrame) -> DataFrame:
     """Add wkb + sha1 digest + bbox columns to an assembled-ways table."""
     return (
         df.withColumn("wkb", wkb_udf("kind", "lons", "lats"))
-        .withColumn("geom_digest", geom_digest_udf("kind", "lons", "lats"))
+        .withColumn("geom_digest", F.sha1("wkb"))
         .withColumn("lon_min", F.array_min("lons"))
         .withColumn("lon_max", F.array_max("lons"))
         .withColumn("lat_min", F.array_min("lats"))

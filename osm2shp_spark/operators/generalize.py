@@ -94,10 +94,10 @@ def dedup_geometries(assembled: DataFrame) -> DataFrame:
     """Drop rows whose geometry digest duplicates an earlier one
     (rmdupl at the dataset level): keep the smallest way_id per digest.
     """
-    from osm2shp_spark.functions.udfs import geom_digest_udf
+    from osm2shp_spark.functions.udfs import wkb_udf
 
     withd = assembled.withColumn(
-        "geom_digest", geom_digest_udf("kind", "lons", "lats")
+        "geom_digest", F.sha1(wkb_udf("kind", "lons", "lats"))
     )
     w_min = withd.groupBy("geom_digest").agg(F.min("way_id").alias("way_id"))
     return withd.join(w_min, ["geom_digest", "way_id"], "left_semi").drop(

@@ -18,18 +18,15 @@ catalog (swap in sources.tables); the layout mirrors Iceberg manifests
 
 from __future__ import annotations
 
-import hashlib
 import os
-import time
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = (
     "snapshot_id STRING, stage STRING, part_key BIGINT, "
-    "row_count BIGINT, digest STRING, wall_time_s DOUBLE"
+    "row_count BIGINT, digest STRING"
 )
 
 
@@ -37,39 +34,25 @@ def partition_lineage(
     df: DataFrame, stage: str, part_col: str, snapshot_id: str | None = None
 ) -> DataFrame:
     """Compute (snapshot_id, stage, part_key, row_count, digest) per
-    value of ``part_col`` — digest is order-insensitive (sum of per-row
-    sha256 prefixes) so it is stable under partition/row reordering.
-    One groupBy shuffle on the partition key; rows hash map-side.
+    value of ``part_col``. Each row hashes map-side to the sha256 of its
+    ``to_json`` form (binary as base64, doubles round-trip, ``-0.0`` and
+    ``NaN`` kept, NULL fields omitted under the fixed schema); a part's
+    digest is the sha256 of its sorted row hashes concatenated, so it is
+    stable under partition/row reordering. One native aggregate, one
+    shuffle on the partition key.
     """
     snapshot_id = snapshot_id or uuid.uuid4().hex
-
-    cols = list(df.columns)
-
-    def _cv(v):
-        # numpy array reprs truncate ("..."): canonicalize to tuples
-        if hasattr(v, "tolist") and not isinstance(v, (str, bytes)):
-            return tuple(v.tolist())
-        return v
-
-    def digest_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        hashes = sorted(
-            hashlib.sha256(("|".join(repr(_cv(v)) for v in row)).encode()).digest()
-            for row in pdf[cols].itertuples(index=False, name=None)
+    row_h = F.sha2(F.to_json(F.struct(*[F.col(c) for c in df.columns])), 256)
+    sorted_h = F.array_sort(F.collect_list("row_h"))
+    per_part = (
+        df.select(
+            F.col(part_col).cast("bigint").alias("part_key"), row_h.alias("row_h")
         )
-        d = hashlib.sha256(b"".join(hashes)).hexdigest()
-        return pd.DataFrame(
-            {
-                "part_key": [pdf[part_col].iloc[0]],
-                "row_count": [len(pdf)],
-                "digest": [d],
-                "wall_time_s": [time.time() - t0],
-            }
+        .groupBy("part_key")
+        .agg(
+            F.count(F.lit(1)).alias("row_count"),
+            F.sha2(F.concat_ws("", sorted_h), 256).alias("digest"),
         )
-
-    per_part = df.groupBy(part_col).applyInPandas(
-        digest_group,
-        schema="part_key BIGINT, row_count BIGINT, digest STRING, wall_time_s DOUBLE",
     )
     return per_part.select(
         F.lit(snapshot_id).alias("snapshot_id"),
@@ -77,7 +60,6 @@ def partition_lineage(
         "part_key",
         "row_count",
         "digest",
-        "wall_time_s",
     )
 
 
@@ -142,28 +124,22 @@ def run_stage_resumable(
     if os.path.isdir(out_dir) and any(
         f.endswith(".parquet") for f in os.listdir(out_dir)
     ):
-        # Short-circuit cheaply (r6, ADVICE r5): compare the DISTINCT
-        # partition keys on disk (a column-pruned partial-agg scan —
-        # parquet reads only the key column's pages) against the
-        # manifest, and only read FULL rows for the orphan keys that
-        # actually need lineage digests. The previous shape anti-joined
-        # whole rows and isEmpty()-scanned the stage's entire
-        # accumulated output on every resume — a full rescan in the
-        # common no-orphan case, at odds with the 100 TB resume story.
+        # Compare the DISTINCT partition keys on disk (a column-pruned
+        # partial-agg scan: parquet reads only the key column's pages)
+        # against the manifest, and read FULL rows only for the orphan
+        # keys. The keys stay a frame: the broadcast semi join bounds
+        # them by the broadcast, not by a driver list inlined in the
+        # plan, and when no key is orphaned adaptive execution drops
+        # the join before any full row is read.
         done = m.completed_keys(stage).withColumnRenamed("part_key", part_col)
-        orphan_keys = [
-            r[0]
-            for r in spark.read.parquet(out_dir)
-            .select(part_col)
+        on_disk = spark.read.parquet(out_dir)
+        orphan_keys = (
+            on_disk.select(part_col)
             .distinct()
             .join(F.broadcast(done), part_col, "left_anti")
-            .collect()
-        ]
-        if orphan_keys:
-            orphans = spark.read.parquet(out_dir).filter(
-                F.col(part_col).isin(orphan_keys)
-            )
-            m.append(partition_lineage(orphans, stage, part_col, snapshot_id))
+        )
+        orphans = on_disk.join(F.broadcast(orphan_keys), part_col, "left_semi")
+        m.append(partition_lineage(orphans, stage, part_col, snapshot_id))
     todo = m.pending(inp, stage, part_col)
     # persist: referenced by isEmpty, the write, and the key collect —
     # one evaluation, and a transform that is not bit-deterministic

@@ -71,6 +71,40 @@ def test_lineage_digest_order_insensitive(spark):
     assert ka.values.tolist() == kb.values.tolist()
 
 
+def test_lineage_digest_sensitive_per_part(spark):
+    """Each one-value edit changes its own part's digest and no other
+    part's: a flipped binary byte, a changed array<bigint> element,
+    empty vs NULL array, 0.0 vs -0.0."""
+    schema = "part_key BIGINT, b BINARY, a ARRAY<BIGINT>, d DOUBLE"
+    blob = bytearray(b"\x01\x02\x03")
+    base = [
+        (k, blob, [] if k == 3 else [k, 7, 9], 0.0 if k == 4 else 1.5)
+        for k in range(5)
+        for _ in range(3)
+    ]
+    # part -> its first row with one value changed
+    edits = {
+        1: (1, bytearray(b"\x01\x82\x03"), [1, 7, 9], 1.5),
+        2: (2, blob, [2, 8, 9], 1.5),
+        3: (3, blob, None, 1.5),
+        4: (4, blob, [4, 7, 9], -0.0),
+    }
+
+    def digests(rows):
+        lin = partition_lineage(
+            spark.createDataFrame(rows, schema), "s", "part_key", snapshot_id="x"
+        ).toPandas()
+        return dict(zip(lin.part_key, zip(lin.row_count, lin.digest)))
+
+    ref = digests(base)
+    assert len(set(ref.values())) == 5
+    for part, row in edits.items():
+        i = next(j for j, r in enumerate(base) if r[0] == part)
+        got = digests(base[:i] + [row] + base[i + 1 :])
+        assert {k for k in ref if got[k] != ref[k]} == {part}
+        assert got[part][0] == ref[part][0] == 3
+
+
 def test_resume_skips_completed_partitions(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     man_dir = str(tmp_path / "manifest")
@@ -139,3 +173,54 @@ def test_resume_heals_unrecorded_partitions_without_duplicates(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() == n  # no duplicate rows
     m = Manifest(spark, man_dir)
     assert m.pending(df, "heal", "part_key").count() == 0  # manifest healed
+
+
+def test_resume_heals_many_orphan_keys_without_key_list(spark, tmp_path, monkeypatch):
+    """6,000 committed but unrecorded partition keys: the heal records
+    every one from disk, re-appends no row, and its plan joins against
+    the key frame instead of inlining a literal key list; once healed,
+    adaptive execution drops the join before any full row is read."""
+    import shutil
+
+    from osm2shp_spark.plans import manifest as M
+
+    out_dir = str(tmp_path / "out")
+    man_dir = str(tmp_path / "manifest")
+    df = (
+        spark.range(12_000)
+        .withColumn("part_key", F.col("id") % 6_000)
+        .withColumn("v", F.col("id") * 2.5)
+    )
+
+    def xform(d):
+        return d.withColumn("w", F.col("v") + 1)
+
+    run_stage_resumable(spark, df, "many", "part_key", xform, out_dir, man_dir)
+    shutil.rmtree(man_dir)
+
+    appended = []
+    append = M.Manifest.append
+
+    def record(self, lineage):
+        appended.append(lineage)
+        append(self, lineage)
+
+    monkeypatch.setattr(M.Manifest, "append", record)
+    r2 = run_stage_resumable(spark, df, "many", "part_key", xform, out_dir, man_dir)
+    assert r2.count() == 0
+    assert spark.read.parquet(out_dir).count() == 12_000
+    healed = Manifest(spark, man_dir).read().toPandas()
+    assert len(healed) == healed.part_key.nunique() == 6_000
+    assert (healed.row_count == 2).all()
+    [heal] = appended
+    plan = heal._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" in plan
+    # a literal list shows as a Filter INSET and a pushed In(part_key, [...])
+    assert "INSET" not in plan and "In(part_key" not in plan
+
+    appended.clear()
+    run_stage_resumable(spark, df, "many", "part_key", xform, out_dir, man_dir)
+    [no_orphans] = appended
+    assert no_orphans.collect() == []
+    final = no_orphans._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert "FileScan" not in final

@@ -212,6 +212,22 @@ def test_broadcast_budget_selects_both_sides(spark, monkeypatch):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_partition_lineage_is_one_native_aggregate(spark):
+    """Lineage digests stay in the JVM: no Python group map or UDF, and
+    exactly one exchange, hash-partitioned on the part key."""
+    from osm2shp_spark.plans.manifest import partition_lineage
+
+    df = synthetic_images(spark, SF_SMALL).withColumn("part_key", F.col("img_key") % 7)
+    lin = partition_lineage(df, "s", "part_key", snapshot_id="x")
+    lin.collect()
+    p = lin._jdf.queryExecution().executedPlan().executedPlan().toString()
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in p
+    exchanges = [ln for ln in p.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1
+    assert "Exchange hashpartitioning(part_key#" in exchanges[0]
+
+
 def test_way_assembly_salted_plan_is_two_stage(spark):
     """The registered mega-way query must actually execute the salted
     two-stage aggregation: the chunk salt key appears in the plan and

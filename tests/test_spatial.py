@@ -3,6 +3,8 @@ polygons, kNN vs brute force with haversine, cell-column plumbing."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -239,9 +241,11 @@ def test_geometry_meta_columns(spark):
     ways = assemble_ways(
         synthetic_nodes(spark, SF_SMALL), synthetic_ways(spark, SF_SMALL)
     )
-    df = with_geometry_meta(ways).limit(50).toPandas()
+    df = with_geometry_meta(ways).toPandas()
     assert df.wkb.map(len).gt(9).all()
     assert df.geom_digest.map(len).eq(40).all()
+    # the JVM sha1 is byte-identical to hashlib over the same WKB
+    assert (df.geom_digest == df.wkb.map(lambda b: hashlib.sha1(b).hexdigest())).all()
     assert (df.lon_min <= df.lon_max).all()
 
 
