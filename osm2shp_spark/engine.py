@@ -116,8 +116,8 @@ def run(
     manifest = Manifest(spark, os.path.join(out_dir, "_manifest"))
 
     # --- ways: assemble + geometry meta + cells --------------------------
-    # strategy auto-selected by size stats (mapside broadcast / salted
-    # mega-way / general Catalyst) — operators/assemble.py; every
+    # strategy auto-selected by size stats (salted mega-way / general
+    # Catalyst) — operators/assemble.py; every
     # assembled geometry carries hex cells res 7-12 + S2 covering
     # tokens (north rule), one Arrow pass each family
     assembled = with_way_cells(

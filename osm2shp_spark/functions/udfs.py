@@ -21,21 +21,11 @@ from osm2shp_spark.functions import hexgrid, s2
 HEX_RESOLUTIONS = (7, 8, 9, 10, 11, 12)
 
 
-def s2_cell_udf(level: int):
+def s2_token_udf(level: int):
     # (lon, lat) argument order, matching every sibling factory in
     # this module — the underlying s2.cell_id takes (lat, lon), and a
     # transposed call is a valid point elsewhere on the globe, so an
     # order mismatch here would fail silently
-    @F.pandas_udf(T.LongType())
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        ids = s2.cell_id(lat.to_numpy(np.float64), lon.to_numpy(np.float64), level)
-        return pd.Series(ids.astype(np.int64))
-
-    return _f
-
-
-def s2_token_udf(level: int):
-    # (lon, lat) — see s2_cell_udf
     @F.pandas_udf(T.StringType())
     def _f(lon: pd.Series, lat: pd.Series) -> pd.Series:
         ids = s2.cell_id(lat.to_numpy(np.float64), lon.to_numpy(np.float64), level)

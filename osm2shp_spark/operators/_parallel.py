@@ -10,11 +10,11 @@ repartition immediately after the read").
 ``ensure_min_parallelism`` is the operator-side guard: identity
 whenever the input already has at least ``defaultParallelism``
 partitions (every production multi-file/multi-row-group layout), a
-cheap round-robin repartition otherwise. Distinct from
-``sources.tables._balance_scan`` (registration-time, fact tables
-only): operators whose per-input-row work is orders of magnitude above
-a scan's apply this regardless of input *size* — a 0.5 MB document
-table still fans out to thousands of shingle-hash rows per document.
+cheap round-robin repartition otherwise. ``sources.tables._balance_scan``
+applies it at registration time to fact-sized tables only; operators
+whose per-input-row work is orders of magnitude above a scan's apply it
+regardless of input *size* — a 0.5 MB document table still fans out to
+thousands of shingle-hash rows per document.
 """
 
 from __future__ import annotations

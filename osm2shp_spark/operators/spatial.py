@@ -19,13 +19,14 @@ Two cell schemes coexist:
 Exactness: PIP refines with the even-odd ray-cast as one JVM filter
 (:func:`pnpoly_sql`, bit-identical to the NumPy reference kernel
 :func:`functions.geometry.points_in_polygon`), shared by the flat-grid
-and S2-covering prefilters (:func:`_pip_refine_join`); kNN is *provably*
-exact — after the 3x3-tile candidate pass, any point that cannot show
-k neighbors inside the guaranteed-covered radius (distance to the
-explored-region boundary) falls back to a full search: broadcast when
-the feature table fits the byte budget (:mod:`._budget`), widening
-super-tile ring joins when it does not (never a full-table broadcast
-in the shuffle regime). The oracle comparison (vs brute force SQL)
+and S2-covering prefilters (:func:`_pip_refine_join`). kNN is
+*provably* exact on both of :func:`knn_join_auto`'s routes: the
+zero-shuffle numpy-bucket pass when the feature table fits the byte
+budget (:mod:`._budget`), else the shuffle :func:`knn_join` — after
+its 3x3-tile candidate pass, any point that cannot show k neighbors
+inside the guaranteed-covered radius (distance to the explored-region
+boundary) falls back to widening super-tile ring joins, never a
+full-table broadcast. The oracle comparison (vs brute force SQL)
 checks this end to end.
 """
 
@@ -419,38 +420,6 @@ def pip_join_s2(
 # N4: exact kNN nearest-feature join
 # ---------------------------------------------------------------------------
 
-def _estimated_plan_bytes(df: DataFrame) -> int:
-    """Catalyst's own size estimate for a plan (the number the planner
-    compares against autoBroadcastJoinThreshold). Driver-side metadata
-    only — no job."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def _autobroadcast_threshold(spark) -> int:
-    """Session autoBroadcastJoinThreshold in bytes (-1 = disabled)."""
-    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
-
-
-def _resolve_tile_window(spark, feats: DataFrame) -> bool:
-    """The knn_join window-spec gate: True (tile-prefixed window, the
-    exchange-reuse spec) exactly when the planner would NOT broadcast
-    the exploded feature side — threshold disabled, or Catalyst's size
-    estimate above it (the planner's own broadcast test).
-
-    The size probe uses classic-only JVM internals (``_jdf``); under
-    Spark Connect they don't exist (AttributeError), so degrade to
-    ``True`` — correct in both regimes (identical results either way;
-    in the broadcast regime the two carried tile ints cost ~10%, vs
-    raising on every Connect call). Only that signature is caught:
-    a real JVM/Py4J failure should surface, not silently flip the
-    plan choice."""
-    try:
-        thresh = _autobroadcast_threshold(spark)
-        return thresh < 0 or _estimated_plan_bytes(feats) > thresh
-    except AttributeError:
-        return True
-
-
 def knn_join(
     points: DataFrame,
     features: DataFrame,
@@ -458,7 +427,6 @@ def knn_join(
     point_id: str = "image_id",
     feature_id: str = "node_id",
     tile_size: float = TILE_SIZE,
-    tile_window: bool | None = None,
 ) -> DataFrame:
     """Exact k nearest features per point → (point_id, rank, feature_id,
     dist2). Local equirectangular metric (see COS_REF), ties broken by
@@ -478,21 +446,13 @@ def knn_join(
     function triggers the candidate join eagerly (the result DataFrame
     then reads the persisted summary).
 
-    ``tile_window``: key the per-point top-k aggregate by
-    ``(tile_x, tile_y, _pid)`` instead of ``_pid``. Identical results —
-    a point sits in exactly one tile, so the groups are the same — but
-    in the shuffle-join regime (planet-scale feature table, no
-    broadcast) HashPartitioning(tile) already satisfies the aggregate's
-    ClusteredDistribution (subset rule) and candidates never leave
-    their join partition (measured 4x at sf0.1 during the r5 rewrite,
-    commit 3cd18e5; plan-asserted in tests/test_spatial.py
-    TestKnnTileWindow). When the feature side broadcasts (the
-    small-dimension regime) the point table is instead pre-partitioned
-    by ``_pid`` so the broadcast join preserves the clustering the
-    aggregate needs — 1x point rows on the wire, nothing post-join.
-    ``None`` auto-picks by comparing Catalyst's size estimate of the
-    exploded feature side against the session broadcast threshold (the
-    planner's own test).
+    The per-point top-k aggregate is keyed by ``(tile_x, tile_y,
+    _pid)`` — the same groups as ``_pid`` alone, since a point sits in
+    exactly one tile — so with the feature side shuffled rather than
+    broadcast, the join's HashPartitioning(tile) already satisfies the
+    aggregate's ClusteredDistribution (subset rule) and candidates
+    never leave their join partition (plan-asserted in
+    tests/test_spatial.py).
     """
     # the ±1-tile neighborhood explode rides the FEATURE side: a
     # feature in tile t is a candidate for points in t's 3x3 ring ⟺
@@ -520,8 +480,6 @@ def knn_join(
         "tile_y",
     )
     d2 = dist2_expr("_plon", "_plat", "_flon", "_flat")
-    if tile_window is None:
-        tile_window = _resolve_tile_window(points.sparkSession, feats)
     # Per-point top-k as an AGGREGATE (slice(array_sort(collect_list)))
     # instead of a row_number window. Equivalent ordering — array_sort
     # on struct(dist2, _fid) is the same (dist2 ASC, _fid ASC) total
@@ -531,29 +489,13 @@ def knn_join(
     # Spark 4's WindowGroupLimit(Partial) can truncate it; the agg
     # path replaces that one big row sort with a codegen'd array_sort
     # per point (~ring-count elements each). Measured at sf0.1
-    # local[32] during the r5 rewrite (commit 3cd18e5): topk-stage
-    # shuffle regime 5.56s -> 1.36s, broadcast regime 8.09s -> 2.04s.
+    # local[32] during the r5 rewrite (commit 3cd18e5): topk stage
+    # 5.56s -> 1.36s with the shuffle join.
     #
-    # Exchange accounting per regime (the 100 TB story):
-    # - shuffle regime (tile_window=True): groupBy(tile_x, tile_y,
-    #   _pid) reuses the join's HashPartitioning(tile) via the subset
-    #   rule — candidates NEVER cross the wire (plan-asserted in
-    #   tests/test_spatial.py TestKnnTileWindow), only the k survivors
-    #   per point move on.
-    # - broadcast regime: repartition the POINT table by _pid before
-    #   the join (1x point rows on the wire — less than the window
-    #   path's truncated candidate exchange) so the broadcast join
-    #   preserves HashPartitioning(_pid) and the agg needs no
-    #   post-join exchange either.
-    # - BOTH regimes scan the point table exactly once: the tile join
-    #   is LEFT outer, so zero-candidate points reach the persisted
-    #   topk summary and the brute-fallback set is read off that
-    #   summary instead of a second full-table anti-join scan.
-    if tile_window:
-        cand_src, agg_keys = pts, ["tile_x", "tile_y", "_pid"]
-    else:
-        cand_src, agg_keys = pts.repartition("_pid"), ["_pid"]
-    cand_keys = ["tile_x", "tile_y"] if tile_window else []
+    # Exchange accounting (the 100 TB story): groupBy(tile_x, tile_y,
+    # _pid) reuses the join's HashPartitioning(tile) via the subset
+    # rule — candidates NEVER cross the wire, only the k survivors per
+    # point move on.
     # guaranteed covered radius: one tile in every direction; lon tiles
     # shrink by COS_REF in the scaled metric
     rho2 = (tile_size * COS_REF) ** 2
@@ -570,18 +512,18 @@ def knn_join(
     # the fallback — so dropping them here is result-identical and
     # starves the aggregate of ~3/4 of its input (measured sf0.1:
     # 8.67M -> 2.12M candidate rows).
-    p, f = cand_src.alias("p"), feats.alias("f")
+    p, f = pts.alias("p"), feats.alias("f")
     cond = (
         (F.col("p.tile_x") == F.col("f.tile_x"))
         & (F.col("p.tile_y") == F.col("f.tile_y"))
         & (F.expr(d2) <= F.lit(rho2))
     )
     cand = p.join(f, cond, "left").select(
-        *[F.col(f"p.{c}").alias(c) for c in cand_keys],
+        F.col("p.tile_x").alias("tile_x"), F.col("p.tile_y").alias("tile_y"),
         "_pid", "_plon", "_plat", "_fid", F.expr(d2).alias("dist2"),
     )
     topk = (
-        cand.groupBy(*agg_keys)
+        cand.groupBy("tile_x", "tile_y", "_pid")
         .agg(
             # when() guards the null-candidate rows of the left join:
             # when -> NULL entries, which collect_list skips
@@ -1065,12 +1007,12 @@ def knn_join_adaptive(
     base_tile_size: float = TILE_SIZE,
     hot_threshold: int = 50_000,
 ) -> DataFrame:
-    """:func:`knn_join` with the tile size chosen by
+    """:func:`knn_join_auto` with the tile size chosen by
     :func:`auto_tile_size` from the feature density histogram (dense
     urban cells → finer prefilter grid). Bit-identical results at any
     tile size; only the candidate economics change."""
     ts = auto_tile_size(features, base_tile_size, hot_threshold)
-    return knn_join(points, features, k, point_id, feature_id, ts)
+    return knn_join_auto(points, features, k, point_id, feature_id, ts)
 
 
 # ---------------------------------------------------------------------------

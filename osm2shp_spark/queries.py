@@ -20,7 +20,6 @@ from osm2shp_spark.operators.assemble import assemble_ways, assembly_counters
 from osm2shp_spark.operators.classify import classify_nodes
 from osm2shp_spark.operators.spatial import (
     dist2_expr,
-    knn_join,
     pip_join,
     tile_expr,
     tile_vector_stats,
@@ -218,23 +217,31 @@ SELECT 'mapside' AS strategy, t.* FROM ({_WAY_ASSEMBLY_ORACLE}) t
 
 @register("way_assembly_strategies", _way_strategies_oracle)
 def q_way_assembly_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both alternative physical assembly strategies in ONE gate row
-    (the driver records at most 50 registry entries, so intra-family
-    variants share a row — each side still executes its full plan and
-    is value-checked against its own path-independent SQL):
+    """Both ``assemble_ways_auto`` routes in ONE gate row (the driver
+    records at most 50 registry entries, so intra-family variants share
+    a row — each side still executes its full plan and is value-checked
+    against its own path-independent SQL):
 
-    - ``salted``: mega-way input routed by ``assemble_ways_auto`` onto
-      the two-stage salted plan (bounded reducer keys);
-    - ``mapside``: zero-shuffle broadcast-numpy assembly on the
-      standard input.
+    - ``salted``: mega-way input routed onto the two-stage salted plan
+      (bounded reducer keys);
+    - ``mapside``: the standard input, routed onto the Catalyst join
+      with the smallint ``compact_pos`` exchange — the call
+      ``engine.run`` makes. The label names a map-side broadcast
+      assembly that has since been deleted; it stays because it is
+      part of the oracle SQL text.
     """
+    from osm2shp_spark.operators.assemble import assemble_ways_auto
+
     salted = q_way_assembly_salted(spark, sf_dir).select(
         F.lit("salted").alias("strategy"), "*"
     )
-    mapside = q_way_assembly_mapside(spark, sf_dir).select(
-        F.lit("mapside").alias("strategy"), "*"
-    )
-    return salted.unionByName(mapside)
+    auto = _assembly_scalar_projection(
+        assemble_ways_auto(
+            synthetic_nodes(spark, sf_dir), synthetic_ways(spark, sf_dir),
+            defer_filters=True,
+        )
+    ).select(F.lit("mapside").alias("strategy"), "*")
+    return salted.unionByName(auto)
 
 
 @register("resumable_node_export", lambda: _NODE_EXPORT_ORACLE)
@@ -642,15 +649,14 @@ SELECT image_id, "rank", node_id, dist2 FROM r WHERE "rank" <= 3
 def q_knn_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-NN nearest named place per image point, checked against
     the SQL brute force — through the production strategy selector
-    (r6, guide §3.1: broadcast the side that fits, deliberately): the
-    named-place dimension table is far under the broadcast budget at
-    every sandbox scale, so the selector picks the zero-shuffle
-    numpy-bucket path; when the features' bytes exceed the broadcast
-    budget (``operators._budget``) it routes to the shuffle tile-join
-    path, which stays driver-gated via ``knn_places_strategies``
-    (adaptive variant) and oversize-tested in tests/test_spatial.py. Both paths are bit-identical by
-    construction (same IEEE distance arithmetic, same (dist2, id)
-    tie-break), so the oracle hash is strategy-independent."""
+    ``knn_join_auto`` (guide §3.1: broadcast the side that fits,
+    deliberately). The named-place dimension table is far under the
+    broadcast budget at every fixture scale, so the selector picks the
+    zero-shuffle numpy-bucket path. Its over-budget route, the shuffle
+    tile-join ``knn_join``, never runs in the gate: pytest alone covers
+    it (tests/test_spatial.py). Both paths are bit-identical by construction (same IEEE
+    distance arithmetic, same (dist2, id) tie-break), so the oracle
+    hash is strategy-independent."""
     from osm2shp_spark.operators.spatial import knn_join_auto
 
     imgs = synthetic_images(spark, sf_dir).select("image_id", "lon", "lat")
@@ -663,10 +669,12 @@ def q_knn_places(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_places_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N6 adaptive path through the gate: the density histogram picks
     the prefilter tile size (dense hot cluster in the fixture → finer
-    grid), then the same provably-exact kNN. Same oracle as knn_places
-    — exactness is tile-size independent by construction, so a
-    histogram/threshold bug that broke candidate completeness breaks
-    the value hash. Gated via ``knn_places_strategies``."""
+    grid), then ``knn_join_auto`` at that tile size — on the fixture
+    the broadcast numpy-bucket path, like ``knn_places``. Same oracle
+    as knn_places — exactness is tile-size independent by
+    construction, so a histogram/threshold bug that broke candidate
+    completeness breaks the value hash. The shuffle ``knn_join`` is
+    covered by pytest only. Gated via ``knn_places_strategies``."""
     from osm2shp_spark.operators.spatial import knn_join_adaptive
 
     imgs = synthetic_images(spark, sf_dir).select("image_id", "lon", "lat")
@@ -685,11 +693,11 @@ SELECT 'adaptive' AS strategy, t.* FROM ({_KNN_ORACLE}) t
 
 @register("knn_places_strategies", _KNN_STRATEGIES_ORACLE)
 def q_knn_places_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both alternative kNN physical strategies in ONE gate row (driver
-    50-entry window; see way_assembly_strategies). Each side runs its
-    full plan — the zero-shuffle broadcast-numpy path (the one
-    ``knn_places``' selector takes on the fixture) and the
-    density-histogram adaptive-tile path — and both must reproduce the
+    """Both kNN selector entry points in ONE gate row (driver 50-entry
+    window; see way_assembly_strategies). Each side runs its full plan
+    — the zero-shuffle broadcast-numpy path at the default tile size
+    (``knn_places``) and at the density-histogram tile size
+    (``knn_places_adaptive``) — and both must reproduce the
     brute-force SQL result bit-for-bit."""
     bcast = q_knn_places(spark, sf_dir).select(
         F.lit("broadcast").alias("strategy"), "*"
@@ -698,24 +706,6 @@ def q_knn_places_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("adaptive").alias("strategy"), "*"
     )
     return bcast.unionByName(adapt)
-
-
-def q_way_assembly_mapside(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle assembly path through the gate: staged nodes
-    broadcast as three numpy arrays, one mapInPandas pass does the
-    ref lookup + ordered assembly + all-or-nothing rule in place (no
-    explode, no join shuffle, no groupBy). Same path-independent
-    oracle as way_assembly — the searchsorted lookup, positional
-    fan-out and integrity drop must reproduce the Catalyst plan's
-    rows exactly. Gated via ``way_assembly_strategies``."""
-    from osm2shp_spark.operators.assemble import assemble_ways_mapside
-
-    nodes = synthetic_nodes(spark, sf_dir)
-    ways = synthetic_ways(spark, sf_dir)
-    # the broadcast-budget guard adds one pass over the node generation
-    return _assembly_scalar_projection(
-        assemble_ways_mapside(nodes, ways, defer_filters=True)
-    )
 
 
 _TILE_JOIN_ORACLE = f"""

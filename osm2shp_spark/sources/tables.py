@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from osm2shp_spark.operators._parallel import ensure_min_parallelism
+
 #: Driver-provided relational tables (TESTDATA.md).
 DRIVER_TABLES = (
     "region",
@@ -47,42 +49,25 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 MIN_BALANCE_BYTES = 32 * 1024 * 1024
 
 
-def _balance_scan(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    min_bytes: int | None = None,
-) -> DataFrame:
+def _balance_scan(df: DataFrame, path: str) -> DataFrame:
     """Give a fact-table view real scan-stage parallelism.
 
     The driver parquet files are written as ONE row group each, and a
     Parquet scan cannot split below row-group granularity — so every
     expression/partial-aggregate fused into a scan stage runs on one
     core regardless of cluster width (measured: way_assembly's map
-    stage 2.8 s CPU in 1 of 32 slots). A round-robin
-    ``repartition(defaultParallelism)`` right after the read spreads
-    that work; the exchange moves only the table's raw bytes once.
-
-    Scale-adaptive by construction: when the scan already yields at
-    least ``defaultParallelism`` splits (any real multi-row-group /
-    multi-file table, i.e. every production layout), this is the
-    identity — no exchange is added at 100 TB. Guarded further by
-    :data:`MIN_BALANCE_BYTES` so dimension tables skip it, and by a
-    try/except so Spark Connect sessions (no RDD access) fall back to
-    the raw scan.
+    stage 2.8 s CPU in 1 of 32 slots). Tables of at least
+    :data:`MIN_BALANCE_BYTES` go through
+    :func:`~osm2shp_spark.operators._parallel.ensure_min_parallelism`
+    (``df`` is a fresh scan, its precondition): a round-robin
+    repartition to ``defaultParallelism`` when the scan yields fewer
+    splits, the identity when it already yields enough (every
+    production multi-row-group / multi-file layout) or under Spark
+    Connect. Dimension tables stay as they are.
     """
-    if _input_bytes(path) < (
-        MIN_BALANCE_BYTES if min_bytes is None else min_bytes
-    ):
+    if _input_bytes(path) < MIN_BALANCE_BYTES:
         return df
-    try:
-        parts = df.rdd.getNumPartitions()
-        cores = spark.sparkContext.defaultParallelism
-    except Exception:
-        return df
-    if parts >= cores:
-        return df
-    return df.repartition(cores)
+    return ensure_min_parallelism(df)
 
 
 def _input_bytes(path: str) -> int:
@@ -140,7 +125,7 @@ def register_driver_tables(spark: SparkSession, sf_dir: str) -> None:
         if not os.path.exists(path):
             raise FileNotFoundError(f"driver table missing: {path}")
         df = read_table(spark, sf_dir, name)
-        _balance_scan(spark, df, path).createOrReplaceTempView(name)
+        _balance_scan(df, path).createOrReplaceTempView(name)
     _CURRENT_SF[sid] = sf_dir
 
 

@@ -122,24 +122,29 @@ def test_way_assembly_min_vertex_filter_before_join(spark):
     assert "CASE WHEN" in p  # layer/kind classification stayed in plan
 
 
-def test_auto_strategy_selection(spark):
+def test_auto_strategy_selection(spark, monkeypatch):
     """The size-estimate auto-selectors must pick the documented paths,
     read off the physical plan: salted assembly carries the chunk salt
-    key, broadcast kNN is the numpy MapInPandas pass."""
-    from osm2shp_spark.operators.assemble import assemble_ways_auto
-    from osm2shp_spark.operators.spatial import knn_join_auto
+    key, broadcast kNN is the numpy MapInPandas pass — also from the
+    adaptive-tile entry point."""
+    from osm2shp_spark.operators import assemble
+    from osm2shp_spark.operators.spatial import knn_join_adaptive, knn_join_auto
 
     nodes = synthetic_nodes(spark, SF_SMALL)
     ways = synthetic_ways(spark, SF_SMALL)
     # default: the Catalyst general path (no salt key, no numpy pass)
-    p = _plan(assemble_ways_auto(nodes, ways))
+    p = _plan(assemble.assemble_ways_auto(nodes, ways))
     assert "chunk_id" not in p and "MapInPandas" not in p
     # mega-way threshold trips -> salted
-    assert "chunk_id" in _plan(assemble_ways_auto(nodes, ways, mega_threshold=2))
+    monkeypatch.setattr(assemble, "MEGA_WAY_THRESHOLD", 2)
+    assert "chunk_id" in _plan(assemble.assemble_ways_auto(nodes, ways))
     # small feature table -> zero-shuffle broadcast kNN
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     feats = nodes.filter("id > 0").selectExpr("id AS node_id", "lon", "lat")
     assert "MapInPandas" in _plan(knn_join_auto(imgs, feats, k=3))
+    assert "MapInPandas" in _plan(
+        knn_join_adaptive(imgs, feats, k=3, hot_threshold=5)
+    )
     # (over budget -> shuffle tile join: tests/test_spatial.py
     # test_knn_broadcast_oversize_falls_back_to_shuffle)
 
@@ -171,10 +176,8 @@ def test_broadcast_budget_selects_both_sides(spark, monkeypatch):
     """Every budgeted selector shows its broadcast-side marker in the
     plan at the default budget and loses it at a zero budget: the PIP
     joins' BroadcastExchange (with the planner's own broadcast turned
-    off), the numpy MapInPandas pass of kNN, cosine top-k and the
-    map-side assembly."""
+    off) and the numpy MapInPandas pass of kNN and cosine top-k."""
     from osm2shp_spark.operators import _budget
-    from osm2shp_spark.operators.assemble import assemble_ways_mapside
     from osm2shp_spark.operators.similarity import cosine_topk
     from osm2shp_spark.operators.spatial import knn_join_auto, pip_join_s2
 
@@ -185,9 +188,9 @@ def test_broadcast_budget_selects_both_sides(spark, monkeypatch):
         F.array("lon_min", "lon_max", "lon_max", "lon_min", "lon_min").alias("lons"),
         F.array("lat_min", "lat_min", "lat_max", "lat_max", "lat_min").alias("lats"),
     )
-    nodes = synthetic_nodes(spark, SF_SMALL)
-    ways = synthetic_ways(spark, SF_SMALL)
-    feats = nodes.filter("id > 0").selectExpr("id AS node_id", "lon", "lat")
+    feats = synthetic_nodes(spark, SF_SMALL).filter("id > 0").selectExpr(
+        "id AS node_id", "lon", "lat"
+    )
     register_driver_tables(spark, SF_SMALL)
     emb = spark.table("embeddings")
     cases = [
@@ -198,7 +201,6 @@ def test_broadcast_budget_selects_both_sides(spark, monkeypatch):
         ("MapInPandas", lambda: knn_join_auto(imgs, feats, k=3)),
         ("MapInPandas",
          lambda: cosine_topk(emb, emb.filter("vec_id % 50 = 0"), k=5)),
-        ("MapInPandas", lambda: assemble_ways_mapside(nodes, ways)),
     ]
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -139,9 +139,7 @@ def test_knn_oversize_fallback_never_broadcasts_features(spark, monkeypatch):
                 )
             )
 
-        # in budget, the stragglers' fallback broadcasts the features;
-        # over budget, the same stragglers go through ring expansion
-        assert "BroadcastExchange" in plan(under)
+        # over budget, the stragglers go through ring expansion
         for over in overs:
             assert "BroadcastExchange" not in plan(over)
             assert "MapInPandas" not in plan(over)
@@ -393,9 +391,9 @@ def test_pnpoly_sql_bit_parity_randomized(spark):
 
 
 class TestKnnTileWindow:
-    """The exchange-reuse window spec (tile_window) must be invisible in
-    results and visible in the plan (one fewer Exchange in the shuffle-
-    join regime)."""
+    """knn_join's tile-keyed top-k aggregate must reuse the shuffle
+    join's partitioning: no Exchange between the join and the
+    aggregate."""
 
     def _inputs(self, spark):
         imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
@@ -406,23 +404,6 @@ class TestKnnTileWindow:
             .limit(200)
         )
         return imgs, nodes
-
-    def test_tile_window_results_identical(self, spark):
-        imgs, nodes = self._inputs(spark)
-        a = knn_join(imgs, nodes, k=2, tile_window=True).toPandas()
-        b = knn_join(imgs, nodes, k=2, tile_window=False).toPandas()
-        assert canon_rows(a) == canon_rows(b)
-
-    def test_tile_window_results_identical_shuffle_regime(self, spark):
-        imgs, nodes = self._inputs(spark)
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            a = knn_join(imgs, nodes, k=2, tile_window=True).toPandas()
-            b = knn_join(imgs, nodes, k=2, tile_window=False).toPandas()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        assert canon_rows(a) == canon_rows(b)
 
     def test_tile_window_drops_an_exchange(self, spark, monkeypatch):
         """With broadcast disabled, HashPartitioning(tile) satisfies the
@@ -454,8 +435,7 @@ class TestKnnTileWindow:
             )
 
         try:
-            pa = simple_plan(knn_join(imgs, nodes, k=2, tile_window=True))
-            pb = simple_plan(knn_join(imgs, nodes, k=2, tile_window=False))
+            pa = simple_plan(knn_join(imgs, nodes, k=2))
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -485,27 +465,5 @@ class TestKnnTileWindow:
             return any(hits)
 
         # tile-keyed aggregate rides the join's HashPartitioning(tile):
-        # the full-candidate-set exchange must be gone ...
+        # the full-candidate-set exchange must be gone
         assert not exchange_under_topk_agg(pa, "tile_x")
-        # ... while the bare-_pid aggregate under a forced shuffle join
-        # re-shuffles every candidate row (the config the gate avoids)
-        assert exchange_under_topk_agg(pb, "_pid")
-
-    def test_auto_gate_follows_broadcast_decision(self, spark):
-        from osm2shp_spark.operators.spatial import (
-            _resolve_tile_window,
-            with_tiles,
-        )
-
-        imgs, nodes = self._inputs(spark)
-        feats = with_tiles(nodes).select("node_id", "lon", "lat", "tile_x", "tile_y")
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            assert _resolve_tile_window(spark, feats) is True
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
-            assert _resolve_tile_window(spark, feats) is True
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "8GB")
-            assert _resolve_tile_window(spark, feats) is False
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

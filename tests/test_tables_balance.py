@@ -14,7 +14,8 @@ import os
 
 import pytest
 
-from osm2shp_spark.sources.tables import MIN_BALANCE_BYTES, _balance_scan
+from osm2shp_spark.sources import tables
+from osm2shp_spark.sources.tables import _balance_scan
 
 
 def _write_single_rowgroup(tmp_path, rows: int) -> str:
@@ -34,11 +35,12 @@ def _write_single_rowgroup(tmp_path, rows: int) -> str:
     return path
 
 
-def test_fact_table_balances_to_default_parallelism(spark, tmp_path):
+def test_fact_table_balances_to_default_parallelism(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tables, "MIN_BALANCE_BYTES", 1024)
     path = _write_single_rowgroup(str(tmp_path), 120_000)
     df = spark.read.parquet(path)
     assert df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    out = _balance_scan(spark, df, path, min_bytes=1024)
+    out = _balance_scan(df, path)
     assert (
         out.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
     )
@@ -50,11 +52,11 @@ def test_fact_table_balances_to_default_parallelism(spark, tmp_path):
 def test_dimension_table_left_alone(spark, tmp_path):
     path = _write_single_rowgroup(str(tmp_path), 100)
     df = spark.read.parquet(path)
-    out = _balance_scan(spark, df, path)  # default threshold: identity
+    out = _balance_scan(df, path)  # default threshold: identity
     assert out is df  # identity — no exchange added
 
 
-def test_wide_scan_left_alone(spark, tmp_path):
+def test_wide_scan_left_alone(spark, tmp_path, monkeypatch):
     # a scan that already yields >= defaultParallelism splits must not
     # pay an extra exchange (the 100 TB layout: many files/row groups)
     import pyarrow as pa
@@ -75,5 +77,6 @@ def test_wide_scan_left_alone(spark, tmp_path):
     df = spark.read.parquet(d)
     if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
         pytest.skip("layout did not produce enough splits on this box")
-    out = _balance_scan(spark, df, d, min_bytes=1024)
+    monkeypatch.setattr(tables, "MIN_BALANCE_BYTES", 1024)
+    out = _balance_scan(df, d)
     assert out is df
