@@ -1,27 +1,22 @@
-"""Pure-NumPy geometry kernels (no shapely/pyproj in this environment).
-
-These run inside Arrow-vectorized pandas UDFs / applyInPandas — never
-per-row Python in the hot path. They cover:
+"""Pure-NumPy geometry kernels (no shapely/pyproj in this environment),
+called per geometry from ``mapInPandas`` / ``applyInPandas`` groups and
+as test references. They cover:
 
 - exact point-in-polygon (ray casting) — the reference kernel the N3
   spatial join's SQL refine (``operators.spatial.pnpoly_sql``) is
   bit-identical to,
-- haversine distance — kNN exact scoring,
 - Douglas–Peucker simplification — parity with the GRASS
   ``v.generalize method=douglas`` step (reference mapgen.sh:59,68,77,86),
 - snap-to-grid quantization + dedup/degenerate cleaning — parity with
-  ``v.clean snap,break,rmdupl`` / ``rmline`` (mapgen.sh:60-61,69-70),
-- WKB encoding — content-addressed geometry lineage via the JVM's
-  ``sha1(wkb)`` (WKB per the public OGC SFA spec, little-endian).
+  ``v.clean snap,break,rmdupl`` / ``rmline`` (mapgen.sh:60-61,69-70).
+
+WKB encoding for the content-addressed geometry lineage is the batch
+kernel :func:`functions.udfs.wkb_udf`.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
-
-EARTH_RADIUS_M = 6371008.8  # mean Earth radius (IUGG)
 
 
 # ---------------------------------------------------------------------------
@@ -57,19 +52,6 @@ def points_in_polygon(
         xi = x1[i] + t * (x2[i] - x1[i])
         inside ^= cond & (px < xi)
     return inside
-
-
-# ---------------------------------------------------------------------------
-# distances
-# ---------------------------------------------------------------------------
-
-def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
-    """Great-circle distance in meters (vectorized, broadcasting)."""
-    lon1, lat1, lon2, lat2 = (np.radians(np.asarray(a, np.float64)) for a in (lon1, lat1, lon2, lat2))
-    dlon = lon2 - lon1
-    dlat = lat2 - lat1
-    h = np.sin(dlat / 2) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2) ** 2
-    return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.minimum(h, 1.0)))
 
 
 # ---------------------------------------------------------------------------
@@ -152,54 +134,3 @@ def is_degenerate_line(xs: np.ndarray, ys: np.ndarray) -> bool:
     """v.clean tool=rmline: fewer than 2 distinct vertices / zero length."""
     xs2, _ = drop_consecutive_duplicates(xs, ys)
     return len(xs2) < 2
-
-
-# ---------------------------------------------------------------------------
-# WKB + digests (OGC SFA little-endian)
-# ---------------------------------------------------------------------------
-
-_WKB_POINT = 1
-_WKB_LINESTRING = 2
-_WKB_POLYGON = 3
-
-
-def wkb_point(lon: float, lat: float) -> bytes:
-    return struct.pack("<BIdd", 1, _WKB_POINT, lon, lat)
-
-
-def wkb_linestring(lons: np.ndarray, lats: np.ndarray) -> bytes:
-    n = len(lons)
-    coords = np.empty((n, 2), np.float64)
-    coords[:, 0] = lons
-    coords[:, 1] = lats
-    return struct.pack("<BII", 1, _WKB_LINESTRING, n) + coords.tobytes()
-
-
-def wkb_polygon(lons: np.ndarray, lats: np.ndarray) -> bytes:
-    """Single-ring polygon; ring closed on the fly if needed."""
-    lons = np.asarray(lons, np.float64)
-    lats = np.asarray(lats, np.float64)
-    if len(lons) == 0 or lons[0] != lons[-1] or lats[0] != lats[-1]:
-        lons = np.append(lons, lons[:1])
-        lats = np.append(lats, lats[:1])
-    n = len(lons)
-    coords = np.empty((n, 2), np.float64)
-    coords[:, 0] = lons
-    coords[:, 1] = lats
-    return struct.pack("<BIII", 1, _WKB_POLYGON, 1, n) + coords.tobytes()
-
-
-def wkb_for(kind: str, lons, lats) -> bytes:
-    lons = np.asarray(lons, np.float64)
-    lats = np.asarray(lats, np.float64)
-    if kind == "point":
-        return wkb_point(float(lons[0]), float(lats[0]))
-    if kind == "polygon":
-        return wkb_polygon(lons, lats)
-    return wkb_linestring(lons, lats)
-
-
-def bbox(lons, lats) -> tuple[float, float, float, float]:
-    lons = np.asarray(lons, np.float64)
-    lats = np.asarray(lats, np.float64)
-    return float(lons.min()), float(lats.min()), float(lons.max()), float(lats.max())

@@ -6,7 +6,7 @@ algorithm from the public s2geometry library docs/source structure:
     64-bit cell id = face(3) | position(2·level) | trailing 1
 
 All point paths are vectorized over numpy arrays (the engine calls
-them from Arrow-batched pandas UDFs). Tokens are the standard hex
+them from flat Arrow UDFs). Tokens are the standard hex
 form with trailing zeros stripped.
 
 Covering: :func:`bbox_covering` returns a guaranteed superset of
@@ -319,7 +319,7 @@ def bbox_covering(
     by 8 boundary samples. If the rect spans faces (not our fixture
     domain), cover each face's clipped sample set the same way.
     Raises if the cover would exceed ``max_cells`` — pick a coarser
-    level instead (the adaptive-split operator does this).
+    level instead (:func:`fitting_covering` does this).
     """
     lats = np.array(
         [lat_min, lat_min, lat_max, lat_max, (lat_min + lat_max) / 2,
@@ -366,21 +366,20 @@ def bbox_covering_batch(
     lat_max: np.ndarray,
     level: int,
     max_cells: int = 4096,
-) -> list[np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Vectorized :func:`bbox_covering` over n bboxes at once: ONE
     xyz/face/uv pass for all 8n boundary samples and a repeat/cumsum
     flat enumeration of every bbox's (i,j) rectangle — no per-bbox
-    Python math (this is the Arrow-batch path for covering UDFs).
-    Returns a list of n sorted cell-id arrays, each identical to the
-    scalar function's output. Bboxes whose samples span >1 face (not
-    the fixture domain) fall back to the scalar path row-wise."""
+    Python math. Returns flat ``(ids, counts, over)``: row k's cells are
+    the next ``counts[k]`` ids, identical to the scalar output; a row
+    over ``max_cells`` is flagged in ``over`` and gets none (the batch
+    never raises). Bboxes whose samples span >1 face (not the fixture
+    domain) fall back to the scalar path row-wise."""
     lng_min = np.asarray(lng_min, np.float64)
     lat_min = np.asarray(lat_min, np.float64)
     lng_max = np.asarray(lng_max, np.float64)
     lat_max = np.asarray(lat_max, np.float64)
     n = len(lng_min)
-    if n == 0:
-        return []
     midx = (lng_min + lng_max) / 2
     midy = (lat_min + lat_max) / 2
     lats = np.stack(
@@ -403,28 +402,59 @@ def bbox_covering_batch(
     j1 = np.clip(j.max(axis=1) + 1, 0, max_ij)
     ni, nj = i1 - i0 + 1, j1 - j0 + 1
     counts = np.where(multi, 0, ni * nj)
-    if counts.max(initial=0) > max_cells:
-        k = int(counts.argmax())
-        raise ValueError(
-            f"covering at level {level} needs {int(counts[k])} cells "
-            f"> max_cells={max_cells}"
-        )
+    over = counts > max_cells
+    counts[over] = 0
     owner = np.repeat(np.arange(n), counts)
     ends = np.cumsum(counts)
-    rank = np.arange(int(ends[-1]) if len(ends) else 0) - np.repeat(
-        ends - counts, counts
-    )
+    rank = np.arange(counts.sum()) - np.repeat(ends - counts, counts)
     ii = i0[owner] + rank // nj[owner]
     jj = j0[owner] + rank % nj[owner]
-    ids_flat = parent(
-        face_ij_to_id(face[:, 0][owner], ii << shift, jj << shift), level
-    )
-    # sort within each bbox's slice → byte-identical to the scalar path
-    order = np.lexsort((ids_flat, owner))
-    out = np.split(ids_flat[order], ends[:-1])
+    ids = [parent(face_ij_to_id(face[:, 0][owner], ii << shift, jj << shift), level)]
+    owners = [owner]
     for k in np.flatnonzero(multi):
-        out[k] = bbox_covering(
-            float(lng_min[k]), float(lat_min[k]),
-            float(lng_max[k]), float(lat_max[k]), level, max_cells,
+        try:
+            cover = bbox_covering(
+                float(lng_min[k]), float(lat_min[k]),
+                float(lng_max[k]), float(lat_max[k]), level, max_cells,
+            )
+        except ValueError:
+            over[k] = True
+            continue
+        ids.append(cover)
+        owners.append(np.full(len(cover), k))
+    ids, owner = np.concatenate(ids), np.concatenate(owners)
+    # sort within each bbox's slice → byte-identical to the scalar path
+    order = np.lexsort((ids, owner))
+    return ids[order], np.bincount(owner, minlength=n), over
+
+
+def fitting_covering(
+    lng_min, lat_min, lng_max, lat_max, level: int, max_cells: int,
+    step: int = 2, min_level: int = 0,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each row's cover at the finest of ``level``, ``level - step``,
+    ... (not below ``min_level``) that fits ``max_cells``: one
+    :func:`bbox_covering_batch` call per level over the rows still over
+    budget. Returns ``(levels, ids, counts)``; raises ``ValueError``
+    when a row does not fit at ``min_level``."""
+    boxes = [np.asarray(a, np.float64) for a in (lng_min, lat_min, lng_max, lat_max)]
+    n = len(boxes[0])
+    levels = np.full(n, level, np.int32)
+    rows = np.arange(n)
+    ids, owners = [], []
+    while True:
+        part, counts, over = bbox_covering_batch(
+            *(b[rows] for b in boxes), level, max_cells
         )
-    return out
+        levels[rows] = level
+        ids.append(part)
+        owners.append(np.repeat(rows, counts))
+        rows = rows[over]
+        if not len(rows):
+            break
+        if level <= min_level:
+            raise ValueError(f"no covering level fits max_cells={max_cells}")
+        level = max(level - step, min_level)
+    owner = np.concatenate(owners)
+    order = np.argsort(owner, kind="stable")
+    return levels, np.concatenate(ids)[order], np.bincount(owner, minlength=n)

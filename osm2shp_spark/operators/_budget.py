@@ -2,9 +2,10 @@
 
 :func:`fits_broadcast` sums the payload bytes of exactly the projection
 a selector collects or broadcasts, in one aggregate: the fixed width of
-every numeric value (a NULL still holds its slot), ``octet_length`` of a
-string, ``size × element width`` of an array. Any other column type
-raises ``TypeError`` naming the column."""
+every numeric or boolean value (a NULL still holds its slot),
+``octet_length`` of a string, ``size × element width`` of an array whose
+elements are fixed-width values or structs of them (the PIP edge list).
+Any other column type raises ``TypeError`` naming the column."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ from pyspark.sql import types as T
 #: payload bytes any one broadcast side may carry; read at call time
 BROADCAST_BUDGET_BYTES = 256 << 20
 
-_WIDTH = {"bigint": 8, "int": 4, "double": 8, "float": 4}
+_WIDTH = {"bigint": 8, "int": 4, "double": 8, "float": 4, "boolean": 1}
 
 
 def _field_bytes(field: T.StructField) -> Column:
@@ -24,8 +25,12 @@ def _field_bytes(field: T.StructField) -> Column:
         return F.lit(_WIDTH[t])
     if t == "string":
         return F.coalesce(F.octet_length(c), F.lit(0))
-    if t in ("array<double>", "array<float>"):
-        return F.when(c.isNotNull(), F.size(c) * _WIDTH[t[6:-1]]).otherwise(0)
+    if isinstance(field.dataType, T.ArrayType):
+        e = field.dataType.elementType
+        parts = e.fields if isinstance(e, T.StructType) else [T.StructField("", e)]
+        widths = [_WIDTH.get(f.dataType.simpleString()) for f in parts]
+        if None not in widths:
+            return F.when(c.isNotNull(), F.size(c) * sum(widths)).otherwise(0)
     raise TypeError(f"broadcast budget: column {field.name!r} has type {t}")
 
 
@@ -35,10 +40,6 @@ def payload_bytes_sum(df: DataFrame) -> Column:
     return F.coalesce(F.sum(row.cast("bigint")), F.lit(0))
 
 
-def within_budget(nbytes: int) -> bool:
-    return nbytes <= BROADCAST_BUDGET_BYTES
-
-
 def fits_broadcast(df: DataFrame) -> bool:
     """One aggregate job: does ``df``'s payload fit the budget?"""
-    return within_budget(df.agg(payload_bytes_sum(df)).collect()[0][0])
+    return df.agg(payload_bytes_sum(df)).collect()[0][0] <= BROADCAST_BUDGET_BYTES

@@ -188,19 +188,10 @@ _BANDS = 16
 _MH_P = (1 << 61) - 1
 
 
-def _minhash_sig_sql(text_col: str, dialect: str, k: int = 3) -> str:
-    """Signature expression: array of 64 min-hashes over token
-    k-shingles; identical semantics in both dialects. Docs shorter than
-    k tokens pad with ''.
-
-    Hash family: ONE md5 per shingle yields two independent integers
-    (h1: hex chars 1-15 → 60 bits, h2: chars 17-30 → 56 bits); the 64
-    per-permutation hashes are g_j = (h1 + j*h2) mod (2^61-1) — the
-    Kirsch-Mitzenmacher double-hashing construction (public result:
-    'Less Hashing, Same Performance', 2006). 64x fewer md5 invocations
-    than hashing (j, shingle) pairs directly — measured ~40x on the
-    signature stage — while staying bit-identical across engines
-    (integer + and %, no string concat per j)."""
+def _shingles_sql(text_col: str, dialect: str, k: int = 3) -> tuple[str, str]:
+    """(token-array expr, k-shingle-array expr over ``_toks``) with
+    identical semantics in both dialects. Docs shorter than k tokens
+    pad with ''."""
     if dialect == "spark":
         toks0 = f"split(lower({text_col}), ' ')"
         toks = (
@@ -213,14 +204,7 @@ def _minhash_sig_sql(text_col: str, dialect: str, k: int = 3) -> str:
             + ", ".join(f"element_at(_toks, i + {d})" for d in range(k))
             + "))"
         )
-        md5s = "transform(_shingles, s -> md5(s))"
-        h1 = "transform(_md5s, m -> CAST(conv(substr(m, 1, 15), 16, 10) AS BIGINT))"
-        h2 = "transform(_md5s, m -> CAST(conv(substr(m, 17, 14), 16, 10) AS BIGINT))"
-        sig = (
-            f"transform(sequence(0, {_NUM_HASHES - 1}), j -> "
-            f"array_min(zip_with(_h1, _h2, (x, y) -> (x + j * y) % {_MH_P})))"
-        )
-        return toks, sh, md5s, h1, h2, sig
+        return toks, sh
     toks0 = f"string_split(lower({text_col}), ' ')"
     toks = (
         f"CASE WHEN len({toks0}) < {k} THEN list_concat({toks0}, "
@@ -232,6 +216,24 @@ def _minhash_sig_sql(text_col: str, dialect: str, k: int = 3) -> str:
         + " || ' ' || ".join(f"_toks[i + {d}]" for d in range(k))
         + ")"
     )
+    return toks, sh
+
+
+def _minhash_sig_sql(text_col: str, k: int = 3) -> tuple[str, ...]:
+    """DuckDB signature expressions ``(toks, shingles, md5s, h1, h2,
+    sig)``: an array of 64 min-hashes over token k-shingles
+    (:func:`_shingles_sql`). :func:`minhash_near_dups` computes the same
+    values on exploded rows.
+
+    Hash family: ONE md5 per shingle yields two independent integers
+    (h1: hex chars 1-15 → 60 bits, h2: chars 17-30 → 56 bits); the 64
+    per-permutation hashes are g_j = (h1 + j*h2) mod (2^61-1) — the
+    Kirsch-Mitzenmacher double-hashing construction (public result:
+    'Less Hashing, Same Performance', 2006). 64x fewer md5 invocations
+    than hashing (j, shingle) pairs directly — measured ~40x on the
+    signature stage — while staying bit-identical across engines
+    (integer + and %, no string concat per j)."""
+    toks, sh = _shingles_sql(text_col, "duckdb", k)
     md5s = "list_transform(_shingles, s -> md5(s))"
     h1 = "list_transform(_md5s, m -> CAST(('0x' || substr(m, 1, 15)) AS BIGINT))"
     h2 = "list_transform(_md5s, m -> CAST(('0x' || substr(m, 17, 14)) AS BIGINT))"
@@ -269,7 +271,7 @@ def minhash_near_dups(
     from osm2shp_spark.operators._parallel import ensure_min_parallelism
 
     rows_per_band = _NUM_HASHES // _BANDS
-    toks, sh, _, _, _, _ = _minhash_sig_sql(text_col, "spark", shingle_k)
+    toks, sh = _shingles_sql(text_col, "spark", shingle_k)
     # Spark-side plan: explode shingles to rows so md5/h1/h2 run as
     # whole-stage-codegen scalar expressions (Catalyst higher-order
     # lambdas are interpreted per element — measured ~8x slower), then
@@ -399,7 +401,7 @@ def minhash_near_dups_oracle(
     """DuckDB twin of :func:`minhash_near_dups` (same signatures, same
     banding, same estimate arithmetic)."""
     rows_per_band = _NUM_HASHES // _BANDS
-    toks, sh, md5s, h1, h2, sig = _minhash_sig_sql("text", "duckdb", shingle_k)
+    toks, sh, md5s, h1, h2, sig = _minhash_sig_sql("text", shingle_k)
     return f"""
 WITH docs AS ({docs_sql}),
 t AS (SELECT doc_id AS _id, {toks} AS _toks FROM docs),
@@ -441,23 +443,10 @@ _SIMHASH_BITS = 60
 _SIMHASH_BANDS = 4
 
 
-def _simhash_sql(text_col: str, dialect: str) -> tuple[str, str]:
-    """(token-hash-list expr, simhash-from-_hs expr) for a dialect.
+def _simhash_sql(text_col: str) -> tuple[str, str]:
+    """DuckDB (token-hash-list expr, simhash-from-_hs expr).
     SimHash over the distinct-token set: bit b of the fingerprint is 1
     iff more than half the token hashes have bit b set."""
-    if dialect == "spark":
-        hs = (
-            f"transform(array_distinct(split(lower({text_col}), ' ')), "
-            f"t -> {_md5_bigint('t', 'spark')})"
-        )
-        sim = (
-            f"aggregate(transform(sequence(0, {_SIMHASH_BITS - 1}), b -> "
-            f"CASE WHEN 2 * size(filter(_hs, h -> (shiftright(h, b) & 1) = 1)) "
-            f"> size(_hs) THEN shiftleft(CAST(1 AS BIGINT), b) "
-            f"ELSE CAST(0 AS BIGINT) END), "
-            f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-        return hs, sim
     hs = (
         f"list_transform(list_distinct(string_split(lower({text_col}), ' ')), "
         f"t -> {_md5_bigint('t', 'duckdb')})"
@@ -544,7 +533,7 @@ def simhash_near_dups(
 
 def simhash_near_dups_oracle(docs_sql: str, max_hamming: int = 3) -> str:
     """DuckDB twin of :func:`simhash_near_dups`."""
-    hs, sim = _simhash_sql("text", "duckdb")
+    hs, sim = _simhash_sql("text")
     width = _SIMHASH_BITS // _SIMHASH_BANDS
     mask = (1 << width) - 1
     return f"""

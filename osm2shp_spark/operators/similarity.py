@@ -19,6 +19,8 @@ expressed as Catalyst joins.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window

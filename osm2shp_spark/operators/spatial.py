@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -219,7 +220,6 @@ def _pip_refine_join(
     keys: list[str],
     point_cols: tuple[str, ...],
     poly_cols: tuple[str, ...],
-    broadcast: bool,
 ) -> DataFrame:
     """Shared join core of both PIP prefilters: equi-join the points
     (``point_cols`` + ``_px``/``_py`` + ``keys``) with the keyed
@@ -232,17 +232,21 @@ def _pip_refine_join(
 
     Rect-ness and the edge list are decided ONCE per polygon on the
     dimension side, not per candidate — the refine filter stays one
-    small lambda, inside whole-stage codegen limits. With
-    ``broadcast`` the keyed polygon table is hash-broadcast: the point
-    side never shuffles and the refine pipelines inside its scan
-    stage."""
+    small lambda, inside whole-stage codegen limits.
+
+    The one broadcast check measures exactly the side it broadcasts:
+    the keyed polygon table, one row per tile or token, each with the
+    full ``_edges`` list. Within the byte budget (:mod:`._budget`) it
+    is hash-broadcast — the point side never shuffles and the refine
+    pipelines inside its scan stage; above it the planner picks the
+    join strategy."""
     polys = _with_ring_edges(
         polys.withColumn("_isrect", F.expr(_axis_rect_sql("lons", "lats")))
     ).select(
         *poly_cols, "_edges", "_isrect",
         "_lon_min", "_lon_max", "_lat_min", "_lat_max", *keys,
     )
-    if broadcast:
+    if _budget.fits_broadcast(polys):
         polys = F.broadcast(polys)
     keep = (
         "CASE WHEN _isrect THEN "
@@ -281,14 +285,9 @@ def pip_join(
     exact ray-cast refine as a higher-order SQL filter pipelined
     straight after the join (:func:`_pip_refine_join`) — zero Python
     workers, bit-identical results to the NumPy kernel
-    :func:`functions.geometry.points_in_polygon`.
-
-    One aggregate pre-pass (a table stat in production) measures the
-    payload bytes of ``(*poly_cols, lons, lats)``: within the broadcast
-    budget (:mod:`._budget`) the tiled polygon side is hash-broadcast,
-    above it the planner picks the join strategy.
+    :func:`functions.geometry.points_in_polygon`. The tiled polygon
+    side is broadcast when it fits the byte budget.
     """
-    broadcast = _budget.fits_broadcast(polygons.select(*poly_cols, "lons", "lats"))
     pts = with_tiles(points, tile_size=tile_size).select(
         *point_cols,
         F.col("lon").alias("_px"),
@@ -316,9 +315,7 @@ def pip_join(
             ),
         )
     )
-    return _pip_refine_join(
-        pts, polys, ["tile_x", "tile_y"], point_cols, poly_cols, broadcast
-    )
+    return _pip_refine_join(pts, polys, ["tile_x", "tile_y"], point_cols, poly_cols)
 
 
 def pip_join_s2(
@@ -339,66 +336,46 @@ def pip_join_s2(
 
     Level selection: the finest level whose WORST bbox covering fits
     ``max_cells_per_poly`` — one tiny driver pre-pass over bbox spans
-    (production: a table stat), which also measures the payload bytes
-    of ``(*poly_cols, lons, lats)`` for the same broadcast budget as
-    :func:`pip_join`. A fleet-wide level keeps the join a single-key
-    equi-join; per-row adaptive levels are the flat-grid path's
-    adaptive-cell territory.
+    (production: a table stat), then the same level search as the way
+    cells (:func:`s2.fitting_covering`) on that one bbox. A fleet-wide
+    level keeps the join a single-key equi-join; per-row adaptive
+    levels are the flat-grid path's adaptive-cell territory.
 
-    The covering UDF is fully Arrow-batched: bboxes are computed
+    The covering UDF is one flat Arrow kernel: bboxes are computed
     JVM-side (``array_min``/``array_max``) and the whole batch goes
-    through ONE vectorized :func:`s2.bbox_covering_batch` call — no
-    per-polygon Python.
+    through one :func:`s2.bbox_covering_batch` call and one token pass
+    (:func:`functions.udfs.token_lists`) — no per-polygon Python.
     """
     from pyspark.sql import types as T
 
     from osm2shp_spark.functions import s2 as S2
-    from osm2shp_spark.functions.udfs import s2_token_udf
+    from osm2shp_spark.functions.udfs import s2_token_udf, token_lists
 
-    side = polygons.select(*poly_cols, "lons", "lats")
-    spans = (
-        side.agg(
-            F.max(F.array_max("lons") - F.array_min("lons")).alias("dx"),
-            F.max(F.array_max("lats") - F.array_min("lats")).alias("dy"),
-            F.min(F.array_min("lons")).alias("x0"),
-            F.min(F.array_min("lats")).alias("y0"),
-            _budget.payload_bytes_sum(side).alias("nbytes"),
-        )
-        .collect()[0]
-    )
+    spans = polygons.agg(
+        F.max(F.array_max("lons") - F.array_min("lons")).alias("dx"),
+        F.max(F.array_max("lats") - F.array_min("lats")).alias("dy"),
+        F.min(F.array_min("lons")).alias("x0"),
+        F.min(F.array_min("lats")).alias("y0"),
+    ).collect()[0]
     level = 1
     # no polygons → no bbox to cover (x0 is NULL); any level joins nothing
     if spans["x0"] is not None:
-        for lv in range(max_level, 0, -1):
-            try:
-                S2.bbox_covering(
-                    spans["x0"], spans["y0"],
-                    spans["x0"] + float(spans["dx"] or 0.0),
-                    spans["y0"] + float(spans["dy"] or 0.0),
-                    lv, max_cells=max_cells_per_poly,
-                )
-                level = lv
-                break
-            except ValueError:
-                continue
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def cover_tokens(
-        x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series
-    ) -> pd.Series:
-        ids = S2.bbox_covering_batch(
-            x0.to_numpy(np.float64), y0.to_numpy(np.float64),
-            x1.to_numpy(np.float64), y1.to_numpy(np.float64),
-            level, max_cells=max_cells_per_poly,
+        x0, y0 = spans["x0"], spans["y0"]
+        levels, _, _ = S2.fitting_covering(
+            [x0], [y0], [x0 + spans["dx"]], [y0 + spans["dy"]],
+            max_level, max_cells_per_poly, step=1, min_level=1,
         )
-        # one vectorized token pass over ALL coverings (flatten →
-        # single hexlify-batched S2.token → split back) — no
-        # per-polygon Python formatting
-        if not ids:
-            return pd.Series([], dtype=object)
-        lens = np.fromiter((len(a) for a in ids), np.int64, count=len(ids))
-        toks = S2.token(np.concatenate(ids))
-        return pd.Series(np.split(toks, np.cumsum(lens)[:-1]))
+        level = int(levels[0])
+
+    @F.arrow_udf(T.ArrayType(T.StringType()))
+    def cover_tokens(x0: pa.Array, y0: pa.Array, x1: pa.Array, y1: pa.Array) -> pa.Array:
+        bbox = (a.to_numpy(zero_copy_only=False) for a in (x0, y0, x1, y1))
+        # min_level=level: one batch call, and a polygon over budget
+        # raises rather than losing its cover
+        _, ids, counts = S2.fitting_covering(
+            *bbox, level, max_cells_per_poly, min_level=level
+        )
+        return token_lists(ids, counts)
 
     polys = _ring_bboxes(polygons).withColumn(
         "_tok",
@@ -410,10 +387,7 @@ def pip_join_s2(
         F.col("lat").alias("_py"),
         s2_token_udf(level)(F.col("lon"), F.col("lat")).alias("_tok"),
     )
-    return _pip_refine_join(
-        pts, polys, ["_tok"], point_cols, poly_cols,
-        _budget.within_budget(spans["nbytes"]),
-    )
+    return _pip_refine_join(pts, polys, ["_tok"], point_cols, poly_cols)
 
 
 # ---------------------------------------------------------------------------

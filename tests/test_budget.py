@@ -33,8 +33,12 @@ def test_payload_bytes_mixed_schema_with_nulls(spark, monkeypatch):
     assert _budget.fits_broadcast(df)
     monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 86)
     assert not _budget.fits_broadcast(df)
+    # a boolean is 1 byte; an array of fixed-width structs (the PIP edge
+    # list) is size x the summed field widths: 4 x 1 + (3 + 0 + 1) x 8
+    edges = df.selectExpr("true AS b", "arrays_zip(v, v) AS e")
+    assert edges.agg(_budget.payload_bytes_sum(edges)).collect()[0][0] == 36
     with pytest.raises(TypeError, match="'flag'"):
-        _budget.payload_bytes_sum(df.selectExpr("id", "true AS flag"))
+        _budget.payload_bytes_sum(df.selectExpr("id", "map('k', 1) AS flag"))
 
 
 def test_wide_probe_schema_falls_back_to_sql(spark, monkeypatch):
@@ -72,3 +76,36 @@ def test_wide_probe_schema_falls_back_to_sql(spark, monkeypatch):
         a, b = rows(mid), rows(other)
         assert len(a) == 3000
         assert a.equals(b)
+
+
+def test_pip_budget_measures_the_exploded_side(spark, monkeypatch):
+    """pip_join's one budget check measures the side it broadcasts: one
+    row per tile, each with the full edge list. Two sets of ten 4-vertex
+    polygons carry the same vertex payload, but the 1-degree set
+    explodes into 441 tiles per polygon and falls back to the shuffle
+    join, while the 0.01-degree set stays broadcast."""
+    from osm2shp_spark.operators.spatial import pip_join
+
+    pts = spark.createDataFrame(
+        [(i, 8.0 + 0.013 * i, 47.0 + 0.011 * i) for i in range(40)],
+        "image_id long, lon double, lat double",
+    )
+
+    def squares(size):
+        rows = []
+        for i in range(10):
+            x, y = 8.0 + 0.1 * i, 47.0 + 0.1 * i
+            rows.append((i, [x, x + size, x + size, x], [y, y, y + size, y + size]))
+        return spark.createDataFrame(
+            rows, "poly_id long, lons array<double>, lats array<double>"
+        )
+
+    monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 100_000)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for size, broadcast in ((0.01, True), (1.0, False)):
+            joined = pip_join(pts, squares(size), ("image_id",), ("poly_id",))
+            assert ("BroadcastExchange" in _plan(joined)) == broadcast, size
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -1,8 +1,11 @@
-"""Geometry + cell-index kernel tests (NumPy level, no Spark)."""
+"""Geometry + cell-index kernel tests (NumPy and Arrow level, no Spark)."""
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from osm2shp_spark.functions import geometry as G
@@ -73,26 +76,56 @@ class TestCleaning:
         assert not G.is_degenerate_line(np.array([1.0, 2.0]), np.array([2.0, 2.0]))
 
 
+def _lists(rows) -> pa.Array:
+    return pa.array(rows, pa.list_(pa.float64()))
+
+
 class TestWKB:
-    def test_point_roundtrip_bytes(self):
-        b = G.wkb_point(8.5, 47.25)
-        assert b[0] == 1 and len(b) == 21
-        assert np.frombuffer(b[5:], np.float64).tolist() == [8.5, 47.25]
+    """``wkb_udf``'s batch encoder against hand-packed OGC WKB."""
+
+    @staticmethod
+    def _encode(kinds, lons, lats) -> list[bytes]:
+        from osm2shp_spark.functions.udfs import wkb_udf
+
+        return wkb_udf.func(kinds, lons, lats).to_pylist()
+
+    @staticmethod
+    def _coords(xs, ys) -> bytes:
+        return b"".join(struct.pack("<dd", x, y) for x, y in zip(xs, ys))
+
+    def test_line_bytes(self):
+        xs, ys = [8.5, 8.6, 8.7], [47.25, 47.5, 47.0]
+        got = self._encode(pa.array(["line"]), _lists([xs]), _lists([ys]))
+        assert got == [struct.pack("<BII", 1, 2, 3) + self._coords(xs, ys)]
 
     def test_polygon_autoclose(self):
-        b = G.wkb_polygon(np.array([0.0, 1.0, 1.0]), np.array([0.0, 0.0, 1.0]))
-        n = int.from_bytes(b[9:13], "little")
-        assert n == 4  # ring closed
+        xs, ys = [0.0, 1.0, 1.0], [0.0, 0.0, 1.0]
+        got = self._encode(pa.array(["polygon"]), _lists([xs]), _lists([ys]))
+        ring = self._coords(xs + [0.0], ys + [0.0])
+        assert got == [struct.pack("<BIII", 1, 3, 1, 4) + ring]
 
+    def test_closed_polygon_kept(self):
+        xs, ys = [0.0, 1.0, 1.0, 0.0], [0.0, 0.0, 1.0, 0.0]
+        got = self._encode(pa.array(["polygon"]), _lists([xs]), _lists([ys]))
+        assert got == [struct.pack("<BIII", 1, 3, 1, 4) + self._coords(xs, ys)]
 
-class TestHaversine:
-    def test_known_distance(self):
-        # 1 degree of latitude ≈ 111.2 km
-        d = G.haversine_m(0.0, 0.0, 0.0, 1.0)
-        assert abs(d - 111195) < 100
+    def test_empty_polygon(self):
+        kinds = pa.array(["polygon", "line"])
+        got = self._encode(kinds, _lists([[], []]), _lists([[], []]))
+        assert got == [struct.pack("<BIII", 1, 3, 1, 0), struct.pack("<BII", 1, 2, 0)]
 
-    def test_symmetry_zero(self):
-        assert G.haversine_m(8.5, 47.5, 8.5, 47.5) == 0.0
+    def test_sliced_input(self):
+        """An Arrow slice's offsets do not start at 0: the encoder must
+        read only the slice's own vertices."""
+        lons = _lists([[9.0, 9.1], [0.0, 2.0, 2.0], [5.0, 6.0], [7.0]])
+        lats = _lists([[46.0, 46.1], [0.0, 0.0, 3.0], [1.0, 1.5], [8.0]])
+        kinds = pa.array(["line", "polygon", "line", "polygon"])
+        got = self._encode(kinds.slice(1, 2), lons.slice(1, 2), lats.slice(1, 2))
+        assert got == [
+            struct.pack("<BIII", 1, 3, 1, 4)
+            + self._coords([0.0, 2.0, 2.0, 0.0], [0.0, 0.0, 3.0, 0.0]),
+            struct.pack("<BII", 1, 2, 2) + self._coords([5.0, 6.0], [1.0, 1.5]),
+        ]
 
 
 class TestS2:
@@ -150,7 +183,11 @@ class TestS2:
         x1 = x0 + rng.uniform(0.001, 0.1, 60)
         y1 = y0 + rng.uniform(0.001, 0.1, 60)
         for level in (8, 11, 13):
-            batch = s2.bbox_covering_batch(x0, y0, x1, y1, level, max_cells=256)
+            ids, counts, over = s2.bbox_covering_batch(
+                x0, y0, x1, y1, level, max_cells=256
+            )
+            assert not over.any()
+            batch = np.split(ids, np.cumsum(counts)[:-1])
             for k in range(60):
                 scalar = s2.bbox_covering(
                     float(x0[k]), float(y0[k]), float(x1[k]), float(y1[k]),
@@ -159,13 +196,19 @@ class TestS2:
                 assert np.array_equal(batch[k], scalar), (level, k)
 
     def test_bbox_covering_batch_budget(self):
-        import pytest
-
+        """An over-budget row is reported, not raised, and gets no
+        cells; a fitting row in the same batch equals the scalar cover."""
+        ids, counts, over = s2.bbox_covering_batch(
+            np.array([8.0, 8.5]), np.array([47.0, 47.5]),
+            np.array([9.0, 8.502]), np.array([48.0, 47.502]), 14, max_cells=16,
+        )
+        assert over.tolist() == [True, False]
+        assert counts[0] == 0 and counts[1] == len(ids) > 0
+        assert np.array_equal(
+            ids, s2.bbox_covering(8.5, 47.5, 8.502, 47.502, 14, max_cells=16)
+        )
         with pytest.raises(ValueError, match="max_cells"):
-            s2.bbox_covering_batch(
-                np.array([8.0]), np.array([47.0]),
-                np.array([9.0]), np.array([48.0]), 14, max_cells=16,
-            )
+            s2.bbox_covering(8.0, 47.0, 9.0, 48.0, 14, max_cells=16)
 
 
 class TestHexGrid:
@@ -280,3 +323,39 @@ def test_way_cells_udf_empty_geometry_no_hang(spark):
     got = {r.way_id: r for r in with_way_cells(df).collect()}
     assert got[2].s2_cover_tokens == [] and got[2].hex_r7_cells == []
     assert len(got[1].s2_cover_tokens) > 0 and len(got[1].hex_r7_cells) > 0
+
+
+def test_way_cells_mixed_batch_matches_per_row_reference():
+    """One batch holding a tiny way, a 3-degree way and an empty way:
+    every row's cover level, tokens and hex arrays equal a per-row
+    reference built from the scalar covering and ``np.unique``."""
+    from osm2shp_spark.functions.udfs import HEX_RESOLUTIONS, way_cells_udf
+
+    lons = [[8.5, 8.5004, 8.5002], [7.0, 10.0, 8.5, 7.0], []]
+    lats = [[47.5, 47.5001, 47.5004], [46.0, 46.5, 49.0, 46.0], []]
+    got = way_cells_udf(12, HEX_RESOLUTIONS).func(_lists(lons), _lists(lats))
+    got = got.to_pylist()
+    levels = []
+    for lo, la, row in zip(lons[:2], lats[:2], got):
+        lo, la = np.array(lo), np.array(la)
+        level = 12
+        while True:
+            try:
+                ids = s2.bbox_covering(
+                    lo.min(), la.min(), lo.max(), la.max(), level, max_cells=64
+                )
+                break
+            except ValueError:
+                level -= 2
+        levels.append(level)
+        assert row["s2_cover_level"] == level
+        assert row["s2_cover_tokens"] == list(s2.token(ids))
+        for r in HEX_RESOLUTIONS:
+            ref = np.unique(hexgrid.hex_cell(lo, la, r)).tolist()
+            assert row[f"hex_r{r}_cells"] == ref
+    assert levels[0] == 12 > levels[1]
+    assert got[2] == {
+        "s2_cover_level": 12,
+        "s2_cover_tokens": [],
+        **{f"hex_r{r}_cells": [] for r in HEX_RESOLUTIONS},
+    }

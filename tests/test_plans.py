@@ -336,3 +336,30 @@ def test_collapse_barrier_rejects_unknown_keep_column(spark):
     assert collapse_barrier(df, keep=("id",)).columns == ["id", "v"]
     with pytest.raises(ValueError, match="way_id"):
         collapse_barrier(df, keep=("id", "way_id"))
+
+
+def test_geometry_udfs_run_as_arrow_udfs(spark):
+    """The way export and the point cells are flat Arrow UDFs: every
+    ArrowEvalPython node carries eval type 250 (SQL_SCALAR_ARROW_UDF),
+    and the WKB and way-cell UDFs share one node (one Arrow crossing)."""
+    from pyspark.util import PythonEvalType
+
+    from osm2shp_spark.functions.udfs import (
+        with_geometry_meta,
+        with_point_cells,
+        with_way_cells,
+    )
+
+    ways = assemble_ways(synthetic_nodes(spark, SF_SMALL), synthetic_ways(spark, SF_SMALL))
+    cases = (
+        (with_way_cells(with_geometry_meta(ways)), 1),
+        (with_point_cells(synthetic_images(spark, SF_SMALL)), 1),
+    )
+    for df, n_nodes in cases:
+        p = df._jdf.queryExecution().executedPlan().toString()
+        nodes = [ln.rstrip() for ln in p.splitlines() if "ArrowEvalPython" in ln]
+        assert len(nodes) == n_nodes, nodes
+        assert all(
+            ln.endswith(f", {PythonEvalType.SQL_SCALAR_ARROW_UDF}") for ln in nodes
+        )
+        assert PythonEvalType.SQL_SCALAR_ARROW_UDF == 250

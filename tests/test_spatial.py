@@ -1,5 +1,6 @@
 """Spatial operator tests: PIP vs brute force on general (non-rect)
-polygons, kNN vs brute force with haversine, cell-column plumbing."""
+polygons, kNN vs brute force in the equirectangular ``COS_REF`` metric,
+cell-column plumbing."""
 
 from __future__ import annotations
 
