@@ -2,12 +2,12 @@
 
 Several operators persist an internal intermediate that is referenced
 more than once by the (lazy) result they return — knn_join's top-k
-summary, adaptive_cells' per-level input, the near-dup operators'
-signature tables. CacheManager holds persisted plans until an explicit
-unpersist (ContextCleaner only reclaims RDD-level state), and the
-operator cannot unpersist eagerly because the returned DataFrame still
-references the cache — so a long-lived session calling the operator in
-a loop would otherwise accumulate one O(input) cache entry per call.
+summary and the near-dup operators' signature tables. CacheManager
+holds persisted plans until an explicit unpersist (ContextCleaner only
+reclaims RDD-level state), and the operator cannot unpersist eagerly
+because the returned DataFrame still references the cache — so a
+long-lived session calling the operator in a loop would otherwise
+accumulate one O(input) cache entry per call.
 
 A result-lifetime hook (weakref.finalize on the returned DataFrame) is
 the obvious alternative but breaks under composition: any

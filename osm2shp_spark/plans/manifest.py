@@ -129,8 +129,8 @@ def run_stage_resumable(
         # against the manifest, and read FULL rows only for the orphan
         # keys. The keys stay a frame: the broadcast semi join bounds
         # them by the broadcast, not by a driver list inlined in the
-        # plan, and when no key is orphaned adaptive execution drops
-        # the join before any full row is read.
+        # plan. When no key is orphaned (the common case) that one
+        # key-only job is all the heal costs: no manifest file is added.
         done = m.completed_keys(stage).withColumnRenamed("part_key", part_col)
         on_disk = spark.read.parquet(out_dir)
         orphan_keys = (
@@ -138,8 +138,9 @@ def run_stage_resumable(
             .distinct()
             .join(F.broadcast(done), part_col, "left_anti")
         )
-        orphans = on_disk.join(F.broadcast(orphan_keys), part_col, "left_semi")
-        m.append(partition_lineage(orphans, stage, part_col, snapshot_id))
+        if not orphan_keys.isEmpty():
+            orphans = on_disk.join(F.broadcast(orphan_keys), part_col, "left_semi")
+            m.append(partition_lineage(orphans, stage, part_col, snapshot_id))
     todo = m.pending(inp, stage, part_col)
     # persist: referenced by isEmpty, the write, and the key collect —
     # one evaluation, and a transform that is not bit-deterministic

@@ -1,8 +1,10 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
 Local-mode testing uses ``local[N]``; on a real cluster the same confs
-apply (AQE, skew-join, Arrow). Tests call :func:`get_spark` once per
-session (pytest fixture scope=session).
+apply (shuffle width, Arrow batching). AQE, its partition coalescing
+and its skew-join splitting are Spark defaults and are not restated.
+Tests call :func:`get_spark` once per session (pytest fixture
+scope=session).
 """
 
 from __future__ import annotations
@@ -12,10 +14,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CONFS: dict[str, str] = {
-    # AQE: runtime re-plan, partition coalescing, skew-join splitting.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     # Shuffle width sized to local cores; a cluster deployment overrides
     # via spark-submit --conf (rule of thumb: 2-3x total cores).
     "spark.sql.shuffle.partitions": "32",

@@ -3,18 +3,19 @@ equivalence tests."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMALL
 from parity import canon_rows
 
+from osm2shp_spark.functions import hexgrid
+from osm2shp_spark.functions.udfs import hex_cell_udf
 from osm2shp_spark.operators.assemble import assemble_ways
-from osm2shp_spark.operators.skew import (
-    adaptive_cells,
-    assemble_ways_salted,
-    cell_histogram,
-)
+from osm2shp_spark.operators.skew import adaptive_cells, assemble_ways_salted
 from osm2shp_spark.plans.manifest import Manifest, partition_lineage, run_stage_resumable
 from osm2shp_spark.sources.synthetic import (
     synthetic_images,
@@ -57,6 +58,65 @@ def test_adaptive_cells_gate_exercises_both_reindex_levels(spark):
 
     pdf = Q.q_adaptive_cells(spark, SF_MED).toPandas()
     assert set(pdf.cell_res.unique()) == {7, 8, 9}
+
+
+def _adaptive_reference(lon, lat, base_res, threshold, levels):
+    """The iterative histogram rule in NumPy: at each level, count the
+    rows the previous level re-indexed per cell, and move the rows of
+    cells holding more than ``threshold`` of them one resolution finer."""
+    cell = hexgrid.hex_cell(lon, lat, base_res)
+    res = np.full(len(cell), base_res)
+    hot = np.ones(len(cell), bool)
+    for i in range(1, levels + 1):
+        _, inv, n = np.unique(cell[hot], return_inverse=True, return_counts=True)
+        hot[hot] = n[inv] > threshold
+        cell[hot] = hexgrid.hex_cell(lon[hot], lat[hot], base_res + i)
+        res[hot] = base_res + i
+    return cell, res
+
+
+@pytest.mark.parametrize("cell_col,levels", [(None, 3), ("hex_r5", 3), (None, 0)])
+def test_adaptive_cells_matches_numpy_reference(spark, cell_col, levels):
+    imgs = synthetic_images(spark, SF_SMALL).select("img_key", "lon", "lat")
+    if cell_col is not None:
+        imgs = imgs.withColumn(cell_col, hex_cell_udf(5)(F.col("lon"), F.col("lat")))
+    out = adaptive_cells(
+        imgs, base_res=5, hot_threshold=50, max_extra_levels=levels,
+        cell_col=cell_col,
+    )
+    assert out.columns == imgs.columns + ["cell_adaptive", "cell_res"]
+    assert out.schema["cell_res"].dataType.simpleString() == "int"
+    pdf = out.toPandas().sort_values("img_key")
+    lon, lat = pdf.lon.to_numpy(), pdf.lat.to_numpy()
+    cell, res = _adaptive_reference(lon, lat, 5, 50, levels)
+    # the fixture's dense cluster stays hot down to the last level
+    assert set(res) == set(range(5, 6 + levels))
+    assert (pdf.cell_adaptive.to_numpy() == cell).all()
+    assert (pdf.cell_res.to_numpy() == res).all()
+
+
+def test_adaptive_cells_is_one_lazy_plan(spark):
+    """Building adaptive_cells runs no job and caches nothing; its plan
+    has no cache scan, union or broadcast, and one Arrow pass computes
+    every level's cell."""
+    imgs = synthetic_images(spark, SF_SMALL).select("img_key", "lon", "lat")
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = cache.numCachedEntries()
+    sc.setJobGroup("adaptive_cells_build", "build only")
+    try:
+        out = adaptive_cells(imgs, base_res=5, hot_threshold=50, max_extra_levels=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("adaptive_cells_build") == []
+    assert cache.numCachedEntries() == entries
+    out.collect()
+    qe = out._jdf.queryExecution()
+    final = qe.executedPlan().executedPlan().toString()
+    plans = qe.optimizedPlan().toString() + final
+    for node in ("InMemoryRelation", "InMemoryTableScan", "Union", "BroadcastExchange"):
+        assert node not in plans
+    assert final.count("ArrowEvalPython") == 1
 
 
 def test_lineage_digest_order_insensitive(spark):
@@ -138,15 +198,6 @@ def test_resume_skips_completed_partitions(spark, tmp_path):
     assert m.pending(df, "double", "part_key").count() == 0
 
 
-def test_cell_histogram_sums_to_total(spark):
-    imgs = synthetic_images(spark, SF_SMALL)
-    from osm2shp_spark.functions.udfs import hex_cell_udf
-
-    pts = imgs.withColumn("c", hex_cell_udf(7)(F.col("lon"), F.col("lat")))
-    h = cell_histogram(pts, "c").toPandas()
-    assert h.n.sum() == imgs.count()
-
-
 def test_resume_heals_unrecorded_partitions_without_duplicates(spark, tmp_path):
     """Crash window between data append and manifest append: the data
     for a partition is fully committed but unrecorded. The resume must
@@ -179,7 +230,7 @@ def test_resume_heals_many_orphan_keys_without_key_list(spark, tmp_path, monkeyp
     """6,000 committed but unrecorded partition keys: the heal records
     every one from disk, re-appends no row, and its plan joins against
     the key frame instead of inlining a literal key list; once healed,
-    adaptive execution drops the join before any full row is read."""
+    a resume appends nothing."""
     import shutil
 
     from osm2shp_spark.plans import manifest as M
@@ -220,7 +271,30 @@ def test_resume_heals_many_orphan_keys_without_key_list(spark, tmp_path, monkeyp
 
     appended.clear()
     run_stage_resumable(spark, df, "many", "part_key", xform, out_dir, man_dir)
-    [no_orphans] = appended
-    assert no_orphans.collect() == []
-    final = no_orphans._jdf.queryExecution().executedPlan().executedPlan().toString()
-    assert "FileScan" not in final
+    assert appended == []
+
+
+def test_noop_resumes_add_no_manifest_files(spark, tmp_path):
+    """A resume with nothing orphaned and nothing pending appends no
+    manifest file: the heal writes only when some key is orphaned."""
+    out_dir = str(tmp_path / "out")
+    man_dir = str(tmp_path / "manifest")
+    df = (
+        synthetic_images(spark, SF_SMALL)
+        .select("img_key", "lon", "lat")
+        .withColumn("part_key", F.col("img_key") % 5)
+    )
+
+    def manifest_files():
+        return sorted(f for f in os.listdir(man_dir) if f.endswith(".parquet"))
+
+    run_stage_resumable(spark, df, "noop", "part_key", lambda d: d, out_dir, man_dir)
+    first = manifest_files()
+    assert len(first) == 1
+    for _ in range(2):
+        r = run_stage_resumable(
+            spark, df, "noop", "part_key", lambda d: d, out_dir, man_dir
+        )
+        assert r.count() == 0
+    assert manifest_files() == first
+    assert Manifest(spark, man_dir).read().count() == 5
