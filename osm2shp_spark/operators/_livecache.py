@@ -1,13 +1,13 @@
 """Bounded registry for operator-internal persisted DataFrames.
 
-Several operators persist an internal intermediate that is referenced
-more than once by the (lazy) result they return — knn_join's top-k
-summary and the near-dup operators' signature tables. CacheManager
-holds persisted plans until an explicit unpersist (ContextCleaner only
-reclaims RDD-level state), and the operator cannot unpersist eagerly
-because the returned DataFrame still references the cache — so a
-long-lived session calling the operator in a loop would otherwise
-accumulate one O(input) cache entry per call.
+An operator may persist an internal intermediate that is referenced
+more than once by the (lazy) result it returns — knn_join's top-k
+summary is the one such table. CacheManager holds persisted plans
+until an explicit unpersist (ContextCleaner only reclaims RDD-level
+state), and the operator cannot unpersist eagerly because the
+returned DataFrame still references the cache — so a long-lived
+session calling the operator in a loop would otherwise accumulate
+one O(input) cache entry per call.
 
 A result-lifetime hook (weakref.finalize on the returned DataFrame) is
 the obvious alternative but breaks under composition: any
@@ -38,7 +38,11 @@ class LiveCacheRegistry:
     first. Registering beyond the bound unpersists the oldest entry;
     entries owned by stopped sessions drop eagerly (their cached
     blocks died with the context — keeping the DataFrame only pins a
-    dead plan)."""
+    dead plan). CacheManager keeps one entry for equal plans and
+    ``unpersist`` drops every DataFrame that shares it, so a
+    registration first forgets any live entry with the same semantics:
+    the newest DataFrame takes its slot, and evicting an older twin
+    can never uncache it."""
 
     def __init__(self, bound: int = 4):
         self.bound = bound
@@ -48,7 +52,9 @@ class LiveCacheRegistry:
     def register(self, df: DataFrame) -> None:
         with self._lock:
             self.entries[:] = [
-                d for d in self.entries if not _session_stopped(d)
+                d
+                for d in self.entries
+                if not _session_stopped(d) and not d.sameSemantics(df)
             ]
             self.entries.append(df)
             while len(self.entries) > self.bound:

@@ -13,20 +13,15 @@ self-join never goes quadratic globally; MinHash/LSH covers the
 cross-block space probabilistically with band-bucket equi-joins — the
 standard web-scale dedup stack (cf. the public MinHashLSH literature
 and spark.ml's MinHashLSH API, reimplemented here Catalyst-first).
+Each self-join reads its signature, fingerprint or token stage through
+one shuffle that Spark's exchange reuse shares between the sides, so no
+operator here caches anything.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from osm2shp_spark.operators._livecache import LiveCacheRegistry
-
-#: live persisted signature/fingerprint tables — every near-dup
-#: operator's banded self-join reads its signature table twice, so the
-#: operators persist it; the registry bounds live cache entries
-#: across calls (see operators._livecache)
-_SIG_REGISTRY = LiveCacheRegistry(4)
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -67,8 +62,6 @@ def jaccard_pairs_blocked(
     block_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_block_size: int = MAX_JACCARD_BLOCK,
-    on_oversize: str = "error",
 ) -> DataFrame:
     """Exact distinct-token Jaccard over all pairs within each block.
 
@@ -80,46 +73,34 @@ def jaccard_pairs_blocked(
     mega-block (a dominant source) silently turns the exact
     per-source semantics into a non-terminating job at 10⁹-doc scale.
     A histogram pre-pass (one partial-aggregated shuffle on the block
-    key — tiny output) enforces ``max_block_size``:
-    ``on_oversize='error'`` (default) fails fast naming the blocks —
-    the scale path for those is :func:`minhash_near_dups`;
-    ``'skip'`` anti-joins them out and proceeds with the rest.
+    key — tiny output) fails fast naming every block over
+    ``MAX_JACCARD_BLOCK`` (read at call time); the scale path for
+    those is :func:`minhash_near_dups`.
     """
-    if on_oversize not in ("error", "skip"):
-        raise ValueError(f"on_oversize must be 'error' or 'skip': {on_oversize!r}")
     big = (
         docs.groupBy(F.col(block_col).alias("_blk"))
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_block_size)
+        .filter(F.col("_n") > MAX_JACCARD_BLOCK)
     )
     oversize = [(r._blk, r._n) for r in big.limit(20).collect()]
     if oversize:
-        if on_oversize == "error":
-            raise ValueError(
-                f"jaccard_pairs_blocked: block(s) over max_block_size="
-                f"{max_block_size}: {oversize} — all-pairs is quadratic "
-                "per block; route these through minhash_near_dups or "
-                "pass on_oversize='skip'"
-            )
-        docs = docs.join(
-            F.broadcast(big.select(F.col("_blk").alias(block_col))),
-            block_col,
-            "left_anti",
+        raise ValueError(
+            f"jaccard_pairs_blocked: block(s) over MAX_JACCARD_BLOCK="
+            f"{MAX_JACCARD_BLOCK}: {oversize} — all-pairs is quadratic "
+            "per block; route these through minhash_near_dups"
         )
     from osm2shp_spark.operators._parallel import ensure_min_parallelism
 
-    # persist: the block self-join reads the tokenized table on both
-    # sides — one tokenize pass instead of two (same rationale as the
-    # near-dup signature tables). Spread a 1-split scan first (r6,
-    # guide §2.5): the cached table keeps its partitioning, so without
-    # this the whole quadratic block join ran in ONE task (measured
-    # 11.3 s steady at sf0.1).
+    # Both sides of the block self-join read the tokenized table
+    # through one reused shuffle. Spread a 1-split scan first
+    # (guide §2.5): the block join broadcasts one side and keeps the
+    # other's partitioning, so without this the whole quadratic block
+    # join ran in ONE task (measured 11.3 s steady at sf0.1).
     t = ensure_min_parallelism(docs).select(
         F.col(id_col).alias("_id"),
         F.col(block_col).alias("_blk"),
         F.array_distinct(F.split(F.lower(F.col(text_col)), " ")).alias("_toks"),
-    ).persist()
-    _SIG_REGISTRY.register(t)
+    )
     a = t.alias("a")
     b = t.alias("b")
     inter = F.size(F.array_intersect(F.col("a._toks"), F.col("b._toks")))
@@ -278,7 +259,7 @@ def minhash_near_dups(
     # ONE groupBy with 64 map-side-partial min aggregates rebuilds the
     # signature. Values are identical to the oracle's list form.
     # The shingle+md5 chain fuses with the doc scan, so a 1-split scan
-    # would run it single-task — spread first (r6, guide §2.5).
+    # would run it single-task — spread first (guide §2.5).
     shingled = (
         ensure_min_parallelism(docs)
         .select(F.col(id_col).alias("_id"), F.expr(toks).alias("_toks"))
@@ -290,13 +271,8 @@ def minhash_near_dups(
             F.expr("CAST(conv(substr(_m, 17, 14), 16, 10) AS BIGINT)").alias("_h2"),
         )
     )
-    # persist the signature table (r6): the banded self-join references
-    # it on BOTH sides, and without the cache point Spark plans the
-    # whole scan -> shingle-explode -> md5 -> 64-min-aggregate subtree
-    # TWICE (plan-visible: two Exchange+HashAggregate towers feeding
-    # the join). The signature pass is the operator's dominant cost, so
-    # caching ~64 longs/doc halves the signature work; the bounded
-    # registry caps live entries across calls.
+    # The banded self-join and the two signature re-attach joins all
+    # read the signature stage through one shuffle that Spark reuses.
     sigd = shingled.groupBy("_id").agg(
         *[
             F.min(F.expr(f"(_h1 + {j} * _h2) % {_MH_P}")).alias(f"_g{j}")
@@ -304,17 +280,16 @@ def minhash_near_dups(
         ]
     ).select(
         "_id", F.array(*[f"_g{j}" for j in range(_NUM_HASHES)]).alias("_sig")
-    ).persist()
-    _SIG_REGISTRY.register(sigd)
-    # Shuffle ids, not payloads (r6, same shape as embedding_near_dups):
+    )
+    # Shuffle ids, not payloads (same shape as embedding_near_dups):
     # the banded self-join and the pair dedup previously carried BOTH
     # 64-long signatures (~0.5 KB each side per row) on every band
     # collision — on duplicate-heavy corpora the collision count is
     # quadratic within collision clusters, so the dedup exchange was
     # payload-bound (measured 5x sf: 2.24M raw collisions -> 508k
     # distinct pairs). Pairs now move as 16-byte id pairs; signatures
-    # re-attach to the DISTINCT pairs from the persisted sigd (two
-    # cache-backed equi-joins), so the agreement estimate still runs
+    # re-attach to the DISTINCT pairs from sigd (two equi-joins on the
+    # reused signature shuffle), so the agreement estimate still runs
     # exactly once per distinct pair.
     banded = sigd.select(
         "_id",
@@ -340,8 +315,8 @@ def minhash_near_dups(
 
 def _attach_sigs(pairs: DataFrame, sigd: DataFrame) -> DataFrame:
     """Re-attach ``_siga``/``_sigb`` to distinct (doc_a, doc_b) pairs
-    from the (persisted) signature table — the heavy arrays join AFTER
-    the dedup, once per distinct pair side."""
+    from the signature table — the heavy arrays join AFTER the dedup,
+    once per distinct pair side."""
     sa = sigd.select(F.col("_id").alias("doc_a"), F.col("_sig").alias("_siga"))
     sb = sigd.select(F.col("_id").alias("doc_b"), F.col("_sig").alias("_sigb"))
     return pairs.join(sa, "doc_a").join(sb, "doc_b")
@@ -489,7 +464,7 @@ def simhash_near_dups(
     from osm2shp_spark.operators._parallel import ensure_min_parallelism
 
     # tokenize+md5 fuses with the doc scan — spread a 1-split scan
-    # first (r6, guide §2.5; same rationale as minhash_near_dups)
+    # first (guide §2.5; same rationale as minhash_near_dups)
     tok = ensure_min_parallelism(docs).select(
         F.col(id_col).alias("_id"),
         F.explode(
@@ -507,11 +482,9 @@ def simhash_near_dups(
         f"(CASE WHEN 2 * _b{b} > _n THEN {1 << b}L ELSE 0L END)"
         for b in range(_SIMHASH_BITS)
     )
-    # persist: both sides of the banded self-join read the fingerprint
-    # table — without the cache point the tokenize+md5+60-bit-sum
-    # subtree plans twice (same rationale as minhash_near_dups)
-    sh = bits.select("_id", F.expr(sim_expr).alias("_sh")).persist()
-    _SIG_REGISTRY.register(sh)
+    # both sides of the banded self-join read the fingerprint stage
+    # through one reused shuffle
+    sh = bits.select("_id", F.expr(sim_expr).alias("_sh"))
     banded = sh.select(
         "_id",
         "_sh",

@@ -4,6 +4,9 @@ broadcast, no cartesian products in joins that must scale)."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMALL
@@ -328,8 +331,6 @@ def test_pip_dimension_side_has_collapse_barrier(spark):
 def test_collapse_barrier_rejects_unknown_keep_column(spark):
     """A ``keep`` name that is not a column must fail loudly instead of
     silently passing nothing outside the barrier."""
-    import pytest
-
     from osm2shp_spark.operators._parallel import collapse_barrier
 
     df = spark.range(3).withColumn("v", F.col("id") * 2)
@@ -363,3 +364,24 @@ def test_geometry_udfs_run_as_arrow_udfs(spark):
             ln.endswith(f", {PythonEvalType.SQL_SCALAR_ARROW_UDF}") for ln in nodes
         )
         assert PythonEvalType.SQL_SCALAR_ARROW_UDF == 250
+
+
+@pytest.mark.parametrize(
+    "name", ["minhash_near_dups", "simhash_near_dups", "jaccard_pairs"]
+)
+def test_near_dup_self_joins_reuse_one_exchange(spark, name):
+    """Each near-dup operator is one lazy plan that caches nothing: both
+    sides of its self-join (and minhash's signature re-attach joins)
+    read the signature stage through one shuffle that Spark reuses.
+    ``InMemory`` alone would also match the scan's InMemoryFileIndex."""
+    from osm2shp_spark.queries import queries
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    df = queries()[name](spark, SF_SMALL)
+    assert df.collect()
+    assert cache.numCachedEntries() == before
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in p
+    assert not re.search(r"\bInMemory(Relation|TableScan)\b", p)
+    assert "ReusedExchange" in p

@@ -84,25 +84,42 @@ def test_knn_summary_cache_bounded_across_calls(spark):
     """knn_join persists its per-point top-k summary; repeated calls in
     one session must not leak one O(points) CacheManager entry per call
     — the live-summary registry evicts beyond its bound, and eviction
-    does not break a still-held result (it recomputes, bit-identical)."""
+    does not break a still-held result (it recomputes, bit-identical).
+    Identical calls share one CacheManager entry, so they must keep one
+    registry slot: evicting an older twin would uncache the newest."""
+    from pyspark import StorageLevel
+
     from osm2shp_spark.operators import spatial as S
 
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
     ).limit(50)
+    cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     S._LIVE_SUMMARIES.clear()
-    first = knn_join(imgs, nodes, k=2)
+    # earlier tests' ring-expansion localCheckpoint RDDs survive
+    # clearCache until the JVM collects them: count only new RDDs
+    held_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    # distinct plans: one per k
+    first = knn_join(imgs, nodes, k=1)
     expect = canon_rows(first.toPandas())
-    for _ in range(S._MAX_LIVE_SUMMARIES + 2):
-        assert knn_join(imgs, nodes, k=2).count() > 0
+    for k in range(2, S._MAX_LIVE_SUMMARIES + 3):
+        assert knn_join(imgs, nodes, k=k).count() > 0
     assert len(S._LIVE_SUMMARIES) == S._MAX_LIVE_SUMMARIES
-    jsc = spark.sparkContext._jsc.sc()
-    assert jsc.getPersistentRDDs().size() <= S._MAX_LIVE_SUMMARIES
+    held = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert len(held - held_before) <= S._MAX_LIVE_SUMMARIES
     # `first`'s summary was evicted above; re-executing it must
     # recompute and still match
     assert canon_rows(first.toPandas()) == expect
+    # identical plans: the newest summary stays cached on every call
+    spark.catalog.clearCache()
+    S._LIVE_SUMMARIES.clear()
+    for _ in range(S._MAX_LIVE_SUMMARIES + 2):
+        assert knn_join(imgs, nodes, k=2).count() > 0
+        assert len(S._LIVE_SUMMARIES) == 1
+        assert S._LIVE_SUMMARIES[-1].storageLevel != StorageLevel.NONE
+        assert cache.numCachedEntries() >= 1
 
 
 def test_knn_oversize_fallback_never_broadcasts_features(spark, monkeypatch):

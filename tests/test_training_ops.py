@@ -101,25 +101,20 @@ def test_lang_id_deterministic_and_total(spark):
     assert df.sort_values("doc_id").pred_lang.tolist() == df2.sort_values("doc_id").pred_lang.tolist()
 
 
-def test_jaccard_block_size_guard(spark):
-    """One mega-block must fail fast (or be skipped) instead of going
-    quadratic — the documented scale guard."""
+def test_jaccard_block_size_guard(spark, monkeypatch):
+    """One mega-block must fail fast instead of going quadratic — the
+    documented scale guard, which reads ``MAX_JACCARD_BLOCK`` at call
+    time."""
     import pytest as _pytest
 
-    from osm2shp_spark.operators.dedup import jaccard_pairs_blocked
+    from osm2shp_spark.operators import dedup
     from osm2shp_spark.sources.tables import register_driver_tables
 
     register_driver_tables(spark, SF_SMALL)
     docs = spark.table("documents")
-    with _pytest.raises(ValueError, match="max_block_size"):
-        jaccard_pairs_blocked(docs, 0.5, max_block_size=1).count()
-    # skip mode drops the oversize blocks and proceeds
-    assert (
-        jaccard_pairs_blocked(
-            docs, 0.5, max_block_size=1, on_oversize="skip"
-        ).count()
-        == 0
-    )
+    monkeypatch.setattr(dedup, "MAX_JACCARD_BLOCK", 1)
+    with _pytest.raises(ValueError, match="MAX_JACCARD_BLOCK"):
+        dedup.jaccard_pairs_blocked(docs, 0.5).count()
 
 
 def test_stratified_sample_deterministic_and_quota(spark):
