@@ -3,6 +3,7 @@
 Local-mode testing uses ``local[N]``; on a real cluster the same confs
 apply (shuffle width, Arrow batching). AQE, its partition coalescing
 and its skew-join splitting are Spark defaults and are not restated.
+The driver heap and the default master are derived from the host.
 Tests call :func:`get_spark` once per session (pytest fixture
 scope=session).
 """
@@ -12,6 +13,30 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: JIT policy of the driver JVM (in local mode it also runs the
+#: executors). Most of what a short job compiles is Catalyst planning
+#: code and one-shot generated classes: run thousands of times, they
+#: reach HotSpot's default C2 thresholds, but the job ends before C2's
+#: code repays its compile time. One C1 and one C2 thread (the default
+#: on 4 cores is 3) and tier-4 thresholds 10x the defaults leave C2 to
+#: the hot loops. C1-only (TieredStopAtLevel=1) was measured and
+#: rejected: the hot aggregate loops at scale need C2.
+JIT_POLICY: tuple[str, ...] = (
+    "-XX:CICompilerCount=2",
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=20000",
+    "-XX:Tier4CompileThreshold=60000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+)
+
+
+def _driver_memory() -> str:
+    """Half the host's physical memory, at most 48g (a heap above the
+    host never spills: the kernel kills the JVM instead)."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 48 << 30) >> 20}m"
+
 
 DEFAULT_CONFS: dict[str, str] = {
     # Shuffle width sized to local cores; a cluster deployment overrides
@@ -50,7 +75,10 @@ DEFAULT_CONFS: dict[str, str] = {
     # AQE converts to broadcast at runtime when stats allow anyway.
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": "48g",
+    "spark.driver.memory": _driver_memory(),
+    # defaultJavaOptions, not extraJavaOptions: the latter is the
+    # caller's, and a later -XX flag there overrides the policy.
+    "spark.driver.defaultJavaOptions": " ".join(JIT_POLICY),
 }
 
 
@@ -61,11 +89,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    Pass e.g. ``local[8]`` explicitly for scaling-efficiency runs.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or, with that
+    unset, ``local[<CPUs this process may run on>]``. Pass e.g.
+    ``local[8]`` explicitly for scaling-efficiency runs.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     confs = dict(DEFAULT_CONFS)
