@@ -56,42 +56,35 @@ def _export_stage(
 ) -> int:
     """Write one layer-partitioned output and return its row count
     WITHOUT a dedicated post-write ``count()`` rescan (at 100 TB those
-    are real jobs): with lineage on, the count is the sum of the
-    manifest's per-partition ``row_count`` rows (the digest pass, one
-    native aggregate, reads the written data once anyway — that scan is
-    the lineage feature, not overhead — and the manifest itself is
-    tiny); with lineage off, an ``Observation`` rides the write job
-    itself, so the write is the only job touching the data."""
-    if with_lineage:
-        write_partitioned(df, path, ["layer"])
-        # explicit schema: a zero-row partitioned write leaves only
-        # _SUCCESS, and a bare read-back would raise
-        # UNABLE_TO_INFER_SCHEMA, aborting the run AFTER the data
-        # landed (an empty extract is a valid outcome, not an error)
-        written = spark.read.schema(df.schema).parquet(path).withColumn(
-            # digest partition: layer alone funnels an entire layer's
-            # row hashes into ONE collect_list buffer (OOM/straggler at
-            # scale); bucketing by the stable leading id column bounds
-            # every group while staying deterministic across re-reads
-            "part_key",
-            F.xxhash64("layer")
-            + F.pmod(F.xxhash64(F.col(df.columns[0])), F.lit(256)),
-        )
-        manifest.append(partition_lineage(written, stage, "part_key", snapshot))
-        n = (
-            manifest.read()
-            .filter(
-                (F.col("stage") == stage) & (F.col("snapshot_id") == snapshot)
-            )
-            .agg(F.sum("row_count"))
-            .collect()[0][0]
-        )
-        return int(n or 0)
+    are real jobs): an ``Observation`` rides a job the stage runs
+    anyway. With lineage off that is the write itself; with lineage on
+    it is the lineage append, whose per-partition ``row_count`` rows
+    sum to the rows written (the digest pass reads the written data
+    once anyway — that scan is the lineage feature, not overhead)."""
     obs = Observation(f"rows_{stage}")
-    write_partitioned(
-        df.observe(obs, F.count(F.lit(1)).alias("n")), path, ["layer"]
+    if not with_lineage:
+        write_partitioned(
+            df.observe(obs, F.count(F.lit(1)).alias("n")), path, ["layer"]
+        )
+        return int(obs.get["n"])
+    write_partitioned(df, path, ["layer"])
+    # explicit schema: a zero-row partitioned write leaves only
+    # _SUCCESS, and a bare read-back would raise
+    # UNABLE_TO_INFER_SCHEMA, aborting the run AFTER the data
+    # landed (an empty extract is a valid outcome, not an error)
+    written = spark.read.schema(df.schema).parquet(path).withColumn(
+        # digest partition: layer alone funnels an entire layer's
+        # row hashes into ONE collect_list buffer (OOM/straggler at
+        # scale); bucketing by the stable leading id column bounds
+        # every group while staying deterministic across re-reads
+        "part_key",
+        F.xxhash64("layer")
+        + F.pmod(F.xxhash64(F.col(df.columns[0])), F.lit(256)),
     )
-    return int(obs.get["n"])
+    lineage = partition_lineage(written, stage, "part_key", snapshot)
+    manifest.append(lineage.observe(obs, F.sum("row_count").alias("n")))
+    # sum over zero lineage rows is NULL
+    return int(obs.get["n"] or 0)
 
 
 def run(
@@ -119,9 +112,12 @@ def run(
     # strategy auto-selected by size stats (salted mega-way / general
     # Catalyst) — operators/assemble.py; every
     # assembled geometry carries hex cells res 7-12 + S2 covering
-    # tokens (north rule), one Arrow pass each family
+    # tokens (north rule), one Arrow pass each family. defer_filters:
+    # the tag_* columns callers pass are derived (extract_tags map
+    # lookups, the synthetic views' CASE chains), the case the
+    # classification barrier exists for (operators/classify.py)
     assembled = with_way_cells(
-        with_geometry_meta(assemble_ways_auto(nodes, ways)),
+        with_geometry_meta(assemble_ways_auto(nodes, ways, defer_filters=True)),
         s2_level=s2_level,
         hex_resolutions=hex_resolutions,
     )

@@ -79,6 +79,13 @@ DEFAULT_CONFS: dict[str, str] = {
     # defaultJavaOptions, not extraJavaOptions: the latter is the
     # caller's, and a later -XX flag there overrides the policy.
     "spark.driver.defaultJavaOptions": " ".join(JIT_POLICY),
+    # Generated classes kept compiled. A query's cost at this scale is
+    # planning, Janino and the JIT, not data. The cache is keyed by
+    # class loader, so in local mode the driver and the executor each
+    # fill it: the 12-query perfbench round needs ~180 entries and the
+    # 50-query registry ~700. With Spark's 100, every warm round
+    # recompiled ~150 classes identical to the last round's.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
@@ -104,4 +111,13 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # CodeGenerator sizes its cache once, from SQLConf.get on the first
+    # thread that touches it. A Python worker thread planning a query
+    # has no active session and reads Spark's default 100; an executor
+    # task thread reads the session's conf. Touch it here, where the
+    # session is active, so the size does not depend on which thread
+    # compiles first. Spark Connect has no JVM in this process.
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is not None:
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     return spark

@@ -16,7 +16,13 @@ from osm2shp_spark.sources.synthetic import (
 )
 
 
-def test_engine_run_end_to_end(spark, tmp_path):
+def test_engine_run_end_to_end(spark, tmp_path, monkeypatch):
+    def no_read(self):
+        raise AssertionError("engine.run read the manifest back")
+
+    # each stage's count rides its lineage append: the run never reads
+    # the manifest back
+    monkeypatch.setattr(Manifest, "read", no_read)
     out = str(tmp_path / "out")
     res = engine.run(
         spark,
@@ -26,8 +32,14 @@ def test_engine_run_end_to_end(spark, tmp_path):
         images=synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat"),
         hex_resolutions=(7, 9, 12),
     )
-    assert res.counts["exported_ways"] > 0
-    assert res.counts["exported_nodes"] > 0
+    monkeypatch.undo()
+    for key, stage in (
+        ("exported_ways", "ways"),
+        ("exported_nodes", "points"),
+        ("classified_images", "images_classified"),
+    ):
+        written = spark.read.parquet(res.outputs[stage]).count()
+        assert res.counts[key] == written > 0, key
 
     # layer-partitioned directories (the one-file-per-layer sink)
     way_layers = {
