@@ -95,8 +95,8 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact cosine top-k: (probe_id, rank, neighbor_id, cosine).
 
-    Self-matches excluded; ties broken by neighbor id. The probe side
-    is broadcast; the corpus is scanned once.
+    Self-matches excluded; ties broken by neighbor id. The corpus is
+    scanned once.
 
     Physical strategy: probe sets whose ``(id_col, vec_col)`` bytes fit
     the broadcast budget (:mod:`._budget`, one aggregate) score
@@ -108,7 +108,9 @@ def cosine_topk(
     candidate superset so the final exact window ranks thousands of
     rows instead of |corpus|x|probes|. Above the budget the pure-SQL
     plan below runs — same rows bit for bit, but it evaluates the
-    interpreted ``aggregate(zip_with(...))`` fold per pair.
+    interpreted ``aggregate(zip_with(...))`` fold per pair, and the
+    planner picks the cross join's strategy (the probes just failed
+    the budget, so no broadcast hint).
     """
     if _budget.fits_broadcast(probes.select(id_col, vec_col)):
         cand = _cosine_topk_broadcast_numpy(
@@ -127,7 +129,7 @@ def cosine_topk(
         )
         sim = cosine_from_norms("_pvec", "_cvec", "_pn", "_cn")
         cand = (
-            c.crossJoin(F.broadcast(p))
+            c.crossJoin(p)
             .filter(F.col("probe_id") != F.col("neighbor_id"))
             .select("probe_id", "neighbor_id", sim.alias("cosine"))
         )

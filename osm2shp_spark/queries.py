@@ -653,8 +653,9 @@ def q_knn_places(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately). The named-place dimension table is far under the
     broadcast budget at every fixture scale, so the selector picks the
     zero-shuffle numpy-bucket path. Its over-budget route, the shuffle
-    tile-join ``knn_join``, never runs in the gate: pytest alone covers
-    it (tests/test_spatial.py). Both paths are bit-identical by construction (same IEEE
+    tile-join ``knn_join``, never runs in the gate: pytest runs this
+    query with a zero budget against the same oracle
+    (tests/test_spatial.py). Both paths are bit-identical by construction (same IEEE
     distance arithmetic, same (dist2, id) tie-break), so the oracle
     hash is strategy-independent."""
     from osm2shp_spark.operators.spatial import knn_join_auto
@@ -674,7 +675,8 @@ def q_knn_places_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     as knn_places — exactness is tile-size independent by
     construction, so a histogram/threshold bug that broke candidate
     completeness breaks the value hash. The shuffle ``knn_join`` is
-    covered by pytest only. Gated via ``knn_places_strategies``."""
+    covered by pytest only, which also runs this query over budget
+    against the oracle. Gated via ``knn_places_strategies``."""
     from osm2shp_spark.operators.spatial import knn_join_adaptive
 
     imgs = synthetic_images(spark, sf_dir).select("image_id", "lon", "lat")

@@ -45,7 +45,10 @@ def test_wide_probe_schema_falls_back_to_sql(spark, monkeypatch):
     """1,000 probes at dim 4 carry 24,000 B and at dim 256 1,032,000 B:
     with the budget between the two, the narrow probe set takes the
     numpy broadcast scorer and the wide one the SQL plan — and each
-    path's rows equal the other path's bit for bit."""
+    path's rows equal the other path's bit for bit. The SQL path is
+    taken because the probes failed the budget, so it does not
+    broadcast them either: with the planner's own broadcast off, its
+    plan has no BroadcastExchange."""
     rng = np.random.default_rng(7)
 
     def table(n, dim):
@@ -76,6 +79,17 @@ def test_wide_probe_schema_falls_back_to_sql(spark, monkeypatch):
         a, b = rows(mid), rows(other)
         assert len(a) == 3000
         assert a.equals(b)
+        # a plan is fixed when first planned: build the SQL path anew
+        monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 0)
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            sql = cosine_topk(corpus, probes, k=3)
+            assert "BroadcastExchange" not in _plan(sql)
+            assert rows(sql).equals(a)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+            monkeypatch.undo()
 
 
 def test_pip_budget_measures_the_exploded_side(spark, monkeypatch):

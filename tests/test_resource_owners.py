@@ -21,14 +21,6 @@ OWNERS = {
         "the stage output is read by isEmpty, the write and the key "
         "collect; unpersisted in a finally"
     ),
-    "operators/spatial.py::knn_join": (
-        "the top-k summary is read three times; bounded by "
-        "LiveCacheRegistry"
-    ),
-    "operators/spatial.py::_knn_ring_expand": (
-        "each ring round is checkpointed so a later round never "
-        "re-derives the earlier ones"
-    ),
     "operators/spatial.py::knn_join_auto": (
         "the tile-bucketed feature arrays ship as one broadcast; "
         "never released"

@@ -8,6 +8,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMALL
@@ -16,7 +17,14 @@ from parity import canon_rows
 from osm2shp_spark.functions import geometry as G
 from osm2shp_spark.functions.udfs import with_geometry_meta, with_point_cells
 from osm2shp_spark.operators.assemble import assemble_ways
-from osm2shp_spark.operators.spatial import knn_join, pip_join, tile_vector_stats
+from osm2shp_spark.operators import _budget
+from osm2shp_spark.operators.spatial import (
+    COS_REF2,
+    knn_join,
+    knn_join_auto,
+    pip_join,
+    tile_vector_stats,
+)
 from osm2shp_spark.sources.synthetic import (
     synthetic_images,
     synthetic_nodes,
@@ -80,16 +88,115 @@ def test_knn_fallback_engages_and_stays_exact(spark):
     assert canon_rows(a) == canon_rows(b)
 
 
-def test_knn_summary_cache_bounded_across_calls(spark):
-    """knn_join persists its per-point top-k summary; repeated calls in
-    one session must not leak one O(points) CacheManager entry per call
-    — the live-summary registry evicts beyond its bound, and eviction
-    does not break a still-held result (it recomputes, bit-identical).
-    Identical calls share one CacheManager entry, so they must keep one
-    registry slot: evicting an older twin would uncache the newest."""
-    from pyspark import StorageLevel
+def _knn_brute(pts: pd.DataFrame, feats: pd.DataFrame, k: int) -> list[tuple]:
+    """NumPy brute force in knn_join's arithmetic: every point against
+    every feature, ranked by (dist2, node_id), at most k per point."""
+    fid = feats.node_id.to_numpy(np.int64)
+    flon = feats.lon.to_numpy(np.float64)
+    flat = feats.lat.to_numpy(np.float64)
+    rows = []
+    for pid, plon, plat in pts[["image_id", "lon", "lat"]].itertuples(index=False):
+        dlon, dlat = plon - flon, plat - flat
+        d2 = dlon * dlon * COS_REF2 + dlat * dlat
+        for rank, i in enumerate(np.lexsort((fid, d2))[:k], start=1):
+            rows.append((int(pid), rank, int(fid[i]), float(d2[i])))
+    return canon_rows(
+        pd.DataFrame(rows, columns=["image_id", "rank", "node_id", "dist2"])
+    )
 
-    from osm2shp_spark.operators import spatial as S
+
+def _knn_case(name: str):
+    """(points, features, k, tile_size) of one adversarial kNN input."""
+    rng = np.random.default_rng(17)
+
+    def near(n, x, y, r):
+        return np.column_stack([x + rng.uniform(-r, r, n), y + rng.uniform(-r, r, n)])
+
+    if name == "cluster_and_far":
+        # a dense cluster, lone features and points all over the globe
+        lone = [[120.0, -30.0], [-170.0, 60.0], [8.5, 47.5]]
+        f = np.vstack([near(40, 8.0, 47.0, 0.001), lone])
+        p = np.vstack([
+            near(30, 8.0, 47.0, 0.01),
+            np.column_stack([rng.uniform(-180, 180, 20), rng.uniform(-90, 90, 20)]),
+        ])
+        return p, f, 3, 0.001
+    if name == "fewer_than_k":
+        return near(25, 8.5, 47.5, 1.5), np.array([[8.0, 47.0], [9.0, 48.0]]), 3, 0.05
+    if name == "grid_ties":
+        # exact binary coordinates on tile boundaries, duplicate features:
+        # many equal distances, decided by feature id
+        g = np.arange(8) / 8
+        f = np.array([[8 + x, 47 + y] for x in g for y in g] * 2)
+        p = np.array([8.0, 47.0]) + rng.integers(-4, 20, (60, 2)) / 16
+        return p, f, 4, 0.125
+    if name == "poles_and_antimeridian":
+        edge = [-180.0, -179.999, 179.999, 180.0]
+        f = np.array([[x, y] for x in edge for y in (-90, 0, 90)] + [[0, 89.999]])
+        p = np.array(
+            [[x, y] for x in (-180, -90, 0, 180) for y in (-90, -89.999, 0, 90)]
+        )
+        return p, f, 2, 0.05
+    if name == "outside_lon_lat_domain":
+        f = np.array([[500.0, 300.0], [-700.0, 0.0], [8.0, 47.0], [8.1, 47.1]])
+        p = np.array([[8.05, 47.05], [600.0, 250.0], [-1000.0, -1000.0], [0.0, 0.0]])
+        return p, f, 2, 0.05
+    assert name == "empty_features"
+    return rng.uniform(0, 10, (20, 2)), np.empty((0, 2)), 2, 0.05
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "cluster_and_far",
+        "fewer_than_k",
+        "grid_ties",
+        "poles_and_antimeridian",
+        "outside_lon_lat_domain",
+        "empty_features",
+    ],
+)
+def test_knn_join_equals_numpy_brute_force(spark, case):
+    """knn_join equals a NumPy brute force bit for bit on inputs built
+    to break a tile search: a cluster with far-away points, fewer
+    features than k, exact-binary grid ties, points and features at
+    the poles and the antimeridian, coordinates outside the lon/lat
+    domain, and no features at all."""
+    p, f, k, tile_size = _knn_case(case)
+    pts = pd.DataFrame(
+        {"image_id": np.arange(len(p)), "lon": p[:, 0], "lat": p[:, 1]}
+    )
+    feats = pd.DataFrame(
+        {"node_id": np.arange(100, 100 + len(f)), "lon": f[:, 0], "lat": f[:, 1]}
+    )
+    got = knn_join(
+        spark.createDataFrame(pts, "image_id long, lon double, lat double"),
+        spark.createDataFrame(feats, "node_id long, lon double, lat double"),
+        k=k,
+        tile_size=tile_size,
+    )
+    assert canon_rows(got.toPandas()) == _knn_brute(pts, feats, k)
+
+
+@pytest.mark.parametrize("query", ["q_knn_places", "q_knn_places_adaptive"])
+def test_over_budget_knn_queries_match_oracle(spark, duck, monkeypatch, query):
+    """Over the broadcast budget both kNN queries take the shuffle
+    knn_join and still reproduce the brute-force oracle."""
+    from osm2shp_spark import queries as Q
+
+    monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 0)
+    got = getattr(Q, query)(spark, SF_SMALL)
+    assert "MapInPandas" not in _plan(got)
+    expect = canon_rows(duck.execute(Q._KNN_ORACLE).df())
+    assert canon_rows(got.toPandas()) == expect
+
+
+def test_knn_join_caches_nothing_across_calls(spark, monkeypatch):
+    """Repeated over-budget, straggler-heavy kNN calls in one session
+    hold no storage: no CacheManager entry and no new persistent RDD
+    (persists and checkpoints both show up there) after N calls."""
+    from osm2shp_spark.operators import _budget
+    from osm2shp_spark.operators.spatial import knn_join_auto
 
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
@@ -97,43 +204,40 @@ def test_knn_summary_cache_bounded_across_calls(spark):
     ).limit(50)
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
-    S._LIVE_SUMMARIES.clear()
-    # earlier tests' ring-expansion localCheckpoint RDDs survive
-    # clearCache until the JVM collects them: count only new RDDs
     held_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    # distinct plans: one per k
-    first = knn_join(imgs, nodes, k=1)
-    expect = canon_rows(first.toPandas())
-    for k in range(2, S._MAX_LIVE_SUMMARIES + 3):
-        assert knn_join(imgs, nodes, k=k).count() > 0
-    assert len(S._LIVE_SUMMARIES) == S._MAX_LIVE_SUMMARIES
+    monkeypatch.setattr(_budget, "BROADCAST_BUDGET_BYTES", 0)
+    for k in (1, 2, 3, 2):
+        out = knn_join_auto(imgs, nodes, k=k, tile_size=0.001)
+        assert out.count() == 1500 * k
+    assert cache.numCachedEntries() == 0
     held = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    assert len(held - held_before) <= S._MAX_LIVE_SUMMARIES
-    # `first`'s summary was evicted above; re-executing it must
-    # recompute and still match
-    assert canon_rows(first.toPandas()) == expect
-    # identical plans: the newest summary stays cached on every call
-    spark.catalog.clearCache()
-    S._LIVE_SUMMARIES.clear()
-    for _ in range(S._MAX_LIVE_SUMMARIES + 2):
-        assert knn_join(imgs, nodes, k=2).count() > 0
-        assert len(S._LIVE_SUMMARIES) == 1
-        assert S._LIVE_SUMMARIES[-1].storageLevel != StorageLevel.NONE
-        assert cache.numCachedEntries() >= 1
+    assert held <= held_before
+
+
+def _plan(df, mode: str = "formatted") -> str:
+    return df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
+    )
+
+
+def _broadcast_inputs(df) -> set[tuple[str, ...]]:
+    """Input attribute names of each BroadcastExchange in the formatted
+    plan."""
+    out, lines = set(), _plan(df).splitlines()
+    for i, line in enumerate(lines):
+        if line.startswith("(") and line.split(") ", 1)[-1] == "BroadcastExchange":
+            attrs = lines[i + 1].split(": ", 1)[1].strip("[]").split(", ")
+            out.add(tuple(a.split("#")[0] for a in attrs if a))
+    return out
 
 
 def test_knn_oversize_fallback_never_broadcasts_features(spark, monkeypatch):
-    """When the feature table is over the broadcast budget, the brute
-    fallback must resolve stragglers by iterative tile-ring expansion —
-    no BroadcastExchange of the feature side in the very regime where
-    the planner refused to broadcast it — both from knn_join directly
-    and from knn_join_auto's over-budget route. A tiny tile size forces
-    most points through the fallback, so the ring path actually runs
-    (multiple widening rounds), and the rows must equal the in-budget
-    broadcast fallback's bit for bit."""
-    from osm2shp_spark.operators import _budget
-    from osm2shp_spark.operators.spatial import knn_join_auto
-
+    """Over the broadcast budget no BroadcastExchange carries feature
+    rows (no ``_fid``/``_flon``): the only broadcasts are the one-row
+    straggler gate and the chosen levels — from knn_join directly and
+    from knn_join_auto's over-budget route. A tiny tile size sends
+    most points down the straggler path, and the rows equal the
+    in-budget numpy path's bit for bit."""
     imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
     nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
@@ -148,46 +252,49 @@ def test_knn_oversize_fallback_never_broadcasts_features(spark, monkeypatch):
             knn_join_auto(imgs, nodes, k=2, tile_size=0.001),
         ]
         monkeypatch.undo()
-        under = knn_join(imgs, nodes, k=2, tile_size=0.001)
-
-        def plan(df):
-            return df._jdf.queryExecution().explainString(
-                df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-
-        # over budget, the stragglers go through ring expansion
+        under = canon_rows(
+            knn_join_auto(imgs, nodes, k=2, tile_size=0.001).toPandas()
+        )
         for over in overs:
-            assert "BroadcastExchange" not in plan(over)
-            assert "MapInPandas" not in plan(over)
-            assert canon_rows(over.toPandas()) == canon_rows(under.toPandas())
+            # the gate (no column left after pruning) and the levels
+            assert _broadcast_inputs(over) == {(), ("_lvl",)}
+            assert "MapInPandas" not in _plan(over)
+            assert canon_rows(over.toPandas()) == under
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_knn_no_fallback_subtree_when_all_resolved(spark):
-    """r6: with every point provably resolved in its 3x3 ring, the
-    returned plan must contain no fallback machinery at all (the
-    always-planned BroadcastExchange of the full feature table was the
-    r5 verdict's scale-killer — it built its relation even when the
-    unresolved set was empty)."""
-    imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
-    nodes = synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
+def test_knn_no_fallback_subtree_when_all_resolved(spark, tmp_path):
+    """With every point provably resolved by the base pass, the
+    straggler path's feature scans never run: its gate broadcast is
+    empty, so AQE drops them and the executed plan scans the feature
+    source once. A straggler-heavy call scans it three times."""
+    src = str(tmp_path / "features")
+    synthetic_nodes(spark, SF_SMALL).filter("id > 0").select(
         F.col("id").alias("node_id"), "lon", "lat"
-    )
-    # one globe-sized tile: every point sees every feature, all resolve
-    out = knn_join(imgs, nodes, k=2, tile_size=1000.0)
-    plan = out._jdf.queryExecution().explainString(
-        out._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
+    ).limit(50).write.parquet(src)
+    imgs = synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat")
+    nodes = spark.read.parquet(src)
+
+    def scans(tile_size: float) -> int:
+        out = knn_join(imgs, nodes, k=2, tile_size=tile_size)
+        assert len(out.collect()) == 1500 * 2
+        final = out._jdf.queryExecution().executedPlan().toString()
+        final = final.split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final
+        return sum(
+            1 for line in final.splitlines() if "FileScan" in line and src in line
         )
-    )
-    # the brute subtree's signature nodes: the broadcast cross join and
-    # its row_number window ("Union" would be ambiguous — the synthetic
-    # node fixture itself contains one)
-    assert "BroadcastNestedLoopJoin" not in plan and "Window" not in plan
-    assert out.count() > 0
+
+    # the scan's location is abbreviated in the plan string past this
+    old = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    try:
+        # one globe-sized tile: every point sees every feature, all resolve
+        assert scans(1000.0) == 1
+        assert scans(0.001) == 3
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", old)
 
 
 def test_knn_auto_empty_features_matches_shuffle(spark):
@@ -423,23 +530,11 @@ class TestKnnTileWindow:
         )
         return imgs, nodes
 
-    def test_tile_window_drops_an_exchange(self, spark, monkeypatch):
+    def test_tile_window_drops_an_exchange(self, spark):
         """With broadcast disabled, HashPartitioning(tile) satisfies the
         tile-keyed top-k aggregate's ClusteredDistribution (subset
         rule) — candidates must never re-shuffle between the join and
-        the aggregate. localCheckpoint is identity-patched (on the
-        classic class — instances override the pyspark.sql.DataFrame
-        base) so the pre-checkpoint subtree stays visible to explain."""
-        from pyspark.sql.classic.dataframe import DataFrame as _DF
-
-        monkeypatch.setattr(
-            _DF, "localCheckpoint", lambda self, *a, **kw: self
-        )
-        monkeypatch.setattr(_DF, "persist", lambda self, *a, **kw: self)
-        # earlier knn tests leave the persisted topk in the
-        # CacheManager; it would substitute InMemoryRelation for the
-        # matching subtree here and hide the aggregate from explain
-        spark.catalog.clearCache()
+        the aggregate."""
         imgs, nodes = self._inputs(spark)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -458,11 +553,11 @@ class TestKnnTileWindow:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
         def exchange_under_topk_agg(plan: str, key_marker: str) -> bool:
-            """True if the top-k aggregate (the only collect_list agg in
-            knn_join) re-shuffles candidates: walking down from each
-            FINAL collect_list aggregate whose keys contain
-            ``key_marker``, an Exchange before the partial aggregate
-            means the candidate set crossed the wire."""
+            """True if the base pass's top-k aggregate (knn_join's only
+            collect_list agg keyed by tile) re-shuffles candidates:
+            walking down from each FINAL collect_list aggregate whose
+            keys contain ``key_marker``, an Exchange before the partial
+            aggregate means the candidate set crossed the wire."""
             lines = plan.splitlines()
             hits = []
             for i, line in enumerate(lines):
