@@ -9,9 +9,12 @@
 tag-extracted ``tag_*`` columns or a raw ``tags MAP<STRING,STRING>``
 which is adapted automatically, optionally ``images.parquet`` in the
 input_hint schema), or — exactly like the reference binary — a raw
-``planet.osm`` / ``.osm.gz`` / ``.osm.bz2`` file, which is first
-ingested to parquet under ``<output_dir>/ingested/``
-(sources/osmxml.py). Output: layer-partitioned parquet per SURVEY
+OSM file, which is first ingested to parquet under
+``<output_dir>/ingested/``. A ``.pbf`` file is decoded blob-parallel
+by Spark tasks (``sources.osmpbf.read_pbf_distributed``) and written
+by Spark; a ``planet.osm`` / ``.osm.gz`` / ``.osm.bz2`` file streams
+through the sequential XML reader (sources/osmxml.py). The ingested
+row counts go to stderr. Output: layer-partitioned parquet per SURVEY
 §2.1 O14-O16 + lineage manifest. The reference's hard-coded rule set
 ships as the default.
 """
@@ -36,35 +39,49 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from osm2shp_spark import engine
     from osm2shp_spark.operators.classify import extract_tags
     from osm2shp_spark.session import get_spark
 
-    if os.path.isfile(args.input_dir):
-        if args.images:
-            # fail BEFORE the (possibly hours-long) ingest: an OSM
-            # file carries no image table, so the unconditional
-            # images.parquet read below would crash after it
-            raise SystemExit(
-                "--images requires a table directory input (an "
-                "images.parquet alongside nodes/ways); a raw OSM file "
-                "has no image table"
-            )
+    raw_input = os.path.isfile(args.input_dir)
+    if raw_input and args.images:
+        # fail BEFORE the (possibly hours-long) ingest: an OSM file
+        # carries no image table, so the unconditional images.parquet
+        # read below would crash after it
+        raise SystemExit(
+            "--images requires a table directory input (an "
+            "images.parquet alongside nodes/ways); a raw OSM file "
+            "has no image table"
+        )
+
+    spark = get_spark(app_name="osm2shp_spark_cli", master=args.master)
+
+    if raw_input:
         # raw OSM input file, exactly like the reference binary
         # (osm2shp.cc:13 accepts .osm(.gz|.bz2); PBF per osm2shp.cc:1)
         ingest_dir = os.path.join(args.output_dir, "ingested")
         if args.input_dir.endswith(".pbf"):
-            from osm2shp_spark.sources.osmpbf import convert_pbf_to_parquet
+            from osm2shp_spark.sources.osmpbf import read_pbf_distributed
 
-            counts = convert_pbf_to_parquet(args.input_dir, ingest_dir)
+            # the row counts ride the writes: no rescan of the tables
+            counts = {}
+            tables = read_pbf_distributed(spark, args.input_dir)
+            for name, df in zip(("nodes", "ways"), tables):
+                obs = Observation(f"ingested_{name}")
+                observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+                observed.write.mode("overwrite").parquet(
+                    os.path.join(ingest_dir, f"{name}.parquet")
+                )
+                counts[name] = int(obs.get["n"])
         else:
             from osm2shp_spark.sources.osmxml import convert_osm_to_parquet
 
             counts = convert_osm_to_parquet(args.input_dir, ingest_dir)
         print(json.dumps({"ingested": counts}), file=sys.stderr)
         args.input_dir = ingest_dir
-
-    spark = get_spark(app_name="osm2shp_spark_cli", master=args.master)
 
     def load(name: str):
         df = spark.read.parquet(os.path.join(args.input_dir, f"{name}.parquet"))
@@ -81,9 +98,6 @@ def main(argv: list[str] | None = None) -> int:
     res = engine.run(spark, nodes, ways, args.output_dir, images=images)
 
     if args.generalize:
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
         from osm2shp_spark.operators.generalize import generalize_ways
         from osm2shp_spark.sources.tables import write_partitioned
 

@@ -112,12 +112,9 @@ def run(
     # strategy auto-selected by size stats (salted mega-way / general
     # Catalyst) — operators/assemble.py; every
     # assembled geometry carries hex cells res 7-12 + S2 covering
-    # tokens (north rule), one Arrow pass each family. defer_filters:
-    # the tag_* columns callers pass are derived (extract_tags map
-    # lookups, the synthetic views' CASE chains), the case the
-    # classification barrier exists for (operators/classify.py)
+    # tokens (north rule), one Arrow pass each family
     assembled = with_way_cells(
-        with_geometry_meta(assemble_ways_auto(nodes, ways, defer_filters=True)),
+        with_geometry_meta(assemble_ways_auto(nodes, ways)),
         s2_level=s2_level,
         hex_resolutions=hex_resolutions,
     )

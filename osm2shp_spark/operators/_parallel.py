@@ -7,14 +7,14 @@ that Catalyst fuses into the scan stage runs in ONE task no matter how
 many cores the session has (guide §2.5: "one huge unsplittable file —
 repartition immediately after the read").
 
-``ensure_min_parallelism`` is the operator-side guard: identity
+``ensure_min_parallelism`` is the one parallelism guard: identity
 whenever the input already has at least ``defaultParallelism``
 partitions (every production multi-file/multi-row-group layout), a
-cheap round-robin repartition otherwise. ``sources.tables._balance_scan``
-applies it at registration time to fact-sized tables only; operators
-whose per-input-row work is orders of magnitude above a scan's apply it
-regardless of input *size* — a 0.5 MB document table still fans out to
-thousands of shingle-hash rows per document.
+cheap round-robin repartition otherwise. Driver tables register as
+plain scans; the operators whose per-input-row work is orders of
+magnitude above a scan's apply the guard regardless of input *size* —
+a 0.5 MB document table still fans out to thousands of shingle-hash
+rows per document.
 """
 
 from __future__ import annotations

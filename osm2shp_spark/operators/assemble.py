@@ -45,7 +45,7 @@ from osm2shp_spark.operators.classify import classify_ways, staged_nodes
 
 def assemble_ways(
     nodes: DataFrame, ways: DataFrame, compact_pos: bool = False,
-    defer_filters: bool = False,
+    *, defer_filters: bool = True,
 ) -> DataFrame:
     """The assembly join (pure Catalyst).
 
@@ -69,11 +69,14 @@ def assemble_ways(
     routes anything near the bound to the salted path anyway. The OSM
     data model caps ways at 2 000 refs, so real extracts always
     qualify.
+
+    ``defer_filters`` is accepted and ignored: classification always
+    runs behind its barriers (:func:`classify_ways`).
     """
     from osm2shp_spark.rules import pair_kind_sql, pair_layer_sql, way_pair_idx_sql
 
     itype = "smallint" if compact_pos else "int"
-    classified = classify_ways(ways, defer_filters=defer_filters)
+    classified = classify_ways(ways)
     exploded = classified.select(
         F.col("id").alias("way_id"),
         F.expr(way_pair_idx_sql()).alias("_li"),
@@ -105,11 +108,7 @@ def assemble_ways(
 MEGA_WAY_THRESHOLD = 50_000  # refs per way before the salted path
 
 
-def assemble_ways_auto(
-    nodes: DataFrame,
-    ways: DataFrame,
-    defer_filters: bool = False,
-) -> DataFrame:
+def assemble_ways_auto(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """Strategy selector for the flagship join:
 
     - any mega-way of at least :data:`MEGA_WAY_THRESHOLD` refs → salted
@@ -126,16 +125,12 @@ def assemble_ways_auto(
     if max_refs >= MEGA_WAY_THRESHOLD:
         from osm2shp_spark.operators.skew import assemble_ways_salted
 
-        return assemble_ways_salted(nodes, ways, defer_filters=defer_filters)
-    return assemble_ways(
-        nodes, ways, compact_pos=max_refs <= 32767,
-        defer_filters=defer_filters,
-    )
+        return assemble_ways_salted(nodes, ways)
+    return assemble_ways(nodes, ways, compact_pos=max_refs <= 32767)
 
 
 def assembly_counters(
-    nodes: DataFrame, ways: DataFrame, assembled: DataFrame | None = None,
-    defer_filters: bool = False,
+    nodes: DataFrame, ways: DataFrame, assembled: DataFrame | None = None
 ) -> DataFrame:
     """O17 observability counters as one aggregate row (handler.cc:59-61,
     84-85,108-109 — upgraded from stderr prints to a queryable result).
@@ -164,11 +159,7 @@ def assembly_counters(
             F.count(F.expr(routed_flag)).alias("routed_ways"),
         )
     )
-    exported = (
-        assemble_ways(nodes, ways, defer_filters=defer_filters)
-        if assembled is None
-        else assembled
-    )
+    exported = assemble_ways(nodes, ways) if assembled is None else assembled
     return (
         both.crossJoin(exported.agg(F.count(F.lit(1)).alias("exported_ways")))
         .select(

@@ -38,9 +38,7 @@ def extract_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
     return df.select("*", *cols)
 
 
-def classify_ways(
-    ways: DataFrame, refs_col: str = "refs", defer_filters: bool = False
-) -> DataFrame:
+def classify_ways(ways: DataFrame, refs_col: str = "refs") -> DataFrame:
     """Add ``kind``/``n_refs``/``layer``, apply min-vertex + has-layer filters.
 
     Kind is decided BEFORE layer match and the vertex count is on raw
@@ -48,34 +46,20 @@ def classify_ways(
     Returns only ways that route to a layer (the reference ``break``s
     on first match whether or not resolution later succeeds).
 
-    ``defer_filters``: evaluate the classification expressions on the
-    input's materialized columns instead of letting the optimizer
-    substitute and push them below the input's own operators. For
-    parquet-backed ways tables pushdown is pure win (tag equality
-    predicates prune at the scan), so the default stays False. For
-    *derived* inputs whose tag columns are expensive expressions of the
-    way id (the synthetic gate fixture: tags = CASE chains over
-    ``id % 17`` above a collect_list aggregate), letting the filters
-    push means NullPropagation / PushFoldableIntoBranches re-expand
-    them into boolean towers that (a) cost ~5 us/row with no
-    subexpression elimination, evaluated once per *base* row in the
-    fixture's single-split scan task (measured: 2.2 s of way_assembly's
-    3.1 s wall), and (b) in deeper pipelines (polylines) blow past
-    janino's 64 KB method limit, paying a doomed ~1 s compile attempt
-    on every execution. The barrier is a single-element ``inline``
-    Generate over all input columns — a projection-collapse and
-    pushdown boundary (same trick as ``spatial._strip_closed_ring``):
-    downstream expressions see plain attributes, stay small, compile,
-    and run once per way in the post-exchange stage, in parallel
-    (measured: way_assembly 1.8 -> 1.4 s, polylines 7.5 -> 3.1 s noop).
+    The classification runs between two collapse barriers: tag columns
+    are often derived expressions (``extract_tags`` map lookups, the
+    synthetic fixture's CASE chains), and without a barrier the
+    optimizer substitutes and pushes the filters below them, expanding
+    each into a boolean tower evaluated once per base row in a
+    single-task scan stage, and in deeper pipelines (polylines) past
+    janino's 64 KB method limit.
     """
     from osm2shp_spark.operators._parallel import collapse_barrier
 
-    if defer_filters:
-        # keep the way id outside the struct: it is the downstream
-        # group/join key, and keeping it preserves partitioning reuse
-        # (one fewer exchange in the assembly reduce stage)
-        ways = collapse_barrier(ways, keep=("id",))
+    # keep the way id outside the struct: it is the downstream
+    # group/join key, and keeping it preserves partitioning reuse
+    # (one fewer exchange in the assembly reduce stage)
+    ways = collapse_barrier(ways, keep=("id",))
     out = (
         ways.withColumn("kind", F.expr(way_kind_sql()))
         .withColumn("n_refs", F.size(refs_col))
@@ -83,13 +67,11 @@ def classify_ways(
         .withColumn("layer", F.expr(way_layer_sql("kind")))
         .filter(F.col("layer").isNotNull())
     )
-    if defer_filters:
-        # barrier the OUTPUT too: kind/layer otherwise re-inline into
-        # every downstream consumer (the pair-index coding, pushed
-        # kind filters), and in deeper pipelines (polylines) the
-        # re-multiplied towers are what crossed 64 KB
-        out = collapse_barrier(out, keep=("id",))
-    return out
+    # barrier the OUTPUT too: kind/layer otherwise re-inline into
+    # every downstream consumer (the pair-index coding, pushed kind
+    # filters), and in deeper pipelines (polylines) the re-multiplied
+    # towers are what crossed 64 KB
+    return collapse_barrier(out, keep=("id",))
 
 
 def staged_nodes(nodes: DataFrame) -> DataFrame:

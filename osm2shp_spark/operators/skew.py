@@ -31,8 +31,7 @@ DEFAULT_CHUNK = 1024
 
 
 def assemble_ways_salted(
-    nodes: DataFrame, ways: DataFrame, chunk: int = DEFAULT_CHUNK,
-    defer_filters: bool = False,
+    nodes: DataFrame, ways: DataFrame, chunk: int = DEFAULT_CHUNK
 ) -> DataFrame:
     """Skew-proof variant of ``assemble.assemble_ways`` — identical
     output (equivalence-tested), bounded reducer keys.
@@ -46,7 +45,7 @@ def assemble_ways_salted(
 
     if chunk > 32767:
         raise ValueError("chunk must fit smallint in-chunk positions (<= 32767)")
-    classified = classify_ways(ways, defer_filters=defer_filters)
+    classified = classify_ways(ways)
     # same tinyint (layer, kind) coding as assemble_ways: 1 byte of
     # classification through the exploded join + BOTH groupBy shuffles.
     # Exchange diet: global order = (chunk_id, pos % chunk), so only

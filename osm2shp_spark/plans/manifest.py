@@ -21,7 +21,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = (
@@ -142,20 +142,17 @@ def run_stage_resumable(
             orphans = on_disk.join(F.broadcast(orphan_keys), part_col, "left_semi")
             m.append(partition_lineage(orphans, stage, part_col, snapshot_id))
     todo = m.pending(inp, stage, part_col)
-    # persist: referenced by isEmpty, the write, and the key collect —
-    # one evaluation, and a transform that is not bit-deterministic
-    # across recomputations cannot record keys it did not write
-    out = transform(todo).persist()
-    try:
-        if out.isEmpty():
-            return out
-        out.write.mode("append").parquet(out_dir)
-        # partition keys are coarse units (thousands, not rows): a
-        # driver-side list is the same scale the broadcast anti-join
-        # in pending() already ships
-        new_keys = [r[0] for r in out.select(part_col).distinct().collect()]
-    finally:
-        out.unpersist(blocking=False)
+    if todo.isEmpty():
+        return transform(todo)
+    # the written keys ride the append itself: an observation reports
+    # what landed on disk, so a transform that is not deterministic
+    # across recomputations still records exactly the keys it wrote.
+    # Partition keys are coarse units (thousands, not rows): the set
+    # is the same scale the broadcast anti-join in pending() ships.
+    obs = Observation(f"keys_{stage}")
+    out = transform(todo).observe(obs, F.collect_set(part_col).alias("keys"))
+    out.write.mode("append").parquet(out_dir)
+    new_keys = obs.get["keys"]
     # Re-read the new slice from disk for both the lineage and the
     # return value: digests then cover the bytes actually persisted,
     # and the result survives the manifest append below — the
@@ -164,5 +161,6 @@ def run_stage_resumable(
     written = spark.read.parquet(out_dir).filter(
         F.col(part_col).isin(new_keys)
     )
-    m.append(partition_lineage(written, stage, part_col, snapshot_id))
+    if new_keys:
+        m.append(partition_lineage(written, stage, part_col, snapshot_id))
     return written

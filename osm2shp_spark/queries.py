@@ -169,9 +169,7 @@ def q_way_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalars (see ``_assembly_scalar_projection``)."""
     nodes = synthetic_nodes(spark, sf_dir)
     ways = synthetic_ways(spark, sf_dir)
-    return _assembly_scalar_projection(
-        assemble_ways(nodes, ways, defer_filters=True)
-    )
+    return _assembly_scalar_projection(assemble_ways(nodes, ways))
 
 
 def _mega_assembly_oracle() -> str:
@@ -202,9 +200,7 @@ def q_way_assembly_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nodes = synthetic_nodes(spark, sf_dir)
     ways = synthetic_mega_ways(spark, sf_dir)
-    return _assembly_scalar_projection(
-        assemble_ways_auto(nodes, ways, defer_filters=True)
-    )
+    return _assembly_scalar_projection(assemble_ways_auto(nodes, ways))
 
 
 def _way_strategies_oracle() -> str:
@@ -235,12 +231,11 @@ def q_way_assembly_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted = q_way_assembly_salted(spark, sf_dir).select(
         F.lit("salted").alias("strategy"), "*"
     )
-    auto = _assembly_scalar_projection(
-        assemble_ways_auto(
-            synthetic_nodes(spark, sf_dir), synthetic_ways(spark, sf_dir),
-            defer_filters=True,
-        )
-    ).select(F.lit("mapside").alias("strategy"), "*")
+    nodes = synthetic_nodes(spark, sf_dir)
+    ways = synthetic_ways(spark, sf_dir)
+    auto = _assembly_scalar_projection(assemble_ways_auto(nodes, ways)).select(
+        F.lit("mapside").alias("strategy"), "*"
+    )
     return salted.unionByName(auto)
 
 
@@ -401,7 +396,7 @@ def q_generalize_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nodes = synthetic_nodes(spark, sf_dir)
     ways = synthetic_ways(spark, sf_dir)
-    gen = generalize_ways(assemble_ways(nodes, ways, defer_filters=True))
+    gen = generalize_ways(assemble_ways(nodes, ways))
     qsum = lambda c: (  # noqa: E731
         f"aggregate(transform({c}, x -> {_q6i('x')}), "
         f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
@@ -501,9 +496,7 @@ def q_geom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nodes = synthetic_nodes(spark, sf_dir)
     ways = synthetic_ways(spark, sf_dir)
-    return dedup_geometries(
-        assemble_ways(nodes, ways, defer_filters=True)
-    ).select(
+    return dedup_geometries(assemble_ways(nodes, ways)).select(
         "way_id", "layer", "kind", "n_pts"
     )
 
@@ -520,9 +513,7 @@ def q_polylines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nodes = synthetic_nodes(spark, sf_dir)
     ways = synthetic_ways(spark, sf_dir)
-    return build_polylines(
-        assemble_ways(nodes, ways, defer_filters=True)
-    ).select(
+    return build_polylines(assemble_ways(nodes, ways)).select(
         "layer", "polyline_key", "n_segments", "n_pts"
     )
 
@@ -564,7 +555,7 @@ FROM (SELECT count(*) AS processed_ways FROM ways) p,
 def q_way_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = synthetic_nodes(spark, sf_dir)
     ways = synthetic_ways(spark, sf_dir)
-    return assembly_counters(nodes, ways, defer_filters=True)
+    return assembly_counters(nodes, ways)
 
 
 # ---------------------------------------------------------------------------
@@ -934,8 +925,7 @@ def q_shapefile_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = _tf.mkdtemp(prefix="shp_gate_")
     ways = assemble_ways(
-        synthetic_nodes(spark, sf_dir), synthetic_ways(spark, sf_dir),
-        defer_filters=True,
+        synthetic_nodes(spark, sf_dir), synthetic_ways(spark, sf_dir)
     )
     export_shapefiles(None, ways, out)
     rows = []

@@ -171,8 +171,8 @@ def pair_layer_sql(idx_expr: str) -> str:
 
     A total CASE, not ``element_at(array(...), idx + 1)``: when a
     downstream filter on the decoded string is pushed below the
-    classification filters (legal once those are deferred —
-    classify_ways ``defer_filters``), the decode can be evaluated on
+    classification filters (legal behind classify_ways' collapse
+    barriers), the decode can be evaluated on
     not-yet-routed rows whose index is NULL, and ANSI ``element_at``
     codegen faults on the null index's 0 slot value
     (INVALID_INDEX_OF_ZERO). CASE is null-total by construction and

@@ -36,7 +36,7 @@ import math
 import os
 import struct
 import zlib
-from typing import IO, Iterator
+from typing import Iterator
 
 import numpy as np
 
@@ -255,43 +255,6 @@ def decode_primitive_block(
                     )
                 )
     return nodes, ways
-
-
-def parse_osm_pbf(path: str) -> Iterator[tuple[str, tuple]]:
-    """Stream (kind, row) like ``osmxml.parse_osm_xml`` — the
-    single-process path sharing the converter plumbing."""
-    with open(path, "rb") as f:
-        for btype, off, size in blob_index(path):
-            if btype != "OSMData":
-                continue
-            f.seek(off)
-            block = _inflate_blob(f.read(size))
-            nodes, ways = decode_primitive_block(block)
-            for row in nodes:
-                yield "node", row
-            for row in ways:
-                yield "way", row
-
-
-def convert_pbf_to_parquet(
-    pbf_path: str, out_dir: str, batch_rows: int = 100_000
-) -> dict[str, int]:
-    """Single-process converter twin of
-    ``osmxml.convert_osm_to_parquet`` (same output tables)."""
-    from osm2shp_spark.sources.osmxml import (
-        NODE_SCHEMA,
-        WAY_SCHEMA,
-        _BatchWriter,
-    )
-
-    os.makedirs(out_dir, exist_ok=True)
-    nodes = _BatchWriter(os.path.join(out_dir, "nodes.parquet"), NODE_SCHEMA, batch_rows)
-    ways = _BatchWriter(os.path.join(out_dir, "ways.parquet"), WAY_SCHEMA, batch_rows)
-    for kind, row in parse_osm_pbf(pbf_path):
-        (nodes if kind == "node" else ways).add(row)
-    nodes.close()
-    ways.close()
-    return {"nodes": nodes.count, "ways": ways.count}
 
 
 # ---------------------------------------------------------------------------

@@ -15,8 +15,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from osm2shp_spark.operators._parallel import ensure_min_parallelism
-
 #: Driver-provided relational tables (TESTDATA.md).
 DRIVER_TABLES = (
     "region",
@@ -35,50 +33,6 @@ DRIVER_TABLES = (
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table (swap point for a real Iceberg catalog)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-#: Tables below this size stay unbalanced. Sized so that NOTHING
-#: balances at the driver's measured sf0.1 (largest table 10.8 MB):
-#: measured on the frozen bench, view-level balancing there was a net
-#: loss — the win cases (knn points, dedup signature stages) are per-
-#: row-work-bound, not scan-bound, and get their parallelism from the
-#: operator-side ``ensure_min_parallelism`` guard instead; the extra
-#: exchange regressed tile_vector_join 0.51->0.75 s and way_assembly
-#: 3.14->3.34 s. Above ~32 MB the scan *decode* itself is the
-#: single-task bottleneck, which only an input-side respread fixes.
-MIN_BALANCE_BYTES = 32 * 1024 * 1024
-
-
-def _balance_scan(df: DataFrame, path: str) -> DataFrame:
-    """Give a fact-table view real scan-stage parallelism.
-
-    The driver parquet files are written as ONE row group each, and a
-    Parquet scan cannot split below row-group granularity — so every
-    expression/partial-aggregate fused into a scan stage runs on one
-    core regardless of cluster width (measured: way_assembly's map
-    stage 2.8 s CPU in 1 of 32 slots). Tables of at least
-    :data:`MIN_BALANCE_BYTES` go through
-    :func:`~osm2shp_spark.operators._parallel.ensure_min_parallelism`
-    (``df`` is a fresh scan, its precondition): a round-robin
-    repartition to ``defaultParallelism`` when the scan yields fewer
-    splits, the identity when it already yields enough (every
-    production multi-row-group / multi-file layout) or under Spark
-    Connect. Dimension tables stay as they are.
-    """
-    if _input_bytes(path) < MIN_BALANCE_BYTES:
-        return df
-    return ensure_min_parallelism(df)
-
-
-def _input_bytes(path: str) -> int:
-    """Size of a parquet file, or the files of a parquet directory."""
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-    return os.path.getsize(path)
 
 
 #: sf_dir whose views are CURRENTLY registered, per session — temp
@@ -124,8 +78,7 @@ def register_driver_tables(spark: SparkSession, sf_dir: str) -> None:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             raise FileNotFoundError(f"driver table missing: {path}")
-        df = read_table(spark, sf_dir, name)
-        _balance_scan(df, path).createOrReplaceTempView(name)
+        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
     _CURRENT_SF[sid] = sf_dir
 
 

@@ -198,6 +198,40 @@ def test_resume_skips_completed_partitions(spark, tmp_path):
     assert m.pending(df, "double", "part_key").count() == 0
 
 
+def _keep_half_python():
+    """A Python coin per row: unlike ``rand()``, whose seed is fixed
+    when the plan is built, every evaluation keeps a different subset."""
+    import random
+
+    coin = F.udf(lambda: random.random() < 0.5, "boolean").asNondeterministic()
+    return coin()
+
+
+@pytest.mark.parametrize(
+    "keep", [lambda: F.rand() < 0.5, _keep_half_python], ids=["rand", "python"]
+)
+def test_resume_records_what_a_random_transform_wrote(spark, tmp_path, keep):
+    """A transform that filters at random, with nothing persisted
+    between the write and the lineage: the manifest must record exactly
+    the keys, row counts and digests that are on disk."""
+    out_dir = str(tmp_path / "out")
+    man_dir = str(tmp_path / "manifest")
+    # two rows per key: about a quarter of the keys lose both rows
+    df = spark.range(800).withColumn("part_key", F.col("id") % 400)
+
+    def xform(d):
+        return d.filter(keep())
+
+    r = run_stage_resumable(spark, df, "rand", "part_key", xform, out_dir, man_dir)
+    on_disk = spark.read.parquet(out_dir)
+    want = partition_lineage(on_disk, "rand", "part_key").toPandas()
+    assert 0 < len(want) < 400
+    got = Manifest(spark, man_dir).read().toPandas()
+    cols = ["part_key", "row_count", "digest"]
+    assert canon_rows(got[cols]) == canon_rows(want[cols])
+    assert r.count() == on_disk.count() == want.row_count.sum()
+
+
 def test_resume_heals_unrecorded_partitions_without_duplicates(spark, tmp_path):
     """Crash window between data append and manifest append: the data
     for a partition is fully committed but unrecorded. The resume must

@@ -1,7 +1,7 @@
 """OSM PBF ingestion (O1, the reference's primary input —
-osm2shp.cc:1): encoder/decoder round-trip at the wire level, the
-distributed blob-parallel reader vs the sequential reader, and
-pipeline equality through the flagship join.
+osm2shp.cc:1): encoder/decoder round-trip through the blob-parallel
+reader, pipeline equality through the flagship join, and the CLI's
+ingest.
 
 PBF quantizes coordinates to 100 nanodegrees (granularity 100 ×
 1e-9 scale — the real format's resolution), so coordinate expectations
@@ -14,7 +14,6 @@ import os
 import pytest
 
 from conftest import SF_SMALL
-from parity import canon_rows
 
 from osm2shp_spark.operators.assemble import assemble_ways
 from osm2shp_spark.operators.classify import extract_tags
@@ -22,9 +21,7 @@ from osm2shp_spark.sources.osmpbf import (
     COORD_SCALE,
     GRANULARITY_DEFAULT,
     blob_index,
-    convert_pbf_to_parquet,
     encode_osm_pbf,
-    parse_osm_pbf,
     read_pbf_distributed,
 )
 from osm2shp_spark.sources.synthetic import synthetic_nodes, synthetic_ways
@@ -60,11 +57,11 @@ def test_blob_index_covers_file(pbf_file):
     assert off + size == os.path.getsize(path)
 
 
-def test_decode_round_trips_rows(pbf_file):
+def test_decode_round_trips_rows(spark, pbf_file):
     path, node_rows, way_rows = pbf_file
-    got_nodes, got_ways = [], []
-    for kind, row in parse_osm_pbf(path):
-        (got_nodes if kind == "node" else got_ways).append(row)
+    nodes_df, ways_df = read_pbf_distributed(spark, path)
+    got_nodes = [(r.id, r.lon, r.lat, r.tags) for r in nodes_df.collect()]
+    got_ways = [(r.id, r.refs, r.tags) for r in ways_df.collect()]
     assert len(got_nodes) == len(node_rows)
     assert len(got_ways) == len(way_rows)
 
@@ -87,27 +84,6 @@ def test_decode_round_trips_rows(pbf_file):
         (wid, tuple(refs), tuple(sorted(dict(tags).items())))
         for wid, refs, tags in way_rows
     )
-
-
-def test_distributed_reader_equals_sequential(spark, pbf_file, tmp_path):
-    """The blob-parallel mapInPandas reader must produce exactly the
-    sequential converter's tables."""
-    path, _, _ = pbf_file
-    out = str(tmp_path / "seq")
-    convert_pbf_to_parquet(path, out, batch_rows=97)
-    seq_nodes = spark.read.parquet(os.path.join(out, "nodes.parquet"))
-    seq_ways = spark.read.parquet(os.path.join(out, "ways.parquet"))
-    dist_nodes, dist_ways = read_pbf_distributed(spark, path)
-    assert canon_rows(dist_nodes.toPandas()) == canon_rows(seq_nodes.toPandas())
-    # MAP columns don't canon-hash; compare ways on scalar+array cols
-    def wkey(df):
-        return canon_rows(
-            df.selectExpr(
-                "id", "refs", "map_entries(tags) AS t"
-            ).toPandas()
-        )
-
-    assert wkey(dist_ways) == wkey(seq_ways)
 
 
 def test_pbf_pipeline_matches_original_tables(spark, pbf_file, tmp_path):
@@ -133,7 +109,7 @@ def test_cli_end_to_end_from_pbf(pbf_file, tmp_path):
     import subprocess
     import sys
 
-    path, _, _ = pbf_file
+    path, node_rows, way_rows = pbf_file
     out = str(tmp_path / "run")
     proc = subprocess.run(
         [sys.executable, "-m", "osm2shp_spark.cli", path, out,
@@ -145,6 +121,12 @@ def test_cli_end_to_end_from_pbf(pbf_file, tmp_path):
     res = json.loads(proc.stdout.strip().splitlines()[-1])
     assert res["counts"]["exported_ways"] > 0
     assert res["counts"]["exported_nodes"] > 0
+    [ingested] = [
+        json.loads(line)["ingested"]
+        for line in proc.stderr.splitlines()
+        if line.startswith('{"ingested"')
+    ]
+    assert ingested == {"nodes": len(node_rows), "ways": len(way_rows)}
 
 
 # ---------------------------------------------------------------------------

@@ -284,31 +284,18 @@ def test_corpus_curation_plan_shape(spark):
 
 
 def test_defer_filters_keeps_classification_off_the_scan(spark):
-    """r6: with ``defer_filters`` the classification predicates must
-    NOT be extracted and pushed to the base-table scan (where the
-    optimizer re-expands them into a per-base-row boolean tower on a
-    possibly 1-split, single-task stage). The scan node's DataFilters
-    carried the expanded ``CASE WHEN ... THEN true`` tower before the
-    fix."""
+    """r6: the classification predicates must NOT be extracted and
+    pushed to the base-table scan (where the optimizer re-expands them
+    into a per-base-row boolean tower on a possibly 1-split,
+    single-task stage). The scan node's DataFilters carried the
+    expanded ``CASE WHEN ... THEN true`` tower before the fix."""
     df = assemble_ways(
-        synthetic_nodes(spark, SF_SMALL),
-        synthetic_ways(spark, SF_SMALL),
-        defer_filters=True,
+        synthetic_nodes(spark, SF_SMALL), synthetic_ways(spark, SF_SMALL)
     )
     p = _plan(df)
     assert "DataFilters: [CASE WHEN" not in p
     # the collapse barriers are single-element inline Generates
     assert "inline(array(struct" in p
-
-
-def test_defer_filters_default_still_pushes(spark):
-    """The default (parquet-shaped inputs) must keep pushdown — the
-    barrier is opt-in, not a blanket pessimization."""
-    df = assemble_ways(
-        synthetic_nodes(spark, SF_SMALL), synthetic_ways(spark, SF_SMALL)
-    )
-    p = _plan(df)
-    assert "inline(array(struct" not in p
 
 
 def test_pip_dimension_side_has_collapse_barrier(spark):

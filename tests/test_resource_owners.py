@@ -17,10 +17,6 @@ HELD = {"persist", "cache", "localCheckpoint", "checkpoint"}
 
 #: ``module::function`` -> why it holds a resource
 OWNERS = {
-    "plans/manifest.py::run_stage_resumable": (
-        "the stage output is read by isEmpty, the write and the key "
-        "collect; unpersisted in a finally"
-    ),
     "operators/spatial.py::knn_join_auto": (
         "the tile-bucketed feature arrays ship as one broadcast; "
         "never released"
@@ -72,3 +68,5 @@ def test_driver_held_resources_have_known_owners():
     assert not unknown, f"persist/checkpoint/broadcast without an owner: {unknown}"
     stale = set(OWNERS) - {owner for owner, _, _ in found}
     assert not stale, f"owners that no longer hold a resource: {sorted(stale)}"
+    # the library persists, caches and checkpoints nothing
+    assert {kind for _, kind, _ in found} == {"broadcast"}, found
