@@ -14,7 +14,8 @@ OSM file, which is first ingested to parquet under
 by Spark tasks (``sources.osmpbf.read_pbf_distributed``) and written
 by Spark; a ``planet.osm`` / ``.osm.gz`` / ``.osm.bz2`` file streams
 through the sequential XML reader (sources/osmxml.py). The ingested
-row counts go to stderr. Output: layer-partitioned parquet per SURVEY
+row counts join the stdout summary as ``counts.ingested_nodes`` and
+``counts.ingested_ways``. Output: layer-partitioned parquet per SURVEY
 §2.1 O14-O16 + lineage manifest. The reference's hard-coded rule set
 ships as the default.
 """
@@ -59,6 +60,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name="osm2shp_spark_cli", master=args.master)
 
+    ingested = {}
     if raw_input:
         # raw OSM input file, exactly like the reference binary
         # (osm2shp.cc:13 accepts .osm(.gz|.bz2); PBF per osm2shp.cc:1)
@@ -67,7 +69,6 @@ def main(argv: list[str] | None = None) -> int:
             from osm2shp_spark.sources.osmpbf import read_pbf_distributed
 
             # the row counts ride the writes: no rescan of the tables
-            counts = {}
             tables = read_pbf_distributed(spark, args.input_dir)
             for name, df in zip(("nodes", "ways"), tables):
                 obs = Observation(f"ingested_{name}")
@@ -75,12 +76,12 @@ def main(argv: list[str] | None = None) -> int:
                 observed.write.mode("overwrite").parquet(
                     os.path.join(ingest_dir, f"{name}.parquet")
                 )
-                counts[name] = int(obs.get["n"])
+                ingested[f"ingested_{name}"] = int(obs.get["n"])
         else:
             from osm2shp_spark.sources.osmxml import convert_osm_to_parquet
 
             counts = convert_osm_to_parquet(args.input_dir, ingest_dir)
-        print(json.dumps({"ingested": counts}), file=sys.stderr)
+            ingested = {f"ingested_{name}": n for name, n in counts.items()}
         args.input_dir = ingest_dir
 
     def load(name: str):
@@ -96,6 +97,7 @@ def main(argv: list[str] | None = None) -> int:
         images = spark.read.parquet(os.path.join(args.input_dir, "images.parquet"))
 
     res = engine.run(spark, nodes, ways, args.output_dir, images=images)
+    res.counts.update(ingested)
 
     if args.generalize:
         from osm2shp_spark.operators.generalize import generalize_ways

@@ -52,21 +52,14 @@ def _export_stage(
     stage: str,
     manifest: Manifest,
     snapshot: str,
-    with_lineage: bool,
 ) -> int:
-    """Write one layer-partitioned output and return its row count
-    WITHOUT a dedicated post-write ``count()`` rescan (at 100 TB those
-    are real jobs): an ``Observation`` rides a job the stage runs
-    anyway. With lineage off that is the write itself; with lineage on
-    it is the lineage append, whose per-partition ``row_count`` rows
-    sum to the rows written (the digest pass reads the written data
-    once anyway — that scan is the lineage feature, not overhead)."""
+    """Write one layer-partitioned output plus its lineage and return
+    its row count WITHOUT a dedicated post-write ``count()`` rescan (at
+    100 TB those are real jobs): an ``Observation`` rides the lineage
+    append, whose per-partition ``row_count`` rows sum to the rows
+    written (the digest pass reads the written data once anyway — that
+    scan is the lineage feature, not overhead)."""
     obs = Observation(f"rows_{stage}")
-    if not with_lineage:
-        write_partitioned(
-            df.observe(obs, F.count(F.lit(1)).alias("n")), path, ["layer"]
-        )
-        return int(obs.get["n"])
     write_partitioned(df, path, ["layer"])
     # explicit schema: a zero-row partitioned write leaves only
     # _SUCCESS, and a bare read-back would raise
@@ -93,10 +86,6 @@ def run(
     ways: DataFrame,
     out_dir: str,
     images: DataFrame | None = None,
-    s2_level: int = 12,
-    hex_resolutions: tuple[int, ...] = (7, 8, 9, 10, 11, 12),
-    with_lineage: bool = True,
-    adaptive_hot_threshold: int = 1000,
 ) -> RunResult:
     """Run the full pipeline; returns per-output counts.
 
@@ -113,46 +102,34 @@ def run(
     # Catalyst) — operators/assemble.py; every
     # assembled geometry carries hex cells res 7-12 + S2 covering
     # tokens (north rule), one Arrow pass each family
-    assembled = with_way_cells(
-        with_geometry_meta(assemble_ways_auto(nodes, ways)),
-        s2_level=s2_level,
-        hex_resolutions=hex_resolutions,
-    )
+    assembled = with_way_cells(with_geometry_meta(assemble_ways_auto(nodes, ways)))
     way_out = os.path.join(out_dir, "ways")
     res.outputs["ways"] = way_out
     res.counts["exported_ways"] = _export_stage(
-        spark, assembled, way_out, "ways", manifest, snapshot, with_lineage
+        spark, assembled, way_out, "ways", manifest, snapshot
     )
 
     # --- nodes: point export + cells --------------------------------------
-    points = with_point_cells(
-        classify_nodes(nodes), s2_level=s2_level, hex_resolutions=hex_resolutions
-    )
+    points = with_point_cells(classify_nodes(nodes))
     node_out = os.path.join(out_dir, "points")
     res.outputs["points"] = node_out
     res.counts["exported_nodes"] = _export_stage(
-        spark, points, node_out, "points", manifest, snapshot, with_lineage
+        spark, points, node_out, "points", manifest, snapshot
     )
 
     # --- images: cell index + PIP layer classification --------------------
     if images is not None:
-        indexed = with_point_cells(
-            images, s2_level=s2_level, hex_resolutions=hex_resolutions
-        )
         # north-rule adaptive cell splitting in the hot path: dense
         # cells re-index at finer resolution before the written index
         # feeds downstream rollups/joins (operators/skew.py)
-        base_res = (
-            hex_resolutions[2] if len(hex_resolutions) > 2 else hex_resolutions[-1]
-        )
         indexed = adaptive_cells(
-            indexed,
-            base_res=base_res,
-            hot_threshold=adaptive_hot_threshold,
+            with_point_cells(images),
+            base_res=9,
+            hot_threshold=1000,
             # with_point_cells just computed this exact cell id —
             # reuse the column instead of a second full-table Arrow
             # pass through hex_cell_udf
-            cell_col=f"hex_r{base_res}",
+            cell_col="hex_r9",
         )
         # read the assembly back from the table just written instead of
         # re-executing the pipeline's most expensive DAG (the exploded
@@ -180,7 +157,6 @@ def run(
             "images_classified",
             manifest,
             snapshot,
-            with_lineage,
         )
 
     # CRS sidecar (O16): constant table property, never reprojected

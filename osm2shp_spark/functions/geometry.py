@@ -7,8 +7,8 @@ as test references. They cover:
   bit-identical to,
 - Douglas–Peucker simplification — parity with the GRASS
   ``v.generalize method=douglas`` step (reference mapgen.sh:59,68,77,86),
-- snap-to-grid quantization + dedup/degenerate cleaning — parity with
-  ``v.clean snap,break,rmdupl`` / ``rmline`` (mapgen.sh:60-61,69-70).
+- dedup/degenerate cleaning — parity with ``v.clean rmdupl`` /
+  ``rmline`` (mapgen.sh:60-61,69-70).
 
 WKB encoding for the content-addressed geometry lineage is the batch
 kernel :func:`functions.udfs.wkb_udf`.
@@ -111,13 +111,8 @@ def simplify(xs: np.ndarray, ys: np.ndarray, eps: float) -> tuple[np.ndarray, np
 
 
 # ---------------------------------------------------------------------------
-# cleaning (GRASS v.clean parity: snap, rmdupl, rmline)
+# cleaning (GRASS v.clean parity: rmdupl, rmline)
 # ---------------------------------------------------------------------------
-
-def snap_to_grid(xs: np.ndarray, eps: float) -> np.ndarray:
-    """Quantize coordinates to an ``eps`` grid (v.clean tool=snap)."""
-    return np.round(np.asarray(xs, np.float64) / eps) * eps
-
 
 def drop_consecutive_duplicates(xs: np.ndarray, ys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Remove consecutive duplicate vertices (v.clean tool=rmdupl)."""

@@ -38,12 +38,6 @@ _COS_REF = np.cos(np.radians(_REF_LAT))
 _OFFSET = 1 << 29
 _MASK30 = (1 << 30) - 1
 
-MIN_RES = 0
-MAX_RES = 15
-
-#: axial-coordinate neighbor steps (pointy-top hex lattice)
-NEIGHBOR_STEPS = ((1, 0), (1, -1), (0, -1), (-1, 0), (-1, 1), (0, 1))
-
 
 def res_size(res: int) -> float:
     return _RES0_SIZE / (_APERTURE_SQRT**res)

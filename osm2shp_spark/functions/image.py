@@ -227,7 +227,7 @@ def _from_blocks(blocks: np.ndarray, h: int, w: int) -> np.ndarray:
     )
 
 
-def encode_dcx(arr: np.ndarray, quality: int = DCX_DEFAULT_QUALITY) -> bytes:
+def encode_dcx(arr: np.ndarray) -> bytes:
     """Encode RGB8 → DCX (lossy). All blocks of all three planes go
     through one broadcasted DCT matmul each — no per-pixel Python."""
     h, w, c = arr.shape
@@ -243,7 +243,7 @@ def encode_dcx(arr: np.ndarray, quality: int = DCX_DEFAULT_QUALITY) -> bytes:
     cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
     cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
     ph, pw = -h % 8, -w % 8
-    ql, qc = _dcx_qtables(quality)
+    ql, qc = _dcx_qtables(DCX_DEFAULT_QUALITY)
     planes = []
     for plane, qt in ((y, ql), (cb, qc), (cr, qc)):
         padded = np.pad(plane, ((0, ph), (0, pw)), mode="edge") - 128.0
@@ -252,7 +252,7 @@ def encode_dcx(arr: np.ndarray, quality: int = DCX_DEFAULT_QUALITY) -> bytes:
         coefs = _DCT_C[None] @ blocks @ _DCT_C.T[None]
         qz = np.round(coefs / qt).astype(np.int16)
         planes.append(qz.tobytes())
-    header = _DCX_MAGIC + struct.pack(">HHB", w, h, max(1, min(100, int(quality))))
+    header = _DCX_MAGIC + struct.pack(">HHB", w, h, DCX_DEFAULT_QUALITY)
     return header + zlib.compress(b"".join(planes), 6)
 
 

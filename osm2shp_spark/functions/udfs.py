@@ -93,8 +93,6 @@ def cell_family_udf(s2_level: int, hex_resolutions: tuple[int, ...]):
 
 def with_point_cells(
     df: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     s2_level: int = 12,
     hex_resolutions: tuple[int, ...] = HEX_RESOLUTIONS,
 ) -> DataFrame:
@@ -102,7 +100,7 @@ def with_point_cells(
     ``s2_cell`` + ``s2_token`` at ``s2_level``, ``hex_r{res}`` per res.
     """
     fam = cell_family_udf(s2_level, hex_resolutions)
-    out = df.withColumn("_cells", fam(F.col(lon_col), F.col(lat_col)))
+    out = df.withColumn("_cells", fam(F.col("lon"), F.col("lat")))
     for f in fam.returnType.names:
         out = out.withColumn(f, F.col(f"_cells.{f}"))
     return out.drop("_cells")

@@ -40,9 +40,9 @@ _SPREAD = ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555))
 # Catalyst column expressions
 # ---------------------------------------------------------------------------
 
-def quantize_col(c: Column, lo: float, hi: float, bits: int = BITS) -> Column:
-    """[lo, hi] → integer grid [0, 2**bits - 1] (clamped)."""
-    n = (1 << bits) - 1
+def quantize_col(c: Column, lo: float, hi: float) -> Column:
+    """[lo, hi] → integer grid [0, 2**BITS - 1] (clamped)."""
+    n = (1 << BITS) - 1
     q = F.floor((c - F.lit(float(lo))) / F.lit(float(hi - lo)) * F.lit(float(n)))
     return F.greatest(F.lit(0), F.least(F.lit(n), q)).cast("long")
 
@@ -53,14 +53,11 @@ def _spread_col(c: Column) -> Column:
     return c
 
 
-def zkey_col(
-    lon: Column, lat: Column, bbox: tuple[float, float, float, float] = DEFAULT_BBOX,
-    bits: int = BITS,
-) -> Column:
-    """Morton key column: bit-interleaved quantized (lon, lat); lon in
-    the even bits, lat in the odd."""
-    qx = _spread_col(quantize_col(lon, bbox[0], bbox[2], bits))
-    qy = _spread_col(quantize_col(lat, bbox[1], bbox[3], bits))
+def zkey_col(lon: Column, lat: Column) -> Column:
+    """Morton key column: bit-interleaved quantized (lon, lat) over
+    ``DEFAULT_BBOX``; lon in the even bits, lat in the odd."""
+    qx = _spread_col(quantize_col(lon, DEFAULT_BBOX[0], DEFAULT_BBOX[2]))
+    qy = _spread_col(quantize_col(lat, DEFAULT_BBOX[1], DEFAULT_BBOX[3]))
     return qx.bitwiseOR(F.shiftleft(qy, 1))
 
 
@@ -68,8 +65,8 @@ def zkey_col(
 # portable SQL twin (DuckDB oracle / Spark SQL — shared dialect subset)
 # ---------------------------------------------------------------------------
 
-def quantize_sql(expr: str, lo: float, hi: float, bits: int = BITS) -> str:
-    n = (1 << bits) - 1
+def quantize_sql(expr: str, lo: float, hi: float) -> str:
+    n = (1 << BITS) - 1
     q = f"CAST(FLOOR(({expr} - {lo!r}e0) / {hi - lo!r}e0 * {float(n)!r}e0) AS BIGINT)"
     return f"GREATEST(0, LEAST({n}, {q}))"
 
@@ -80,17 +77,14 @@ def _spread_sql(expr: str) -> str:
     return expr
 
 
-def zkey_sql(
-    lon_expr: str, lat_expr: str,
-    bbox: tuple[float, float, float, float] = DEFAULT_BBOX, bits: int = BITS,
-) -> str:
+def zkey_sql(lon_expr: str, lat_expr: str) -> str:
     """SQL rendering of :func:`zkey_col` — evaluates identically in
     DuckDB and Spark SQL (IEEE doubles, two's-complement bit ops).
     The spread steps reference the quantized sub-expression multiple
     times; both optimizers CSE it, and the values stay < 2^32 so no
     sign/overflow divergence is possible."""
-    qx = _spread_sql(quantize_sql(lon_expr, bbox[0], bbox[2], bits))
-    qy = _spread_sql(quantize_sql(lat_expr, bbox[1], bbox[3], bits))
+    qx = _spread_sql(quantize_sql(lon_expr, DEFAULT_BBOX[0], DEFAULT_BBOX[2]))
+    qy = _spread_sql(quantize_sql(lat_expr, DEFAULT_BBOX[1], DEFAULT_BBOX[3]))
     return f"(({qx}) | (({qy}) << 1))"
 
 
@@ -98,18 +92,14 @@ def zkey_sql(
 # layout writer + pruned reader
 # ---------------------------------------------------------------------------
 
-def zorder_write(
-    df: DataFrame, path: str, lon: str = "lon", lat: str = "lat",
-    bbox: tuple[float, float, float, float] = DEFAULT_BBOX,
-    target_files: int = 8, bits: int = BITS,
-) -> None:
+def zorder_write(df: DataFrame, path: str, target_files: int = 8) -> None:
     """Write ``df`` parquet laid out by Morton key: range-partition on
     zkey (one shuffle, contiguous key interval per output file) then
     sort within partitions so row-group min-max stats are tight too.
     ``target_files`` stands in for the cluster-size-derived file count
     a real deployment would compute from bytes/file."""
     (
-        df.withColumn("zkey", zkey_col(F.col(lon), F.col(lat), bbox, bits))
+        df.withColumn("zkey", zkey_col(F.col("lon"), F.col("lat")))
         .repartitionByRange(target_files, "zkey")
         .sortWithinPartitions("zkey")
         .write.mode("overwrite")
@@ -126,12 +116,10 @@ def _interleave_int(x: int, y: int) -> int:
 
 def zkey_ranges(
     bbox_query: tuple[float, float, float, float],
-    bbox: tuple[float, float, float, float] = DEFAULT_BBOX,
-    bits: int = BITS, max_cells: int = 64,
 ) -> list[tuple[int, int]]:
     """Decompose a query bbox into a small list of contiguous zkey
     intervals (merged quadtree cells at the coarsest level that keeps
-    the cell count ≤ ``max_cells``). The union of intervals is a
+    the cell count ≤ 64). The union of intervals is a
     SUPERSET of the bbox's keys — callers re-filter on lon/lat for
     exactness; the intervals only exist to prune the scan."""
 
@@ -143,16 +131,17 @@ def zkey_ranges(
         # formula, one rounding.
         import math
 
-        n = (1 << bits) - 1
+        n = (1 << BITS) - 1
         return max(0, min(n, math.floor((v - lo) / (hi - lo) * n)))
 
-    qx0, qx1 = _q(bbox_query[0], bbox[0], bbox[2]), _q(bbox_query[2], bbox[0], bbox[2])
-    qy0, qy1 = _q(bbox_query[1], bbox[1], bbox[3]), _q(bbox_query[3], bbox[1], bbox[3])
+    x0, y0, x1, y1 = DEFAULT_BBOX
+    qx0, qx1 = _q(bbox_query[0], x0, x1), _q(bbox_query[2], x0, x1)
+    qy0, qy1 = _q(bbox_query[1], y0, y1), _q(bbox_query[3], y0, y1)
     # finest-to-coarsest: stop at the smallest cell side whose count
     # fits the budget — the tightest covering, hence the most pruning
-    for s in range(bits + 1):  # cell side = 2**s grid steps
+    for s in range(BITS + 1):  # cell side = 2**s grid steps
         cx0, cx1, cy0, cy1 = qx0 >> s, qx1 >> s, qy0 >> s, qy1 >> s
-        if (cx1 - cx0 + 1) * (cy1 - cy0 + 1) <= max_cells:
+        if (cx1 - cx0 + 1) * (cy1 - cy0 + 1) <= 64:
             break
     span = 1 << (2 * s)  # keys per cell
     starts = sorted(
@@ -170,20 +159,18 @@ def zkey_ranges(
 
 
 def read_bbox(
-    spark, path: str, bbox_query: tuple[float, float, float, float],
-    lon: str = "lon", lat: str = "lat",
-    bbox: tuple[float, float, float, float] = DEFAULT_BBOX, bits: int = BITS,
+    spark, path: str, bbox_query: tuple[float, float, float, float]
 ) -> DataFrame:
     """Read a zorder_write layout restricted to a bbox: OR-of-zkey-range
     predicates prune files/row-groups at the scan (visible as
     PushedFilters), then an exact lon/lat filter on the survivors."""
     df = spark.read.parquet(path)
-    ranges = zkey_ranges(bbox_query, bbox, bits)
+    ranges = zkey_ranges(bbox_query)
     key_pred = None
     for a, b in ranges:
         p = (F.col("zkey") >= a) & (F.col("zkey") <= b)
         key_pred = p if key_pred is None else key_pred | p
     return df.filter(key_pred).filter(
-        (F.col(lon) >= bbox_query[0]) & (F.col(lon) <= bbox_query[2])
-        & (F.col(lat) >= bbox_query[1]) & (F.col(lat) <= bbox_query[3])
+        (F.col("lon") >= bbox_query[0]) & (F.col("lon") <= bbox_query[2])
+        & (F.col("lat") >= bbox_query[1]) & (F.col("lat") <= bbox_query[3])
     )

@@ -129,21 +129,16 @@ def assemble_ways_auto(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     return assemble_ways(nodes, ways, compact_pos=max_refs <= 32767)
 
 
-def assembly_counters(
-    nodes: DataFrame, ways: DataFrame, assembled: DataFrame | None = None
-) -> DataFrame:
+def assembly_counters(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """O17 observability counters as one aggregate row (handler.cc:59-61,
     84-85,108-109 — upgraded from stderr prints to a queryable result).
 
     Columns: processed_ways, routed_ways (matched a layer, pre-join),
     exported_ways (survived resolution), dropped_unresolved.
 
-    ``assembled``: pass the pipeline's already-materialized assembly
-    output (e.g. read back from its written table) so the most
-    expensive join in the engine is not re-executed from scratch for
-    one integer. processed + routed come from ONE scan of the ways
-    table (classification is a per-row expression, so counting rows
-    and routed rows in the same aggregate is free).
+    processed + routed come from ONE scan of the ways table
+    (classification is a per-row expression, so counting rows and
+    routed rows in the same aggregate is free).
     """
     from osm2shp_spark.rules import min_vertex_sql, way_kind_sql, way_layer_sql
 
@@ -159,7 +154,7 @@ def assembly_counters(
             F.count(F.expr(routed_flag)).alias("routed_ways"),
         )
     )
-    exported = assemble_ways(nodes, ways) if assembled is None else assembled
+    exported = assemble_ways(nodes, ways)
     return (
         both.crossJoin(exported.agg(F.count(F.lit(1)).alias("exported_ways")))
         .select(

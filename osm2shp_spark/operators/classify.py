@@ -31,14 +31,14 @@ from osm2shp_spark.rules import (
 )
 
 
-def extract_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
-    """Flatten the tag map into ``tag_<key>`` columns (key lookups only —
-    the reference never iterates tags, osm/handler.cc:16-24)."""
-    cols = [F.col(tags_col).getItem(k).alias(tag_col(k)) for k in TAG_KEYS]
+def extract_tags(df: DataFrame) -> DataFrame:
+    """Flatten the ``tags`` map into ``tag_<key>`` columns (key lookups
+    only — the reference never iterates tags, osm/handler.cc:16-24)."""
+    cols = [F.col("tags").getItem(k).alias(tag_col(k)) for k in TAG_KEYS]
     return df.select("*", *cols)
 
 
-def classify_ways(ways: DataFrame, refs_col: str = "refs") -> DataFrame:
+def classify_ways(ways: DataFrame) -> DataFrame:
     """Add ``kind``/``n_refs``/``layer``, apply min-vertex + has-layer filters.
 
     Kind is decided BEFORE layer match and the vertex count is on raw
@@ -62,7 +62,7 @@ def classify_ways(ways: DataFrame, refs_col: str = "refs") -> DataFrame:
     ways = collapse_barrier(ways, keep=("id",))
     out = (
         ways.withColumn("kind", F.expr(way_kind_sql()))
-        .withColumn("n_refs", F.size(refs_col))
+        .withColumn("n_refs", F.size("refs"))
         .filter(F.expr(min_vertex_sql("kind", "n_refs")))
         .withColumn("layer", F.expr(way_layer_sql("kind")))
         .filter(F.col("layer").isNotNull())

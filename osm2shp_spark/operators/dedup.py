@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Hash-groupBy exact dedup on normalized text.
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
+    """Hash-groupBy exact dedup on normalized ``text``.
 
     Output: (text_key, n_dups, keeper) — one row per distinct
     normalized text; ``keeper`` is the smallest id (the canonical
@@ -36,13 +36,13 @@ def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     """
     return (
         docs.select(
-            F.md5(F.lower(F.col(text_col))).alias("text_key"),
-            F.col(id_col),
+            F.md5(F.lower(F.col("text"))).alias("text_key"),
+            F.col("doc_id"),
         )
         .groupBy("text_key")
         .agg(
             F.count(F.lit(1)).alias("n_dups"),
-            F.min(id_col).alias("keeper"),
+            F.min("doc_id").alias("keeper"),
         )
     )
 
@@ -56,14 +56,9 @@ def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 MAX_JACCARD_BLOCK = 100_000
 
 
-def jaccard_pairs_blocked(
-    docs: DataFrame,
-    threshold: float,
-    block_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact distinct-token Jaccard over all pairs within each block.
+def jaccard_pairs_blocked(docs: DataFrame, threshold: float) -> DataFrame:
+    """Exact distinct-token Jaccard over all pairs of ``doc_id`` within
+    each ``source`` block.
 
     Pure Catalyst: tokenize → self-equi-join on the block key (never
     globally quadratic) → array_intersect size arithmetic. Output:
@@ -78,7 +73,7 @@ def jaccard_pairs_blocked(
     those is :func:`minhash_near_dups`.
     """
     big = (
-        docs.groupBy(F.col(block_col).alias("_blk"))
+        docs.groupBy(F.col("source").alias("_blk"))
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > MAX_JACCARD_BLOCK)
     )
@@ -97,9 +92,9 @@ def jaccard_pairs_blocked(
     # other's partitioning, so without this the whole quadratic block
     # join ran in ONE task (measured 11.3 s steady at sf0.1).
     t = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("_id"),
-        F.col(block_col).alias("_blk"),
-        F.array_distinct(F.split(F.lower(F.col(text_col)), " ")).alias("_toks"),
+        F.col("doc_id").alias("_id"),
+        F.col("source").alias("_blk"),
+        F.array_distinct(F.split(F.lower(F.col("text")), " ")).alias("_toks"),
     )
     a = t.alias("a")
     b = t.alias("b")
@@ -169,12 +164,13 @@ _BANDS = 16
 _MH_P = (1 << 61) - 1
 
 
-def _shingles_sql(text_col: str, dialect: str, k: int = 3) -> tuple[str, str]:
-    """(token-array expr, k-shingle-array expr over ``_toks``) with
-    identical semantics in both dialects. Docs shorter than k tokens
-    pad with ''."""
+def _shingles_sql(dialect: str) -> tuple[str, str]:
+    """(token-array expr over ``text``, 3-shingle-array expr over
+    ``_toks``) with identical semantics in both dialects. Docs shorter
+    than 3 tokens pad with ''."""
+    k = 3
     if dialect == "spark":
-        toks0 = f"split(lower({text_col}), ' ')"
+        toks0 = "split(lower(text), ' ')"
         toks = (
             f"CASE WHEN size({toks0}) < {k} THEN concat({toks0}, "
             f"array_repeat('', {k} - size({toks0}))) ELSE {toks0} END"
@@ -186,7 +182,7 @@ def _shingles_sql(text_col: str, dialect: str, k: int = 3) -> tuple[str, str]:
             + "))"
         )
         return toks, sh
-    toks0 = f"string_split(lower({text_col}), ' ')"
+    toks0 = "string_split(lower(text), ' ')"
     toks = (
         f"CASE WHEN len({toks0}) < {k} THEN list_concat({toks0}, "
         f"list_transform(generate_series(1, {k} - len({toks0})), x -> '')) "
@@ -200,9 +196,9 @@ def _shingles_sql(text_col: str, dialect: str, k: int = 3) -> tuple[str, str]:
     return toks, sh
 
 
-def _minhash_sig_sql(text_col: str, k: int = 3) -> tuple[str, ...]:
+def _minhash_sig_sql() -> tuple[str, ...]:
     """DuckDB signature expressions ``(toks, shingles, md5s, h1, h2,
-    sig)``: an array of 64 min-hashes over token k-shingles
+    sig)``: an array of 64 min-hashes over token 3-shingles
     (:func:`_shingles_sql`). :func:`minhash_near_dups` computes the same
     values on exploded rows.
 
@@ -214,7 +210,7 @@ def _minhash_sig_sql(text_col: str, k: int = 3) -> tuple[str, ...]:
     than hashing (j, shingle) pairs directly — measured ~40x on the
     signature stage — while staying bit-identical across engines
     (integer + and %, no string concat per j)."""
-    toks, sh = _shingles_sql(text_col, "duckdb", k)
+    toks, sh = _shingles_sql("duckdb")
     md5s = "list_transform(_shingles, s -> md5(s))"
     h1 = "list_transform(_md5s, m -> CAST(('0x' || substr(m, 1, 15)) AS BIGINT))"
     h2 = "list_transform(_md5s, m -> CAST(('0x' || substr(m, 17, 14)) AS BIGINT))"
@@ -226,13 +222,7 @@ def _minhash_sig_sql(text_col: str, k: int = 3) -> tuple[str, ...]:
     return toks, sh, md5s, h1, h2, sig
 
 
-def minhash_near_dups(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    shingle_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_near_dups(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Banded-LSH candidate generation over *portable* md5-based
     MinHash signatures — pure Catalyst (codegen'd JVM expressions, zero
     Python), value-checked end-to-end by the DuckDB twin
@@ -252,7 +242,7 @@ def minhash_near_dups(
     from osm2shp_spark.operators._parallel import ensure_min_parallelism
 
     rows_per_band = _NUM_HASHES // _BANDS
-    toks, sh = _shingles_sql(text_col, "spark", shingle_k)
+    toks, sh = _shingles_sql("spark")
     # Spark-side plan: explode shingles to rows so md5/h1/h2 run as
     # whole-stage-codegen scalar expressions (Catalyst higher-order
     # lambdas are interpreted per element — measured ~8x slower), then
@@ -262,7 +252,7 @@ def minhash_near_dups(
     # would run it single-task — spread first (guide §2.5).
     shingled = (
         ensure_min_parallelism(docs)
-        .select(F.col(id_col).alias("_id"), F.expr(toks).alias("_toks"))
+        .select(F.col("doc_id").alias("_id"), F.expr(toks).alias("_toks"))
         .select("_id", F.explode(F.expr(sh)).alias("_s"))
         .withColumn("_m", F.md5("_s"))
         .select(
@@ -368,15 +358,11 @@ def _hamming_pairs(pairs: DataFrame, max_hamming: int) -> DataFrame:
     )
 
 
-def minhash_near_dups_oracle(
-    docs_sql: str,
-    threshold: float = 0.5,
-    shingle_k: int = 3,
-) -> str:
+def minhash_near_dups_oracle(docs_sql: str, threshold: float = 0.5) -> str:
     """DuckDB twin of :func:`minhash_near_dups` (same signatures, same
     banding, same estimate arithmetic)."""
     rows_per_band = _NUM_HASHES // _BANDS
-    toks, sh, md5s, h1, h2, sig = _minhash_sig_sql("text", shingle_k)
+    toks, sh, md5s, h1, h2, sig = _minhash_sig_sql()
     return f"""
 WITH docs AS ({docs_sql}),
 t AS (SELECT doc_id AS _id, {toks} AS _toks FROM docs),
@@ -418,12 +404,12 @@ _SIMHASH_BITS = 60
 _SIMHASH_BANDS = 4
 
 
-def _simhash_sql(text_col: str) -> tuple[str, str]:
-    """DuckDB (token-hash-list expr, simhash-from-_hs expr).
+def _simhash_sql() -> tuple[str, str]:
+    """DuckDB (token-hash-list expr over ``text``, simhash-from-_hs expr).
     SimHash over the distinct-token set: bit b of the fingerprint is 1
     iff more than half the token hashes have bit b set."""
     hs = (
-        f"list_transform(list_distinct(string_split(lower({text_col}), ' ')), "
+        "list_transform(list_distinct(string_split(lower(text), ' ')), "
         f"t -> {_md5_bigint('t', 'duckdb')})"
     )
     sim = (
@@ -435,12 +421,7 @@ def _simhash_sql(text_col: str) -> tuple[str, str]:
     return hs, sim
 
 
-def simhash_near_dups(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Portable 60-bit SimHash near-dup pairs with hamming ≤ k — pure
     Catalyst (zero Python), DuckDB-oracle-checked end to end
     (:func:`simhash_near_dups_oracle`).
@@ -466,9 +447,9 @@ def simhash_near_dups(
     # tokenize+md5 fuses with the doc scan — spread a 1-split scan
     # first (guide §2.5; same rationale as minhash_near_dups)
     tok = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
-            F.array_distinct(F.split(F.lower(F.col(text_col)), " "))
+            F.array_distinct(F.split(F.lower(F.col("text")), " "))
         ).alias("_t"),
     ).withColumn("_h", F.expr(_md5_bigint("_t", "spark")))
     bits = tok.groupBy("_id").agg(
@@ -506,7 +487,7 @@ def simhash_near_dups(
 
 def simhash_near_dups_oracle(docs_sql: str, max_hamming: int = 3) -> str:
     """DuckDB twin of :func:`simhash_near_dups`."""
-    hs, sim = _simhash_sql("text")
+    hs, sim = _simhash_sql()
     width = _SIMHASH_BITS // _SIMHASH_BANDS
     mask = (1 << width) - 1
     return f"""

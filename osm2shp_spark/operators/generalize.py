@@ -3,8 +3,8 @@
 
 - Douglas–Peucker simplification (``v.generalize method=douglas``,
   thresholds 0.002/0.001 per layer — mapgen.sh:59,68,77,86)
-- snap-to-grid + consecutive-duplicate removal + degenerate-line drop
-  (``v.clean snap,break,rmdupl`` / ``rmline`` — mapgen.sh:60-61)
+- consecutive-duplicate removal + degenerate-line drop
+  (``v.clean rmdupl`` / ``rmline`` — mapgen.sh:60-61)
 - geometry-digest dedup (drop identical geometries)
 
 All per-geometry work is vectorized NumPy in one ``mapInPandas`` pass;
@@ -23,8 +23,9 @@ from pyspark.sql import functions as F
 
 from osm2shp_spark.functions import geometry as G
 
-#: the reference's per-layer DP thresholds (mapgen.sh:59,68,77,86);
-#: point/polygon layers pass through untouched (mapgen.sh:54)
+#: the reference's per-layer DP thresholds (mapgen.sh:59,68,77,86),
+#: read at call time; point/polygon layers pass through untouched
+#: (mapgen.sh:54)
 LAYER_THRESHOLDS: dict[str, float] = {
     "roadbig_line": 0.002,
     "roadmedium_line": 0.002,
@@ -39,18 +40,14 @@ GENERALIZED_SCHEMA = (
 )
 
 
-def generalize_ways(
-    assembled: DataFrame,
-    thresholds: dict[str, float] | None = None,
-    snap_eps: float = 0.0,
-) -> DataFrame:
+def generalize_ways(assembled: DataFrame) -> DataFrame:
     """Simplify + clean assembled line geometries.
 
     Per layer: DP-simplify at its threshold (layers without one pass
-    through), optional snap-to-grid, drop consecutive duplicates, drop
-    degenerate results (<2 distinct vertices — v.clean rmline).
+    through), drop consecutive duplicates, drop degenerate results
+    (<2 distinct vertices — v.clean rmline).
     """
-    th = LAYER_THRESHOLDS if thresholds is None else thresholds
+    th = LAYER_THRESHOLDS
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -70,9 +67,6 @@ def generalize_ways(
                 eps = th.get(r.layer, 0.0)
                 if eps > 0.0:
                     xs, ys = G.simplify(xs, ys, eps)
-                if snap_eps > 0.0:
-                    xs = G.snap_to_grid(xs, snap_eps)
-                    ys = G.snap_to_grid(ys, snap_eps)
                 xs, ys = G.drop_consecutive_duplicates(xs, ys)
                 if G.is_degenerate_line(xs, ys):
                     continue

@@ -36,15 +36,15 @@ from osm2shp_spark.functions import image as I
 # audio (WAV/PCM16 — stdlib, real)
 # ---------------------------------------------------------------------------
 
-def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
-    """Mono PCM16 WAV from float samples in [-1, 1]."""
+def encode_wav(samples: np.ndarray) -> bytes:
+    """Mono PCM16 WAV at 16 kHz from float samples in [-1, 1]."""
     pcm = np.clip(samples, -1.0, 1.0)
     ints = (pcm * 32767.0).astype("<i2")
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
-        w.setframerate(rate)
+        w.setframerate(16000)
         w.writeframes(ints.tobytes())
     return buf.getvalue()
 
@@ -64,18 +64,16 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def audio_features_pdf(
-    pdf: pd.DataFrame, id_col: str = "audio_id", bytes_col: str = "bytes"
-) -> pd.DataFrame:
+def audio_features_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """Row kernel of :func:`audio_features` — shared with the
     golden-oracle generator (``osm2shp_spark.golden``)."""
     rows = []
     for r in pdf.itertuples(index=False):
-        s, rate = decode_wav(getattr(r, bytes_col))
+        s, rate = decode_wav(r.bytes)
         zc = int(np.count_nonzero(np.diff(np.signbit(s))))
         rows.append(
             (
-                getattr(r, id_col),
+                r.audio_id,
                 len(s) / rate,
                 float(np.sqrt(np.mean(s * s))) if len(s) else 0.0,
                 zc,
@@ -88,12 +86,12 @@ def audio_features_pdf(
     )
 
 
-def audio_features(audio: DataFrame, id_col: str = "audio_id", bytes_col: str = "bytes") -> DataFrame:
+def audio_features(audio: DataFrame) -> DataFrame:
     """Decode WAV bytes → per-clip features. Map-only pass."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield audio_features_pdf(pdf, id_col, bytes_col)
+            yield audio_features_pdf(pdf)
 
     return audio.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
 
@@ -105,23 +103,19 @@ def audio_features(audio: DataFrame, id_col: str = "audio_id", bytes_col: str = 
 RESIZED_SCHEMA = "image_id STRING, out_w INT, out_h INT, bytes BINARY, fmt STRING"
 
 
-def resize_images(
-    images: DataFrame, out_w: int, out_h: int, fmt: str = "ppm"
-) -> DataFrame:
-    """Decode → block-mean resize → re-encode. The resize kernel is the
+def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
+    """Decode → block-mean resize → re-encode as PPM. The resize kernel is the
     same deterministic block-mean used by phash (exact, no resampling
     library needed)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield resize_images_pdf(pdf, out_w, out_h, fmt)
+            yield resize_images_pdf(pdf, out_w, out_h)
 
     return images.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
-def resize_images_pdf(
-    pdf: pd.DataFrame, out_w: int, out_h: int, fmt: str = "ppm"
-) -> pd.DataFrame:
+def resize_images_pdf(pdf: pd.DataFrame, out_w: int, out_h: int) -> pd.DataFrame:
     """Row kernel of :func:`resize_images` — shared with the
     golden-oracle generator."""
     rows = []
@@ -134,7 +128,7 @@ def resize_images_pdf(
             ],
             axis=2,
         ).round().clip(0, 255).astype(np.uint8)
-        rows.append((r.image_id, out_w, out_h, I.encode_image(out, fmt), fmt))
+        rows.append((r.image_id, out_w, out_h, I.encode_image(out, "ppm"), "ppm"))
     return pd.DataFrame(
         rows, columns=["image_id", "out_w", "out_h", "bytes", "fmt"]
     )
@@ -181,36 +175,28 @@ FRAME_SAMPLE_SCHEMA = (
 )
 
 
-def sample_video_frames(
-    videos: DataFrame, every_nth: int = 2, id_col: str = "video_id",
-    bytes_col: str = "bytes", fmt_col: str = "fmt",
-) -> DataFrame:
+def sample_video_frames(videos: DataFrame, every_nth: int = 2) -> DataFrame:
     """Explode videos into sampled per-frame feature rows (1 video in,
     n_frames/every_nth rows out — the standard frame-level fan-out for
     training pipelines)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield sample_video_frames_pdf(pdf, every_nth, id_col, bytes_col, fmt_col)
+            yield sample_video_frames_pdf(pdf, every_nth)
 
     return videos.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
 
 
-def sample_video_frames_pdf(
-    pdf: pd.DataFrame, every_nth: int = 2, id_col: str = "video_id",
-    bytes_col: str = "bytes", fmt_col: str = "fmt",
-) -> pd.DataFrame:
+def sample_video_frames_pdf(pdf: pd.DataFrame, every_nth: int = 2) -> pd.DataFrame:
     """Row kernel of :func:`sample_video_frames` — shared with the
     golden-oracle generator."""
     rows = []
     for r in pdf.itertuples(index=False):
-        frames = decode_video_frames(
-            getattr(r, bytes_col), getattr(r, fmt_col), every_nth
-        )
+        frames = decode_video_frames(r.bytes, r.fmt, every_nth)
         for fi, f in enumerate(frames):
             rows.append(
                 (
-                    getattr(r, id_col),
+                    r.video_id,
                     fi * every_nth,
                     f.shape[1],
                     f.shape[0],

@@ -62,32 +62,23 @@ def split_sql(bucket_expr: str) -> str:
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    key_col: str = "doc_id",
-    stratum_col: str = "lang",
-    rates: dict[str, int] = DEFAULT_RATES,
-) -> DataFrame:
-    """Keep each row iff its deterministic bucket falls under the
-    stratum's quota; kept rows carry the bucket and an 8/1/1
+def stratified_sample(docs: DataFrame) -> DataFrame:
+    """Keep each row iff the deterministic bucket of its ``doc_id``
+    falls under its ``lang`` stratum's quota (:data:`DEFAULT_RATES`);
+    kept rows carry the bucket and an 8/1/1
     train/val/test split. Pure Catalyst map-filter — no shuffle, no
     state, no RNG."""
-    bucket = F.expr(bucket_sql(key_col))
-    rate = F.expr(rate_sql(stratum_col, rates))
+    bucket = F.expr(bucket_sql("doc_id"))
+    rate = F.expr(rate_sql("lang", DEFAULT_RATES))
     out = docs.withColumn("bucket", bucket).filter(F.col("bucket") < rate)
     return out.withColumn("split", F.expr(split_sql("bucket")))
 
 
-def stratified_sample_oracle(
-    docs_sql: str,
-    key_col: str = "doc_id",
-    stratum_col: str = "lang",
-    rates: dict[str, int] = DEFAULT_RATES,
-) -> str:
-    b = bucket_sql(key_col)
+def stratified_sample_oracle(docs_sql: str) -> str:
+    b = bucket_sql("doc_id")
     return f"""
 WITH docs AS ({docs_sql}),
 k AS (SELECT *, {b} AS bucket FROM docs)
 SELECT *, {split_sql('bucket')} AS split
-FROM k WHERE bucket < {rate_sql(stratum_col, rates)}
+FROM k WHERE bucket < {rate_sql('lang', DEFAULT_RATES)}
 """

@@ -90,15 +90,14 @@ def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k: (probe_id, rank, neighbor_id, cosine).
+    """Exact cosine top-k over (vec_id, embedding) rows:
+    (probe_id, rank, neighbor_id, cosine).
 
     Self-matches excluded; ties broken by neighbor id. The corpus is
     scanned once.
 
-    Physical strategy: probe sets whose ``(id_col, vec_col)`` bytes fit
+    Physical strategy: probe sets whose ``(vec_id, embedding)`` bytes fit
     the broadcast budget (:mod:`._budget`, one aggregate) score
     through :func:`_cosine_topk_broadcast_numpy` — the
     probes×corpus dot products run as vectorized NumPy with the SAME
@@ -112,20 +111,18 @@ def cosine_topk(
     planner picks the cross join's strategy (the probes just failed
     the budget, so no broadcast hint).
     """
-    if _budget.fits_broadcast(probes.select(id_col, vec_col)):
-        cand = _cosine_topk_broadcast_numpy(
-            corpus, probes, k, id_col, vec_col
-        )
+    if _budget.fits_broadcast(probes.select("vec_id", "embedding")):
+        cand = _cosine_topk_broadcast_numpy(corpus, probes, k)
     else:
         p = probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("_pvec"),
-            norm_col(vec_col).alias("_pn"),
+            F.col("vec_id").alias("probe_id"),
+            F.col("embedding").alias("_pvec"),
+            norm_col("embedding").alias("_pn"),
         )
         c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cvec"),
-            norm_col(vec_col).alias("_cn"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("_cvec"),
+            norm_col("embedding").alias("_cn"),
         )
         sim = cosine_from_norms("_pvec", "_cvec", "_pn", "_cn")
         cand = (
@@ -147,8 +144,6 @@ def _cosine_topk_broadcast_numpy(
     corpus: DataFrame,
     probes: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Candidate generator for :func:`cosine_topk`'s broadcast regime:
     (probe_id, neighbor_id, cosine) rows guaranteed to contain every
@@ -170,14 +165,14 @@ def _cosine_topk_broadcast_numpy(
     the slice x chunk score matrix (~8k x 1k doubles = 64 MB)."""
     pid_t = dict(
         (f.name, f.dataType.simpleString()) for f in probes.schema.fields
-    )[id_col]
+    )["vec_id"]
     nid_t = dict(
         (f.name, f.dataType.simpleString()) for f in corpus.schema.fields
-    )[id_col]
-    ppdf = probes.select(id_col, vec_col).toPandas()
-    pids = ppdf[id_col].to_numpy()
+    )["vec_id"]
+    ppdf = probes.select("vec_id", "embedding").toPandas()
+    pids = ppdf["vec_id"].to_numpy()
     pv = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in ppdf[vec_col]]
+        [np.asarray(v, dtype=np.float64) for v in ppdf["embedding"]]
     ) if len(ppdf) else np.zeros((0, 1))
     n_probe, dim = pv.shape
     # probe norms: same sequential-over-dims order as the SQL fold
@@ -197,9 +192,9 @@ def _cosine_topk_broadcast_numpy(
         for pdf in batches:
             if pdf.empty:
                 continue
-            nids = pdf[id_col].to_numpy()
+            nids = pdf["vec_id"].to_numpy()
             xv = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             for r0 in range(0, len(nids), ROWS):
                 xs = xv[r0 : r0 + ROWS]
@@ -249,7 +244,7 @@ def _cosine_topk_broadcast_numpy(
                         }
                     )
 
-    return corpus.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
+    return corpus.select("vec_id", "embedding").mapInPandas(score, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -269,14 +264,15 @@ _LSH_BANDS = 6
 _LSH_BITS = 4
 
 
-def _planes(dim: int, seed: int = 77) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def _planes(dim: int) -> np.ndarray:
+    rng = np.random.default_rng(77)
     return rng.standard_normal((_LSH_BANDS * _LSH_BITS, dim))
 
 
-def band_key_exprs(vec_col: str, dialect: str, dim: int) -> list[str]:
-    """Per-band bucket-key SQL expressions (band index tagged in the
-    high bits so different bands never collide in the join key).
+def band_key_exprs(dialect: str, dim: int) -> list[str]:
+    """Per-band bucket-key SQL expressions over ``embedding`` (band
+    index tagged in the high bits so different bands never collide in
+    the join key).
 
     The hyperplanes are fixed seeded literals baked into the SQL text
     (repr round-trips doubles exactly; both engines' decimal parsers
@@ -297,14 +293,14 @@ def band_key_exprs(vec_col: str, dialect: str, dim: int) -> list[str]:
             lits = ", ".join(dlit(v) for v in planes[band * _LSH_BITS + bit])
             if dialect == "spark":
                 dot = (
-                    f"aggregate(zip_with({vec_col}, array({lits}), "
+                    f"aggregate(zip_with(embedding, array({lits}), "
                     f"(x, y) -> CAST(x AS DOUBLE) * y), "
                     f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
                 )
             else:
                 dot = (
                     f"list_reduce(list_transform(list_zip("
-                    f"CAST({vec_col} AS DOUBLE[]), [{lits}]), "
+                    f"CAST(embedding AS DOUBLE[]), [{lits}]), "
                     f"s -> s[1] * s[2]), (acc, v) -> acc + v)"
                 )
             terms.append(f"(CASE WHEN {dot} > 0e0 THEN {1 << bit} ELSE 0 END)")
@@ -312,9 +308,9 @@ def band_key_exprs(vec_col: str, dialect: str, dim: int) -> list[str]:
     return keys
 
 
-def _band_buckets_col(vec_col: str, dim: int) -> F.Column:
+def _band_buckets_col(dim: int) -> F.Column:
     """Spark array<int> column of the per-band bucket keys."""
-    return F.array(*[F.expr(k) for k in band_key_exprs(vec_col, "spark", dim)])
+    return F.array(*[F.expr(k) for k in band_key_exprs("spark", dim)])
 
 
 def cosine_topk_lsh(
@@ -322,8 +318,6 @@ def cosine_topk_lsh(
     probes: DataFrame,
     k: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: banded-LSH candidates, exact re-rank.
     Same output schema as :func:`cosine_topk`; recall measured in tests
@@ -331,16 +325,16 @@ def cosine_topk_lsh(
     :func:`cosine_topk_lsh_oracle` in the driver gate.
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        norm_col(vec_col).alias("_cn"),
-        F.explode(_band_buckets_col(vec_col, dim)).alias("_bkt"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cvec"),
+        norm_col("embedding").alias("_cn"),
+        F.explode(_band_buckets_col(dim)).alias("_bkt"),
     )
     p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("_pvec"),
-        norm_col(vec_col).alias("_pn"),
-        F.explode(_band_buckets_col(vec_col, dim)).alias("_bkt"),
+        F.col("vec_id").alias("probe_id"),
+        F.col("embedding").alias("_pvec"),
+        norm_col("embedding").alias("_pn"),
+        F.explode(_band_buckets_col(dim)).alias("_bkt"),
     )
     sim = cosine_from_norms("_pvec", "_cvec", "_pn", "_cn")
     w = Window.partitionBy("probe_id").orderBy(
@@ -388,8 +382,6 @@ def cosine_topk_ivf_flat(
     k: int,
     n_cells: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k with a *deterministic* coarse quantizer: the
     ``n_cells`` corpus vectors with the smallest ids seed the cells
@@ -408,12 +400,12 @@ def cosine_topk_ivf_flat(
     cell, so probing reads only nprobe/n_cells of the data.
     """
     cent = (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(n_cells)
         .select(
-            F.col(id_col).alias("_cent_id"),
-            F.col(vec_col).alias("_cvec0"),
-            norm_col(vec_col).alias("_cn0"),
+            F.col("vec_id").alias("_cent_id"),
+            F.col("embedding").alias("_cvec0"),
+            norm_col("embedding").alias("_cn0"),
         )
     )
     w_assign = Window.partitionBy("_xid").orderBy(
@@ -422,9 +414,9 @@ def cosine_topk_ivf_flat(
 
     def assign(df: DataFrame, n_take: int) -> DataFrame:
         x = df.select(
-            F.col(id_col).alias("_xid"),
-            F.col(vec_col).alias("_xvec"),
-            norm_col(vec_col).alias("_xn"),
+            F.col("vec_id").alias("_xid"),
+            F.col("embedding").alias("_xvec"),
+            norm_col("embedding").alias("_xn"),
         )
         return (
             x.crossJoin(F.broadcast(cent))
@@ -521,9 +513,6 @@ SELECT probe_id, "rank", neighbor_id, cosine FROM r WHERE "rank" <= {k}
 def embedding_near_dups(
     corpus: DataFrame,
     threshold: float = 0.95,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Cosine-near-duplicate pairs via banded-bucket self-join + exact
     verify. Near-identical vectors share at least one band bucket with
@@ -551,13 +540,13 @@ def embedding_near_dups(
     # first (r6, guide §2.5)
     corpus = ensure_min_parallelism(corpus)
     vecs = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        norm_col(vec_col).alias("_nrm"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        norm_col("embedding").alias("_nrm"),
     )
     buckets = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.explode(_band_buckets_col(vec_col, dim)).alias("_bkt"),
+        F.col("vec_id").alias("_id"),
+        F.explode(_band_buckets_col(64)).alias("_bkt"),
     )
     a = buckets.alias("a")
     b = buckets.alias("b")
@@ -600,7 +589,7 @@ def embedding_near_dups_oracle(
 ) -> str:
     """DuckDB twin of :func:`embedding_near_dups`: identical literal
     hyperplanes, identical fold-order sign bits, identical cosine."""
-    keys = ", ".join(band_key_exprs("embedding", "duckdb", dim))
+    keys = ", ".join(band_key_exprs("duckdb", dim))
     return f"""
 WITH corpus AS ({corpus_sql}),
 b AS (
@@ -626,7 +615,7 @@ def cosine_topk_lsh_oracle(
 ) -> str:
     """DuckDB twin of :func:`cosine_topk_lsh` (bucketing, candidate
     join, exact re-rank, deterministic tie-break)."""
-    keys = ", ".join(band_key_exprs("embedding", "duckdb", dim))
+    keys = ", ".join(band_key_exprs("duckdb", dim))
     return f"""
 WITH c AS ({corpus_sql}),
 p AS ({probes_sql}),

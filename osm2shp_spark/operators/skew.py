@@ -27,24 +27,23 @@ from pyspark.sql.window import Window
 from osm2shp_spark.functions.udfs import hex_cell_udf
 from osm2shp_spark.operators.classify import classify_ways, staged_nodes
 
+#: refs per salted chunk, read at call time; in-chunk positions ride
+#: the shuffles as smallint, so it must stay <= 32767
 DEFAULT_CHUNK = 1024
 
 
-def assemble_ways_salted(
-    nodes: DataFrame, ways: DataFrame, chunk: int = DEFAULT_CHUNK
-) -> DataFrame:
+def assemble_ways_salted(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """Skew-proof variant of ``assemble.assemble_ways`` — identical
     output (equivalence-tested), bounded reducer keys.
 
     Stage 1 groups on (way_id, pos DIV chunk): no key sees more than
-    ``chunk`` rows regardless of way size. Stage 2 groups the per-way
-    chunk summaries (≤ n_refs/chunk rows per way — 20 for a 20k-ref
-    mega-way at the default chunk), flattens in chunk order.
+    ``chunk`` (:data:`DEFAULT_CHUNK`) rows regardless of way size.
+    Stage 2 groups the per-way chunk summaries (≤ n_refs/chunk rows
+    per way — 20 for a 20k-ref mega-way), flattens in chunk order.
     """
     from osm2shp_spark.rules import pair_kind_sql, pair_layer_sql, way_pair_idx_sql
 
-    if chunk > 32767:
-        raise ValueError("chunk must fit smallint in-chunk positions (<= 32767)")
+    chunk = DEFAULT_CHUNK
     classified = classify_ways(ways)
     # same tinyint (layer, kind) coding as assemble_ways: 1 byte of
     # classification through the exploded join + BOTH groupBy shuffles.
@@ -96,8 +95,6 @@ def assemble_ways_salted(
 
 def adaptive_cells(
     points: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     base_res: int = 8,
     hot_threshold: int = 1000,
     max_extra_levels: int = 2,
@@ -125,7 +122,7 @@ def adaptive_cells(
     cell id (e.g. ``hex_r{base_res}`` from ``with_point_cells``) —
     reusing it skips computing the base level through the cell UDF.
     """
-    lon, lat = F.col(lon_col), F.col(lat_col)
+    lon, lat = F.col("lon"), F.col("lat")
     cells = [
         F.col(cell_col) if cell_col is not None else hex_cell_udf(base_res)(lon, lat)
     ] + [hex_cell_udf(base_res + i)(lon, lat) for i in range(1, max_extra_levels + 1)]

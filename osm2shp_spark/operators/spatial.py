@@ -72,11 +72,9 @@ def tile_expr(col: str, tile_size: float = TILE_SIZE) -> str:
     return f"CAST(floor({col} / {dlit(tile_size)}) AS BIGINT)"
 
 
-def with_tiles(
-    df: DataFrame, lon_col: str = "lon", lat_col: str = "lat", tile_size: float = TILE_SIZE
-) -> DataFrame:
-    return df.withColumn("tile_x", F.expr(tile_expr(lon_col, tile_size))).withColumn(
-        "tile_y", F.expr(tile_expr(lat_col, tile_size))
+def with_tiles(df: DataFrame, tile_size: float = TILE_SIZE) -> DataFrame:
+    return df.withColumn("tile_x", F.expr(tile_expr("lon", tile_size))).withColumn(
+        "tile_y", F.expr(tile_expr("lat", tile_size))
     )
 
 
@@ -273,7 +271,6 @@ def pip_join(
     polygons: DataFrame,
     point_cols: tuple[str, ...],
     poly_cols: tuple[str, ...],
-    tile_size: float = TILE_SIZE,
 ) -> DataFrame:
     """Inner spatial join: rows of ``points`` inside rows of ``polygons``.
 
@@ -289,14 +286,14 @@ def pip_join(
     :func:`functions.geometry.points_in_polygon`. The tiled polygon
     side is broadcast when it fits the byte budget.
     """
-    pts = with_tiles(points, tile_size=tile_size).select(
+    pts = with_tiles(points).select(
         *point_cols,
         F.col("lon").alias("_px"),
         F.col("lat").alias("_py"),
         "tile_x",
         "tile_y",
     )
-    ts = float(tile_size)
+    ts = float(TILE_SIZE)
     polys = (
         _ring_bboxes(polygons)
         .withColumn(
@@ -324,8 +321,6 @@ def pip_join_s2(
     polygons: DataFrame,
     point_cols: tuple[str, ...],
     poly_cols: tuple[str, ...],
-    max_cells_per_poly: int = 64,
-    max_level: int = 14,
 ) -> DataFrame:
     """PIP join prefiltered by S2 covering tokens instead of flat-grid
     tiles — the north rule's 'S2 covering tokens for point-in-polygon
@@ -336,7 +331,7 @@ def pip_join_s2(
     :func:`pip_join` (equivalence- and oracle-tested).
 
     Level selection: the finest level whose WORST bbox covering fits
-    ``max_cells_per_poly`` — one tiny driver pre-pass over bbox spans
+    64 cells (at most level 14) — one tiny driver pre-pass over bbox spans
     (production: a table stat), then the same level search as the way
     cells (:func:`s2.fitting_covering`) on that one bbox. A fleet-wide
     level keeps the join a single-key equi-join; per-row adaptive
@@ -364,7 +359,7 @@ def pip_join_s2(
         x0, y0 = spans["x0"], spans["y0"]
         levels, _, _ = S2.fitting_covering(
             [x0], [y0], [x0 + spans["dx"]], [y0 + spans["dy"]],
-            max_level, max_cells_per_poly, step=1, min_level=1,
+            14, 64, step=1, min_level=1,
         )
         level = int(levels[0])
 
@@ -374,7 +369,7 @@ def pip_join_s2(
         # min_level=level: one batch call, and a polygon over budget
         # raises rather than losing its cover
         _, ids, counts = S2.fitting_covering(
-            *bbox, level, max_cells_per_poly, min_level=level
+            *bbox, level, 64, min_level=level
         )
         return token_lists(ids, counts)
 
@@ -399,13 +394,12 @@ def knn_join(
     points: DataFrame,
     features: DataFrame,
     k: int,
-    point_id: str = "image_id",
-    feature_id: str = "node_id",
     tile_size: float = TILE_SIZE,
 ) -> DataFrame:
-    """Exact k nearest features per point → (point_id, rank, feature_id,
-    dist2). Local equirectangular metric (see COS_REF), ties broken by
-    feature id — fully deterministic. One lazy plan: building it runs
+    """Exact k nearest features (node_id, lon, lat) per point
+    (image_id, lon, lat) → (image_id, rank, node_id, dist2). Local
+    equirectangular metric (see COS_REF), ties broken by feature id —
+    fully deterministic. One lazy plan: building it runs
     no job, and it caches, checkpoints and collects nothing.
 
     Base pass: points equi-join the features of their 3x3 tile
@@ -439,7 +433,7 @@ def knn_join(
         .withColumn("_dx", F.explode(F.array(*[F.lit(i) for i in (-1, 0, 1)])))
         .withColumn("_dy", F.explode(F.array(*[F.lit(i) for i in (-1, 0, 1)])))
         .select(
-            F.col(feature_id).alias("_fid"),
+            F.col("node_id").alias("_fid"),
             F.col("lon").alias("_flon"),
             F.col("lat").alias("_flat"),
             (F.col("tile_x") + F.col("_dx")).alias("tile_x"),
@@ -447,7 +441,7 @@ def knn_join(
         )
     )
     pts = with_tiles(points, tile_size=tile_size).select(
-        F.col(point_id).alias("_pid"),
+        F.col("image_id").alias("_pid"),
         F.col("lon").alias("_plon"),
         F.col("lat").alias("_plat"),
         "tile_x",
@@ -500,12 +494,12 @@ def knn_join(
         "_pid", "_plon", "_plat", "tile_x", "tile_y"
     )
     top = solved.select("_pid", "_top").unionByName(
-        _knn_stragglers(stragglers, features, k, feature_id, tile_size)
+        _knn_stragglers(stragglers, features, k, tile_size)
     )
     return top.select("_pid", F.posexplode("_top").alias("_i", "_h")).select(
-        F.col("_pid").alias(point_id),
+        F.col("_pid").alias("image_id"),
         (F.col("_i") + 1).alias("rank"),
-        F.col("_h._fid").alias(feature_id),
+        F.col("_h._fid").alias("node_id"),
         F.col("_h.dist2").alias("dist2"),
     )
 
@@ -535,7 +529,6 @@ def _knn_stragglers(
     stragglers: DataFrame,
     features: DataFrame,
     k: int,
-    feature_id: str,
     tile_size: float,
 ) -> DataFrame:
     """Exact top-k (``_pid``, ``_top``) of the base pass's stragglers
@@ -585,7 +578,7 @@ def _knn_stragglers(
         return F.expr(f"shiftright({tile}, {level})" + (f" + {off}" if off else ""))
 
     feats = features.select(
-        F.col(feature_id).alias("_fid"),
+        F.col("node_id").alias("_fid"),
         F.col("lon").alias("_flon"),
         F.col("lat").alias("_flat"),
         F.expr(tile_expr("lon", ts)).alias("tile_x"),
@@ -664,12 +657,10 @@ def knn_join_auto(
     points: DataFrame,
     features: DataFrame,
     k: int,
-    point_id: str = "image_id",
-    feature_id: str = "node_id",
     tile_size: float = TILE_SIZE,
 ) -> DataFrame:
     """Strategy selector for exact kNN: the zero-shuffle broadcast
-    path when ``(feature_id, lon, lat)`` fits the broadcast budget
+    path when ``(node_id, lon, lat)`` fits the broadcast budget
     (:mod:`._budget`, one aggregate; named-place dimension tables stay
     small even at planet scale), else the shuffle :func:`knn_join`
     (tile equi-join + provable-radius exactness + AQE skew splitting)
@@ -690,14 +681,14 @@ def knn_join_auto(
     reproduces the (dist2, id) lexicographic order row-wise in one
     C-level call.
     """
-    side = features.select(feature_id, "lon", "lat")
+    side = features.select("node_id", "lon", "lat")
     if not _budget.fits_broadcast(side):
-        return knn_join(points, features, k, point_id, feature_id, tile_size)
+        return knn_join(points, features, k, tile_size)
     feat_pdf = side.toPandas()
     # global feature order by id: with columns pre-sorted by id, a
     # stable sort on dist2 == lexsort((id, dist2))
-    g_order = np.argsort(feat_pdf[feature_id].to_numpy(), kind="stable")
-    fid = feat_pdf[feature_id].to_numpy()[g_order]
+    g_order = np.argsort(feat_pdf["node_id"].to_numpy(), kind="stable")
+    fid = feat_pdf["node_id"].to_numpy()[g_order]
     flon = feat_pdf["lon"].to_numpy(np.float64)[g_order]
     flat = feat_pdf["lat"].to_numpy(np.float64)[g_order]
     tx = np.floor(flon / tile_size).astype(np.int64)
@@ -720,8 +711,8 @@ def knn_join_auto(
     ts = float(tile_size)
 
     out_schema = (
-        f"{point_id} {dict((f.name, f.dataType.simpleString()) for f in points.schema.fields)[point_id]}, "
-        f"rank INT, {feature_id} {dict((f.name, f.dataType.simpleString()) for f in features.schema.fields)[feature_id]}, "
+        f"image_id {points.schema['image_id'].dataType.simpleString()}, "
+        f"rank INT, node_id {features.schema['node_id'].dataType.simpleString()}, "
         "dist2 DOUBLE"
     )
 
@@ -743,9 +734,9 @@ def knn_join_auto(
             rows_out.append(
                 pd.DataFrame(
                     {
-                        point_id: np.repeat(pids_sel, kk),
+                        "image_id": np.repeat(pids_sel, kk),
                         "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), m),
-                        feature_id: fid_[top_i.ravel()],
+                        "node_id": fid_[top_i.ravel()],
                         "dist2": top_d.ravel(),
                     }
                 )
@@ -754,7 +745,7 @@ def knn_join_auto(
         for pdf in batches:
             if pdf.empty:
                 continue
-            pids = pdf[point_id].to_numpy()
+            pids = pdf["image_id"].to_numpy()
             plons = pdf["lon"].to_numpy(np.float64)
             plats = pdf["lat"].to_numpy(np.float64)
             ptx = np.floor(plons / ts).astype(np.int64)
@@ -812,7 +803,7 @@ def knn_join_auto(
     # scan would run it in one task (r6, guide §2.5); identity when the
     # scan already splits wide enough
     return ensure_min_parallelism(
-        points.select(point_id, "lon", "lat")
+        points.select("image_id", "lon", "lat")
     ).mapInPandas(run, schema=out_schema)
 
 
@@ -820,23 +811,18 @@ def knn_join_auto(
 knn_join_broadcast = knn_join_auto
 
 
-def auto_tile_size(
-    features: DataFrame,
-    base_tile_size: float = TILE_SIZE,
-    hot_threshold: int = 50_000,
-    max_halvings: int = 4,
-) -> float:
+def auto_tile_size(features: DataFrame, hot_threshold: int = 50_000) -> float:
     """Histogram-driven tile-size choice for the candidate prefilter —
     the adaptive-cell-splitting idea applied to the flat join grid: if
     the densest tile exceeds ``hot_threshold`` features, halve the
     tile size (×4 candidate reduction in the hot spot) and re-check,
-    up to ``max_halvings``. Each probe is ONE partial-aggregated
-    count on the feature table (production reads it from cell-count
+    at most 4 times, starting from ``TILE_SIZE``. Each probe is ONE
+    partial-aggregated count on the feature table (production reads it from cell-count
     table stats). Smaller tiles only shrink candidate sets — the kNN
     provable-radius test adapts via rho2, so exactness never depends
     on the choice."""
-    ts = float(base_tile_size)
-    for _ in range(max_halvings):
+    ts = float(TILE_SIZE)
+    for _ in range(4):
         hot = (
             with_tiles(features, tile_size=ts)
             .groupBy("tile_x", "tile_y")
@@ -854,28 +840,21 @@ def knn_join_adaptive(
     points: DataFrame,
     features: DataFrame,
     k: int,
-    point_id: str = "image_id",
-    feature_id: str = "node_id",
-    base_tile_size: float = TILE_SIZE,
     hot_threshold: int = 50_000,
 ) -> DataFrame:
     """:func:`knn_join_auto` with the tile size chosen by
     :func:`auto_tile_size` from the feature density histogram (dense
     urban cells → finer prefilter grid). Bit-identical results at any
     tile size; only the candidate economics change."""
-    ts = auto_tile_size(features, base_tile_size, hot_threshold)
-    return knn_join_auto(points, features, k, point_id, feature_id, ts)
+    ts = auto_tile_size(features, hot_threshold)
+    return knn_join_auto(points, features, k, ts)
 
 
 # ---------------------------------------------------------------------------
 # N5: raster-tile ↔ vector-layer join
 # ---------------------------------------------------------------------------
 
-def tile_vector_stats(
-    points: DataFrame,
-    features: DataFrame,
-    tile_size: float = TILE_SIZE,
-) -> DataFrame:
+def tile_vector_stats(points: DataFrame, features: DataFrame) -> DataFrame:
     """Per-tile rollup joining image points with vector features:
     (tile_x, tile_y, n_images, n_features). Tiles with no features or
     no images keep 0 on the missing side (full outer semantics).
@@ -883,12 +862,12 @@ def tile_vector_stats(
     tile key — the cheapest possible plan at 100 TB.
     """
     pt = (
-        with_tiles(points, tile_size=tile_size)
+        with_tiles(points)
         .groupBy("tile_x", "tile_y")
         .agg(F.count(F.lit(1)).alias("n_images"))
     )
     ft = (
-        with_tiles(features, tile_size=tile_size)
+        with_tiles(features)
         .groupBy("tile_x", "tile_y")
         .agg(F.count(F.lit(1)).alias("n_features"))
     )

@@ -191,12 +191,10 @@ FROM {quality_subquery_duck('docs')} _q
 """
 
 
-def winnow_fingerprints_portable(
-    docs: DataFrame, kgram: int = 5, window: int = 4
-) -> DataFrame:
+def winnow_fingerprints_portable(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (the classic local-minima scheme
-    from the public MOSS/winnowing paper): md5 hashes of the k-grams of
-    the normalized character stream, keep each window's minimum
+    from the public MOSS/winnowing paper): md5 hashes of the 5-grams of
+    the normalized character stream, keep each 4-wide window's minimum
     (rightmost-min rule) → a compact, position-robust distinct
     fingerprint set. Output: (doc_id, n_fingerprints, min_fp, fp_xor)
     — the set summary columns downstream dedup joins key on. Every
@@ -204,7 +202,7 @@ def winnow_fingerprints_portable(
     (:func:`winnow_fingerprints_oracle`), so the driver gate value-
     checks the whole pipeline.
     """
-    k, w = kgram, window
+    k, w = 5, 4  # k-gram length, window width
     from osm2shp_spark.operators.dedup import _md5_bigint
 
     h = _md5_bigint("substring(_s, i, %d)" % k, "spark")
@@ -253,11 +251,9 @@ def winnow_fingerprints_portable(
     )
 
 
-def winnow_fingerprints_oracle(
-    docs_sql: str, kgram: int = 5, window: int = 4
-) -> str:
+def winnow_fingerprints_oracle(docs_sql: str) -> str:
     """DuckDB twin of :func:`winnow_fingerprints_portable`."""
-    k, w = kgram, window
+    k, w = 5, 4  # k-gram length, window width
     from osm2shp_spark.operators.dedup import _md5_bigint
 
     h = _md5_bigint(f"substr(_s, i, {k})", "duckdb")

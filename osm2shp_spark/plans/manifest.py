@@ -105,7 +105,6 @@ def run_stage_resumable(
     transform,
     out_dir: str,
     manifest_dir: str,
-    snapshot_id: str | None = None,
 ) -> DataFrame:
     """Process only partitions not yet recorded; append data + lineage.
 
@@ -140,7 +139,7 @@ def run_stage_resumable(
         )
         if not orphan_keys.isEmpty():
             orphans = on_disk.join(F.broadcast(orphan_keys), part_col, "left_semi")
-            m.append(partition_lineage(orphans, stage, part_col, snapshot_id))
+            m.append(partition_lineage(orphans, stage, part_col))
     todo = m.pending(inp, stage, part_col)
     if todo.isEmpty():
         return transform(todo)
@@ -162,5 +161,5 @@ def run_stage_resumable(
         F.col(part_col).isin(new_keys)
     )
     if new_keys:
-        m.append(partition_lineage(written, stage, part_col, snapshot_id))
+        m.append(partition_lineage(written, stage, part_col))
     return written

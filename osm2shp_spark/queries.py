@@ -1625,30 +1625,14 @@ FROM events GROUP BY 1, 2
 
 
 def q_events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1h windows (batch twin of the streaming operator).
-    Sums in DECIMAL so cross-engine float addition order can't flip
-    low bits. Gated via ``events_window_agg`` (batch+stream row)."""
+    """Tumbling 1h windows: the streaming operator run as a batch
+    query (Spark drops the watermark from a batch plan). Sums in
+    DECIMAL so cross-engine float addition order can't flip low bits.
+    Gated via ``events_window_agg`` (batch+stream row)."""
+    from osm2shp_spark.streaming.windows import windowed_agg_stream
+
     register_driver_tables(spark, sf_dir)
-    return (
-        spark.table("events")
-        .groupBy(F.window("ts", "60 minutes").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (
-                F.round(
-                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-                    * F.lit(1e6)
-                )
-                / F.lit(1e6)
-            ).alias("total_value"),
-        )
-        .select(
-            F.unix_timestamp("win.start").alias("window_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
+    return windowed_agg_stream(spark.table("events"))
 
 
 #: closed sessions only. Two distinct close paths, replicated exactly:

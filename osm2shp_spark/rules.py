@@ -154,13 +154,12 @@ WAY_PAIRS: tuple[tuple[str, str], ...] = tuple(
 )
 
 
-def way_pair_idx_sql(
-    layer_expr: str = "layer", kind_expr: str = "kind"
-) -> str:
+def way_pair_idx_sql() -> str:
     """TINYINT index into :data:`WAY_PAIRS` for an already-classified
-    way (layer is non-null by construction after routing)."""
+    way's ``layer`` and ``kind`` (layer is non-null by construction
+    after routing)."""
     whens = [
-        f"WHEN {layer_expr} = {_sq(lay)} AND {kind_expr} = {_sq(kd)} THEN {i}"
+        f"WHEN layer = {_sq(lay)} AND kind = {_sq(kd)} THEN {i}"
         for i, (lay, kd) in enumerate(WAY_PAIRS)
     ]
     return "CAST(CASE " + " ".join(whens) + " END AS TINYINT)"

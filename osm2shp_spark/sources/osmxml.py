@@ -11,8 +11,8 @@ engine's table shape (SURVEY §1.1) —
 
 — written as batched parquet row groups with bounded memory (elements
 are ``clear()``-ed as soon as they close; batches flush every
-``batch_rows`` rows, so peak memory is one batch regardless of file
-size).
+``DEFAULT_BATCH_ROWS`` rows, so peak memory is one batch regardless
+of file size).
 
 Scale note (an honestly single-node stage): XML is an inherently
 sequential container — the reference itself parses it single-threaded
@@ -53,6 +53,7 @@ WAY_SCHEMA = pa.schema(
     ]
 )
 
+#: rows per parquet row group, read when a writer opens
 DEFAULT_BATCH_ROWS = 100_000
 
 
@@ -135,10 +136,10 @@ def parse_osm_xml(
 class _BatchWriter:
     """Row-group-batched parquet writer with a fixed schema."""
 
-    def __init__(self, path: str, schema: pa.Schema, batch_rows: int):
+    def __init__(self, path: str, schema: pa.Schema):
         self.path = path
         self.schema = schema
-        self.batch_rows = batch_rows
+        self.batch_rows = DEFAULT_BATCH_ROWS
         self.rows: list[tuple] = []
         self.writer: pq.ParquetWriter | None = None
         self.count = 0
@@ -170,18 +171,14 @@ class _BatchWriter:
         self.writer.close()
 
 
-def convert_osm_to_parquet(
-    osm_path: str,
-    out_dir: str,
-    batch_rows: int = DEFAULT_BATCH_ROWS,
-) -> dict[str, int]:
+def convert_osm_to_parquet(osm_path: str, out_dir: str) -> dict[str, int]:
     """Convert an OSM XML file into ``<out_dir>/nodes.parquet`` +
     ``<out_dir>/ways.parquet`` (the CLI/engine input shape). Returns
-    per-table row counts. Memory is bounded by ``batch_rows``.
+    per-table row counts. Memory is bounded by ``DEFAULT_BATCH_ROWS``.
     """
     os.makedirs(out_dir, exist_ok=True)
-    nodes = _BatchWriter(os.path.join(out_dir, "nodes.parquet"), NODE_SCHEMA, batch_rows)
-    ways = _BatchWriter(os.path.join(out_dir, "ways.parquet"), WAY_SCHEMA, batch_rows)
+    nodes = _BatchWriter(os.path.join(out_dir, "nodes.parquet"), NODE_SCHEMA)
+    ways = _BatchWriter(os.path.join(out_dir, "ways.parquet"), WAY_SCHEMA)
     with open_osm(osm_path) as f:
         for kind, row in parse_osm_xml(f):
             (nodes if kind == "node" else ways).add(row)

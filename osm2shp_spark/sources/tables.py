@@ -82,10 +82,11 @@ def register_driver_tables(spark: SparkSession, sf_dir: str) -> None:
     _CURRENT_SF[sid] = sf_dir
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:
-    """Layer-partitioned Parquet write (the reference's one-file-per-layer
-    sink, osm/shapefile.cc:9-13, as partition directories)."""
-    writer = df.write.mode(mode)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """Layer-partitioned Parquet overwrite (the reference's
+    one-file-per-layer sink, osm/shapefile.cc:9-13, as partition
+    directories)."""
+    writer = df.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)

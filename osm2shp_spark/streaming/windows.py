@@ -7,8 +7,9 @@ that ordering dependency for the batch join, and this module covers
 the *true* streaming surface: windowed aggregation with watermarked
 late-data handling, plus a stateful sessionizer.
 
-Batch/stream parity: each streaming op has a batch twin (same logical
-result on a static table) and the tests assert equality by running the
+Batch/stream parity: the windowed aggregate is one function for both.
+On a static table Spark drops the watermark, so the batch plan is the
+plain window aggregate; the tests assert equality by running the
 stream with ``availableNow`` over the same parquet — the standard
 Spark pattern for exactly-once backfill.
 """
@@ -30,50 +31,26 @@ WINDOW_MINUTES = 60
 WATERMARK = "30 minutes"
 
 
-def _win_agg() -> list:
-    """Shared aggregate list: counts + DECIMAL-accumulated value sums
-    quantized back to exact 1e-6-multiple doubles — float partial-sum
-    order depends on partitioning (and on the engine), DECIMAL addition
-    doesn't, so batch, stream and the DuckDB oracle agree bitwise."""
-    return [
-        F.count(F.lit(1)).alias("n"),
-        (
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-                * F.lit(1e6)
-            )
-            / F.lit(1e6)
-        ).alias("total_value"),
-    ]
-
-
 def windowed_agg_stream(events: DataFrame) -> DataFrame:
     """Tumbling-window counts/sums per event_type with a 30-minute
-    watermark (late rows beyond it are dropped, state is bounded)."""
+    watermark (late rows beyond it are dropped, state is bounded). On
+    a batch frame the watermark is a no-op: the same call is the batch
+    operator.
+
+    Value sums accumulate in DECIMAL and are quantized back to exact
+    1e-6-multiple doubles — float partial-sum order depends on
+    partitioning (and on the engine), DECIMAL addition doesn't, so
+    batch, stream and the DuckDB oracle agree bitwise."""
+    total = F.round(
+        F.sum(F.col("value").cast("decimal(18,6)")).cast("double") * F.lit(1e6)
+    ) / F.lit(1e6)
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy(
             F.window("ts", f"{WINDOW_MINUTES} minutes").alias("win"),
             "event_type",
         )
-        .agg(*_win_agg())
-        .select(
-            F.unix_timestamp("win.start").alias("window_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def windowed_agg_batch(events: DataFrame) -> DataFrame:
-    """Batch twin of :func:`windowed_agg_stream` (no watermark needed —
-    a static table has no late data)."""
-    return (
-        events.groupBy(
-            F.window("ts", f"{WINDOW_MINUTES} minutes").alias("win"), "event_type"
-        )
-        .agg(*_win_agg())
+        .agg(F.count(F.lit(1)).alias("n"), total.alias("total_value"))
         .select(
             F.unix_timestamp("win.start").alias("window_start"),
             "event_type",

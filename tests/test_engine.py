@@ -30,7 +30,6 @@ def test_engine_run_end_to_end(spark, tmp_path, monkeypatch):
         synthetic_ways(spark, SF_SMALL),
         out,
         images=synthetic_images(spark, SF_SMALL).select("image_id", "lon", "lat"),
-        hex_resolutions=(7, 9, 12),
     )
     monkeypatch.undo()
     for key, stage in (
@@ -90,5 +89,5 @@ def test_engine_zero_row_stage_does_not_abort(spark, tmp_path):
             "id BIGINT, refs ARRAY<BIGINT>, tags MAP<STRING,STRING>",
         )
     )
-    res = engine.run(spark, nodes, ways, str(tmp_path / "out"), with_lineage=True)
+    res = engine.run(spark, nodes, ways, str(tmp_path / "out"))
     assert res.counts["exported_nodes"] == 0

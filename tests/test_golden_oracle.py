@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from osm2shp_spark.operators.assemble import assemble_ways, assembly_counters
+from osm2shp_spark.operators import generalize
 from osm2shp_spark.operators.classify import classify_nodes, extract_tags
 from osm2shp_spark.operators.generalize import dedup_geometries, generalize_ways
 from osm2shp_spark.oracle import run_oracle
@@ -134,11 +135,12 @@ def test_counters_match_oracle(spark_frames, fixture_data):
 
 
 def test_generalize_preserves_endpoints_and_drops_nothing_at_zero_eps(
-    spark_frames,
+    spark_frames, monkeypatch
 ):
     ndf, wdf = spark_frames
     assembled = assemble_ways(ndf, wdf)
-    out = generalize_ways(assembled, thresholds={}).toPandas()
+    monkeypatch.setattr(generalize, "LAYER_THRESHOLDS", {})
+    out = generalize_ways(assembled).toPandas()
     base = assembled.toPandas()
     # eps=0 for all layers → only consecutive-dup removal can shrink
     assert len(out) == len(

@@ -14,6 +14,7 @@ from parity import canon_rows
 
 from osm2shp_spark.functions import hexgrid
 from osm2shp_spark.functions.udfs import hex_cell_udf
+from osm2shp_spark.operators import skew
 from osm2shp_spark.operators.assemble import assemble_ways
 from osm2shp_spark.operators.skew import adaptive_cells, assemble_ways_salted
 from osm2shp_spark.plans.manifest import Manifest, partition_lineage, run_stage_resumable
@@ -24,11 +25,12 @@ from osm2shp_spark.sources.synthetic import (
 )
 
 
-def test_salted_assembly_equivalent(spark):
+def test_salted_assembly_equivalent(spark, monkeypatch):
     nodes = synthetic_nodes(spark, SF_SMALL)
     ways = synthetic_ways(spark, SF_SMALL)
     a = assemble_ways(nodes, ways).toPandas()
-    b = assemble_ways_salted(nodes, ways, chunk=3).toPandas()  # tiny chunk → many salts
+    monkeypatch.setattr(skew, "DEFAULT_CHUNK", 3)  # tiny chunk → many salts
+    b = assemble_ways_salted(nodes, ways).toPandas()
     assert canon_rows(a) == canon_rows(b)
 
 

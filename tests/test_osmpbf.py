@@ -121,12 +121,8 @@ def test_cli_end_to_end_from_pbf(pbf_file, tmp_path):
     res = json.loads(proc.stdout.strip().splitlines()[-1])
     assert res["counts"]["exported_ways"] > 0
     assert res["counts"]["exported_nodes"] > 0
-    [ingested] = [
-        json.loads(line)["ingested"]
-        for line in proc.stderr.splitlines()
-        if line.startswith('{"ingested"')
-    ]
-    assert ingested == {"nodes": len(node_rows), "ways": len(way_rows)}
+    assert res["counts"]["ingested_nodes"] == len(node_rows)
+    assert res["counts"]["ingested_ways"] == len(way_rows)
 
 
 # ---------------------------------------------------------------------------

@@ -24,6 +24,7 @@ from parity import canon_rows
 
 from osm2shp_spark.operators.assemble import assemble_ways
 from osm2shp_spark.operators.classify import extract_tags
+from osm2shp_spark.sources import osmxml
 from osm2shp_spark.sources.osmxml import (
     convert_osm_to_parquet,
     parse_osm_xml,
@@ -104,7 +105,7 @@ def test_parse_round_trips_rows(osm_file):
 
 
 @pytest.mark.parametrize("codec", ["plain", "gz", "bz2"])
-def test_compressed_variants(osm_file, tmp_path, codec):
+def test_compressed_variants(osm_file, tmp_path, codec, monkeypatch):
     path, node_rows, _ = osm_file
     data = open(path, "rb").read()
     if codec == "gz":
@@ -116,17 +117,19 @@ def test_compressed_variants(osm_file, tmp_path, codec):
         with bz2.open(path, "wb") as f:
             f.write(data)
     out = str(tmp_path / f"tables_{codec}")
-    counts = convert_osm_to_parquet(path, out, batch_rows=100)
+    monkeypatch.setattr(osmxml, "DEFAULT_BATCH_ROWS", 100)  # several row groups
+    counts = convert_osm_to_parquet(path, out)
     assert counts["nodes"] == len(node_rows)
     assert os.path.exists(os.path.join(out, "ways.parquet"))
 
 
-def test_ingested_tables_assemble_identically(spark, osm_file, tmp_path):
+def test_ingested_tables_assemble_identically(spark, osm_file, tmp_path, monkeypatch):
     """The flagship join over ingested-from-XML tables must equal the
     join over the original tables, row for row."""
     path, _, _ = osm_file
     out = str(tmp_path / "tables")
-    convert_osm_to_parquet(path, out, batch_rows=1000)
+    monkeypatch.setattr(osmxml, "DEFAULT_BATCH_ROWS", 1000)
+    convert_osm_to_parquet(path, out)
     nodes_x = extract_tags(spark.read.parquet(os.path.join(out, "nodes.parquet")))
     ways_x = extract_tags(spark.read.parquet(os.path.join(out, "ways.parquet")))
     got = assemble_ways(nodes_x, ways_x).toPandas()
@@ -139,7 +142,7 @@ def test_ingested_tables_assemble_identically(spark, osm_file, tmp_path):
 def test_cli_end_to_end_from_osm_file(osm_file, tmp_path):
     """`python -m osm2shp_spark.cli fixture.osm out/` — the reference's
     exact invocation shape — runs ingestion + the full pipeline."""
-    path, _, _ = osm_file
+    path, node_rows, way_rows = osm_file
     out = str(tmp_path / "run")
     proc = subprocess.run(
         [sys.executable, "-m", "osm2shp_spark.cli", path, out,
@@ -151,4 +154,6 @@ def test_cli_end_to_end_from_osm_file(osm_file, tmp_path):
     res = json.loads(proc.stdout.strip().splitlines()[-1])
     assert res["counts"]["exported_ways"] > 0
     assert res["counts"]["exported_nodes"] > 0
+    assert res["counts"]["ingested_nodes"] == len(node_rows)
+    assert res["counts"]["ingested_ways"] == len(way_rows)
     assert os.path.exists(os.path.join(out, "crs.txt"))

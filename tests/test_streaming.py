@@ -9,13 +9,13 @@ from osm2shp_spark import queries as Q
 from osm2shp_spark.sources.tables import register_driver_tables
 from osm2shp_spark.streaming.windows import (
     run_stream_over_parquet,
-    windowed_agg_batch,
+    windowed_agg_stream,
 )
 
 
 def test_stream_equals_batch(spark):
     register_driver_tables(spark, SF_SMALL)
-    batch = windowed_agg_batch(spark.table("events")).toPandas()
+    batch = windowed_agg_stream(spark.table("events")).toPandas()
     streamed = run_stream_over_parquet(
         spark, f"{SF_SMALL}/events.parquet", name="t_stream_out"
     ).toPandas()
